@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.Dataset
 
-/** Creation + release tooling for eager `Dataset.localCheckpoint` storage.
+/** Creation + release tooling for `Dataset.localCheckpoint` storage, eager
+  * ([[checkpoint]]) and lazy ([[checkpointLazy]]).
   *
   * `localCheckpoint` persists an internal RDD that `Dataset.unpersist`
   * does not see (unpersist consults the plan cache only), so iterative
@@ -10,12 +11,12 @@ import org.apache.spark.sql.Dataset
   * every checkpoint in executor storage until session end.
   *
   * Ownership contract: [[release]] frees ONLY checkpoints created through
-  * [[checkpoint]]. A plan can legitimately embed OTHER persisted
-  * `LogicalRDD` leaves (a caller's cached `createDataFrame` source, a
-  * checkpoint the caller manages itself) — unpersisting every reachable
-  * leaf would silently sever storage this library does not own, so
-  * graft-created checkpoint RDD ids are tracked and everything else is
-  * left untouched.
+  * [[checkpoint]] or [[checkpointLazy]]. A plan can legitimately embed
+  * OTHER persisted `LogicalRDD` leaves (a caller's cached
+  * `createDataFrame` source, a checkpoint the caller manages itself) —
+  * unpersisting every reachable leaf would silently sever storage this
+  * library does not own, so graft-created checkpoint RDD ids are tracked
+  * and everything else is left untouched.
   */
 object Checkpoints {
 
@@ -136,9 +137,11 @@ object Checkpoints {
     ck
   }
 
-  /** Frees the executor storage behind every graft-owned eager
-    * checkpoint reachable from `df`'s plan (its `LogicalRDD` leaves);
-    * non-owned persisted leaves are deliberately not touched. Call once
+  /** Frees the executor storage behind every graft-owned checkpoint,
+    * eager or lazy, reachable from `df`'s plan (its `LogicalRDD` leaves),
+    * together with the snapshots registered through [[releaseWith]]
+    * against any leaf it frees (transitively); non-owned persisted
+    * leaves and pinned ones are deliberately not touched. Call once
     * the data has been consumed — any later action on a plan referencing
     * the checkpoint would fail or recompute from nothing. Idempotent:
     * releasing an already-released frame is a no-op.

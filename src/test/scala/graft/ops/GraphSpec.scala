@@ -29,16 +29,20 @@ class GraphSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("q144 frees its intermediate sweep checkpoints, keeping only the last") {
+    def persistedIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistedIds
     val df = graft.SparkEntry.queries("q144_copurchase_pagerank")(spark, d)
     df.collect()
-    // reachable graft-owned checkpoints: the edge freeze + the final
-    // sweep's ranks freeze; the two earlier sweeps must already be gone
-    val persisted = spark.sparkContext.getPersistentRDDs.size
+    // sweep freezes are lazy, so none can be freed mid-loop: the earlier
+    // sweeps are registered against the final frame (releaseWith) and
+    // held to query end. High-water = 1 edge freeze + Iters (3) sweep
+    // freezes = 4 graft-owned snapshots, and release must free them all
+    val created = persistedIds -- before
+    assert(created.size == 4,
+      s"expected 4 live q144 checkpoints (edges + 3 sweeps), got $created")
     graft.Checkpoints.release(df)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(persisted - after == 2,
-      s"expected exactly 2 live graph checkpoints (edges + last sweep), " +
-        s"released ${persisted - after}")
+    val leaked = created intersect persistedIds
+    assert(leaked.isEmpty, s"$leaked still persisted after release")
   }
 
   test("q145 lift is symmetric and support-consistent with the edge relation") {
