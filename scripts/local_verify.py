@@ -10,6 +10,7 @@ booleans plus a status string) — used for the committed sf1 gate.
 """
 import json
 import os
+import re
 import sys
 
 import duckdb
@@ -35,6 +36,23 @@ def dtype_family(dt) -> str:
     return "obj"
 
 
+# DuckDB's SET takes no bound parameters, so a value is checked against a
+# strict per-pragma pattern and then interpolated; no pattern admits a quote.
+PRAGMA_VALUES = {
+    "memory_limit": (r"[0-9]+(\.[0-9]+)? ?([KMGT]i?B|B)", "a size such as 8GB or 512MiB", True),
+    "temp_directory": (r"[A-Za-z0-9_./+-]+", "a path of letters, digits and _ . / + -", True),
+    "threads": (r"[1-9][0-9]{0,3}", "a positive integer", False),
+}
+
+
+def pragma_literal(pragma: str, env: str, val: str) -> str:
+    """The SQL literal for `SET pragma = ...`, or ValueError naming `env`."""
+    pattern, what, quoted = PRAGMA_VALUES[pragma]
+    if not re.fullmatch(pattern, val, flags=re.IGNORECASE):
+        raise ValueError(f"{env}={val!r} is not {what}")
+    return f"'{val}'" if quoted else val
+
+
 def main(sf_dir: str, out_dir: str, only=None, json_out=None) -> int:
     con = duckdb.connect()
     # Resource pragmas for LARGE fixture dirs (the sf1 gate): DuckDB's
@@ -48,9 +66,7 @@ def main(sf_dir: str, out_dir: str, only=None, json_out=None) -> int:
                         ("threads", "DUCKDB_THREADS")):
         val = os.environ.get(env)
         if val:
-            # parameter binding, not interpolation: a value containing a
-            # quote must not break the statement (round-16 ADVICE)
-            con.execute(f"SET {pragma} = ?", [val])
+            con.execute(f"SET {pragma} = {pragma_literal(pragma, env, val)}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

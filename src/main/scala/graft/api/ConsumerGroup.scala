@@ -46,7 +46,10 @@ final case class CommitConfig(auto: Boolean = true, intervalMs: Long = 5000L)
   * record counts, per-stream distinct shards that yielded ≥ 1 record,
   * and the micro-batch count. Streams that were fully caught-up report
   * 0 — the caller can tell an empty backlog from a failed drain (which
-  * throws / lands in [[ConsumerGroup.errors]] instead).
+  * throws / lands in [[ConsumerGroup.errors]] instead). Records and
+  * shards are computed once per drain from the committed offsets before
+  * and after it, ranked by the log's index — not by reading the batches,
+  * so they do not depend on what the callback does with its frame.
   */
 final case class DrainProgress(
     records: Map[String, Long],
@@ -328,10 +331,18 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     * that yielded data, micro-batch count. The reference's only
     * observability is the lossy error channel (`kinesumer.go:833-844`);
     * a backfill operator needs the positive signal too ("drained 0
-    * records" and "drain failed" are different states). Counting runs
-    * one keyed aggregate per micro-batch over the batch frame before
-    * the callback — bounded work, since a drain is by definition a
-    * bounded read.
+    * records" and "drain failed" are different states). The batches of
+    * one drain cover one contiguous sequence range per shard, so the
+    * counts come from the offset WAL's committed positions before and
+    * after the drain, each range counted by the log's index
+    * ([[graft.source.ShardedStreamLog.countRange]]): no Spark job and no
+    * read of its own. Progress is a success-path return value; a
+    * throwing callback fails the query and the exception propagates.
+    *
+    * The callback frame is handed over as [[start]] hands it, not
+    * persisted: every action on it re-reads the batch's log slice, so a
+    * callback that acts on `df` more than once persists it itself (the
+    * standard `foreachBatch` contract).
     */
   def drain(streams: Seq[String], timeoutMs: Long = 600000L)(
       onBatch: BatchFn): DrainProgress = synchronized {
@@ -343,10 +354,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     // fresh checkpoint at the live heads, drain zero records, and
     // permanently mark the backlog consumed — the opposite of this
     // method's contract). Once a checkpoint exists it wins, as always.
-    val recordCounts =
-      new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val shardSets =
-      new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
+    val before = walCommittedPositions()
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = consumeFrom(streams, "trim_horizon").writeStream
       .queryName(s"${cfg.app}-drain")
@@ -354,25 +362,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         batches.incrementAndGet()
-        // persist the batch frame: the count action and the caller's own
-        // actions otherwise EACH re-read the batch's log segments from
-        // the source (every foreachBatch action re-executes the batch
-        // plan) — on a multi-TB backfill that doubles the read I/O.
-        // Progress is a SUCCESS-path return value: if the callback
-        // throws, the query fails and drain() propagates the exception
-        // (the partial tallies are not surfaced — resumption accounting
-        // belongs to the checkpoint, which is exact regardless).
-        df.persist()
-        try {
-          df.groupBy(org.apache.spark.sql.functions.col("stream"),
-              org.apache.spark.sql.functions.col("shard_id"))
-            .count().collect().foreach { r =>
-              val (st, sh, n) = (r.getString(0), r.getString(1), r.getLong(2))
-              recordCounts.merge(st, n, (a, b) => a + b)
-              shardSets.merge(st, Set(sh), (a, b) => a ++ b)
-            }
-          onBatch(df, batchId)
-        } finally df.unpersist()
+        onBatch(df, batchId)
       }
       .start()
     // the drain query is deliberately never OWNED: drain() propagates
@@ -389,12 +379,20 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
           s"drain of ${streams.mkString(",")} did not finish in ${timeoutMs} ms")
       }
     } finally if (q.isActive) q.stop()
-    import scala.jdk.CollectionConverters._
+    // each shard's (committed before, committed after] range, counted by
+    // the log's index, shards in parallel like the head probes
+    import scala.collection.parallel.CollectionConverters._
+    val after = walCommittedPositions()
+    val counts = streams.map { st =>
+      val from = before.getOrElse(st, Map.empty[String, Long])
+      st -> after.getOrElse(st, Map.empty[String, Long]).toSeq.par.map {
+        case (sh, until) => graft.source.ShardedStreamLog.countRange(
+          cfg.logRoot, st, sh, from.getOrElse(sh, -1L), until)
+      }.seq.filter(_ > 0)
+    }
     DrainProgress(
-      records = streams.map(st =>
-        st -> recordCounts.getOrDefault(st, 0L)).toMap,
-      shards = streams.map(st =>
-        st -> shardSets.asScala.get(st).map(_.size.toLong).getOrElse(0L)).toMap,
+      records = counts.map { case (st, c) => st -> c.sum }.toMap,
+      shards = counts.map { case (st, c) => st -> c.size.toLong }.toMap,
       batches = batches.get())
   }
 
@@ -487,12 +485,11 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
         .flatMap(p => p.sources.headOption)
         .flatMap(s => Option(s.endOffset))
         .map(graft.source.ShardedStreamOffset.fromJson(_).positions)
-        .orElse {
-          if (cfg.commit.nonEmpty) Some(committedMarks())
-          else walCommittedOffsetJson()
-            .map(graft.source.ShardedStreamOffset.fromJson(_).positions)
+        .getOrElse {
+          if (cfg.commit.nonEmpty) committedMarks()
+          else try walCommittedPositions()
+          catch { case scala.util.control.NonFatal(_) => Map.empty }
         }
-        .getOrElse(Map.empty)
       streams.flatMap { stream =>
         val shards = graft.source.ShardedStreamLog.listShards(cfg.logRoot, stream).keys
         // parallel head-probe (shared with the source's offset planning):
@@ -506,22 +503,23 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       }.toMap
   }
 
-  /** End-offset JSON of the latest batch in the commit log — the durable
-    * committed progress used by [[lag]] before the first trigger of a
-    * (re)started query populates `lastProgress`. Offset-log file layout
-    * (Spark's OffsetSeqLog): version line, metadata line, then one offset
-    * JSON per source ("-" for a source with no offset); this query has
-    * exactly one source.
+  /** End offsets of the latest batch in the commit log, per (stream,
+    * shard); empty before the first commit. This is the durable committed
+    * progress: [[drain]] counts what it moved from it, and [[lag]] reads it
+    * before the first trigger of a (re)started query populates
+    * `lastProgress`. Offset-log file layout (Spark's OffsetSeqLog):
+    * version line, metadata line, then one offset JSON per source ("-"
+    * for a source with no offset); this query has exactly one source.
     */
-  private def walCommittedOffsetJson(): Option[String] =
-    try {
-      // Hadoop FS, not java.io.File: Spark accepts URI-style checkpoint
-      // locations (file:/, hdfs://, s3a://), and a local-path-only read
-      // here would silently miss the WAL and report the whole log as
-      // backlog after every restart
-      val base = new org.apache.hadoop.fs.Path(s"${cfg.checkpointRoot}/${cfg.app}/main")
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val commits = new org.apache.hadoop.fs.Path(base, "commits")
+  private def walCommittedPositions(): Map[String, Map[String, Long]] = {
+    // Hadoop FS, not java.io.File: Spark accepts URI-style checkpoint
+    // locations (file:/, hdfs://, s3a://), and a local-path-only read
+    // here would silently miss the WAL and report the whole log as
+    // backlog after every restart
+    val base = new org.apache.hadoop.fs.Path(s"${cfg.checkpointRoot}/${cfg.app}/main")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val commits = new org.apache.hadoop.fs.Path(base, "commits")
+    val json =
       if (!fs.exists(commits)) None
       else {
         val committedIds = fs.listStatus(commits).toSeq
@@ -539,7 +537,8 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
           }
         }
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    json.map(graft.source.ShardedStreamOffset.fromJson(_).positions).getOrElse(Map.empty)
+  }
 
   /** `Close` (`kinesumer.go:846-869`): stop the query; offsets are already
     * durable, so shutdown needs no drain/sleep dance.

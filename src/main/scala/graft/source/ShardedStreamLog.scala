@@ -207,23 +207,27 @@ object ShardedStreamLog {
   // -------------------------------------------------------------------
   // Incremental index. The log is append-only with per-shard monotone
   // sequence numbers, so each JVM (driver or executor) keeps, per file, the
-  // byte position scanned so far, the max sequence seen, and sparse
-  // (sequence → byte offset) checkpoints every [[IndexEveryBytes]]. A
-  // trigger's `maxSequence` then costs O(new bytes) instead of O(history),
-  // and `read` seeks to the nearest checkpoint ≤ afterSeq and stops at the
-  // first record > untilSeq — never rescanning or buffering full history.
+  // byte position scanned so far, the max sequence seen, the record count,
+  // and sparse (sequence → byte offset, ordinal) checkpoints every
+  // [[IndexEveryBytes]]. A trigger's `maxSequence` then costs O(new bytes)
+  // instead of O(history); `read` seeks to the nearest checkpoint ≤ afterSeq
+  // and stops at the first record > untilSeq, and `countRange` ranks a
+  // bound from the same checkpoint — never rescanning full history.
 
   private val IndexEveryBytes: Long = 64L * 1024
 
   private final class ShardIndex {
     var scannedBytes: Long = 0L
     var maxSeq: Long = -1L
+    // records parsed so far — the ordinal of the next record
+    var records: Long = 0L
     var lastCkptBytes: Long = -IndexEveryBytes
     // first bytes of the file when first scanned — identity signal to
     // catch a file that was deleted and recreated at equal-or-larger size
     // (size alone would keep the stale index and yield wrong reads)
     var identity: Array[Byte] = null
-    // (first sequence of the record starting at byte offset, byte offset)
+    // (sequence of the record starting at byte offset, byte offset, its
+    // ordinal = records before it); the first record always gets one
     val checkpoints = new java.util.ArrayList[Array[Long]]()
     // byte offset + sequence of the LAST record parsed — the identity
     // spot-probe target: matching here means the file agrees with the
@@ -231,7 +235,7 @@ object ShardedStreamLog {
     var lastRecOff: Long = -1L
     var lastRecSeq: Long = -1L
     def reset(): Unit = {
-      scannedBytes = 0L; maxSeq = -1L; lastCkptBytes = -IndexEveryBytes
+      scannedBytes = 0L; maxSeq = -1L; records = 0L; lastCkptBytes = -IndexEveryBytes
       identity = null
       lastRecOff = -1L
       lastRecSeq = -1L
@@ -360,9 +364,10 @@ object ShardedStreamLog {
                   idx.lastRecOff = pos
                   idx.lastRecSeq = seq
                   if (pos - idx.lastCkptBytes >= IndexEveryBytes) {
-                    idx.checkpoints.add(Array(seq, pos))
+                    idx.checkpoints.add(Array(seq, pos, idx.records))
                     idx.lastCkptBytes = pos
                   }
+                  idx.records += 1
                 }
               }
               pos += lineBytes
@@ -450,6 +455,76 @@ object ShardedStreamLog {
     shards.par.map(sh => sh -> seqBeforeTimestamp(root, stream, sh, tsMs)).toMap.seq
   }
 
+  /** The last index checkpoint with sequence ≤ `seq`, or null when `seq`
+    * lies below the shard's first record. Caller holds `idx`'s lock.
+    */
+  private def checkpointAtOrBelow(idx: ShardIndex, seq: Long): Array[Long] = {
+    var ck: Array[Long] = null
+    var i = 0
+    while (i < idx.checkpoints.size && idx.checkpoints.get(i)(0) <= seq) {
+      ck = idx.checkpoints.get(i); i += 1
+    }
+    ck
+  }
+
+  /** Number of records with sequence in (afterSeq, untilSeq] — what
+    * `read(afterSeq, untilSeq).size` returns, without reading payloads.
+    * Sequences ascend but need not be dense, so the count is a difference
+    * of ranks (records ≤ bound), never `untilSeq - afterSeq`. A bound
+    * below the first record or at/above the indexed head costs nothing;
+    * any other bound scans sequence prefixes from the nearest checkpoint
+    * below it, at most one index interval.
+    */
+  def countRange(root: String, stream: String, shard: String,
+      afterSeq: Long, untilSeq: Long): Long = {
+    val f = recordsFile(root, stream, shard)
+    if (untilSeq <= afterSeq || !Files.exists(f)) 0L
+    else {
+      val idx = advance(f)
+      rank(f, idx, untilSeq) - rank(f, idx, afterSeq)
+    }
+  }
+
+  /** Records with sequence ≤ `seq` among those `idx` has indexed. */
+  private def rank(f: Path, idx: ShardIndex, seq: Long): Long = {
+    val (total, head, ck, frontier) = idx.synchronized {
+      (idx.records, idx.maxSeq, checkpointAtOrBelow(idx, seq), idx.scannedBytes)
+    }
+    if (seq >= head) total
+    else if (ck == null) 0L
+    else {
+      val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
+      try {
+        ch.position(ck(1))
+        val in = new java.io.BufferedInputStream(
+          java.nio.channels.Channels.newInputStream(ch), 1 << 16)
+        var pos = ck(1)
+        var n = ck(2)
+        var done = false
+        // per line: parse the leading sequence, skip to '\n'. A record
+        // above `seq` exists before the frontier (seq < head), so the
+        // frontier only guards against a concurrent index reset
+        while (!done && pos < frontier) {
+          var s = 0L
+          var digits = 0
+          var b = in.read()
+          while (b >= '0' && b <= '9') {
+            s = s * 10 + (b - '0'); digits += 1; pos += 1; b = in.read()
+          }
+          val isRecord = b == '\t' && digits > 0
+          while (b != '\n' && b != -1) { pos += 1; b = in.read() }
+          if (b == -1) done = true
+          else {
+            pos += 1
+            if (isRecord) { if (s > seq) done = true else n += 1 }
+          }
+        }
+        bytesScanned.addAndGet(pos - ck(1))
+        n
+      } finally ch.close()
+    }
+  }
+
   /** Read records with sequence in (afterSeq, untilSeq], ordered by seq.
     * Seeks to the last index checkpoint ≤ afterSeq and stops at the first
     * record past untilSeq (sequences are monotone in the file), so a batch
@@ -463,12 +538,8 @@ object ShardedStreamLog {
     else {
       val idx = advance(f)
       val startPos = idx.synchronized {
-        var p = 0L
-        var i = 0
-        while (i < idx.checkpoints.size && idx.checkpoints.get(i)(0) <= afterSeq) {
-          p = idx.checkpoints.get(i)(1); i += 1
-        }
-        p
+        val ck = checkpointAtOrBelow(idx, afterSeq)
+        if (ck == null) 0L else ck(1)
       }
       val out = scala.collection.mutable.ArrayBuffer.empty[LogRecord]
       // snapshot the committed size: a line crossing it is a concurrent

@@ -139,6 +139,50 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
       (100L to 105L), "s2 drains exactly the new tail")
   }
 
+  // ~290-byte records whose sequences step by 1–7
+  private def gapped(rnd: scala.util.Random, from: Long, n: Int): Seq[LogRecord] =
+    Iterator.iterate(from)(_ + 1 + rnd.nextInt(7)).take(n).map(s =>
+      LogRecord(s, s"pk$s", 1700000000000L + s, Array.fill(200)('g'.toByte))).toSeq
+
+  test("a second drain resumes mid-file on a gapped 64 KB+ shard and reports exactly the new tail") {
+    val (root, ck) = newEnv()
+    val rnd = new scala.util.Random(5)
+    val first = gapped(rnd, 3L, 600)
+    ShardedStreamLog.append(root, "events", "shard-0", first)
+    assert(Files.size(java.nio.file.Paths.get(root, "events", "shard-0", "records.tsv")) > 65536L)
+    val seen = new ConcurrentLinkedQueue[Long]()
+    val cg = new ConsumerGroup(spark, ConsumerConfig(app = "bf-gap",
+      logRoot = root, checkpointRoot = ck, scanLimit = 700L))
+    val collect: (org.apache.spark.sql.DataFrame, Long) => Unit = (df, _) =>
+      df.select("sequence_number").collect().foreach(r => seen.add(r.getString(0).toLong))
+    val p1 = cg.drain(Seq("events"))(collect)
+    assert(p1.records == Map("events" -> 600L) && p1.shards == Map("events" -> 1L), s"progress: $p1")
+    assert(p1.batches >= 2L, s"capped drain: $p1")
+    // the resume point (the old head) now lies mid-file, below the new head
+    val tail = gapped(rnd, first.last.sequenceNumber + 2L, 250)
+    ShardedStreamLog.append(root, "events", "shard-0", tail)
+    seen.clear()
+    val p2 = cg.drain(Seq("events"))(collect)
+    assert(seen.asScala.toSeq.sorted == tail.map(_.sequenceNumber), "the second drain reads the tail only")
+    assert(p2.records == Map("events" -> 250L) && p2.shards == Map("events" -> 1L), s"progress: $p2")
+    cg.close()
+  }
+
+  test("drain progress does not depend on the callback reading its frame") {
+    val (root, ck) = newEnv()
+    val rnd = new scala.util.Random(9)
+    ShardedStreamLog.append(root, "s1", "shard-0", gapped(rnd, 0L, 40))
+    ShardedStreamLog.append(root, "s1", "shard-1", gapped(rnd, 50L, 25))
+    ShardedStreamLog.append(root, "s2", "shard-0", (100L to 103L).map(rec))
+    val cg = new ConsumerGroup(spark, ConsumerConfig(app = "bf-ignore",
+      logRoot = root, checkpointRoot = ck, scanLimit = 60L))
+    val p = cg.drain(Seq("s1", "s2"))((_, _) => ())
+    assert(p.records == Map("s1" -> 65L, "s2" -> 4L), s"progress: $p")
+    assert(p.shards == Map("s1" -> 2L, "s2" -> 1L), s"progress: $p")
+    assert(p.batches >= 2L, s"progress: $p")
+    cg.close()
+  }
+
   test("refresh swaps the stream set at runtime (Refresh parity)") {
     val (root, ck) = newEnv()
     ShardedStreamLog.append(root, "s1", "shard-0", (0L to 2L).map(rec))

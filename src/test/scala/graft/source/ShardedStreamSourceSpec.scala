@@ -323,6 +323,61 @@ class ShardedStreamSourceSpec extends AnyFunSuite with SparkTestSession {
       "reads served from a stale index after an offset-shifting recreate")
   }
 
+  test("countRange equals the read size on gapped sequences at every kind of bound") {
+    val root = Files.createTempDirectory("sslog").toString
+    val f = java.nio.file.Paths.get(root, "events", "shard-0", "records.tsv")
+    val rnd = new scala.util.Random(11)
+    // ~290-byte lines whose sequences step by 1–7: never dense
+    def gapped(from: Long, n: Int): Seq[LogRecord] =
+      Iterator.iterate(from)(_ + 1 + rnd.nextInt(7)).take(n).map(s =>
+        LogRecord(s, s"pk$s", 1700000000000L, Array.fill(200)('z'.toByte))).toSeq
+    // sequences starting an index interval: the first record, then the
+    // first record at least 64 KiB past the previous checkpoint
+    def checkpointSeqs(): Seq[Long] = {
+      var pos = 0L
+      var last = -65536L
+      new String(Files.readAllBytes(f), "US-ASCII").split("\n").toSeq.flatMap { l =>
+        val ck = if (pos - last >= 65536) { last = pos; Some(l.takeWhile(_ != '\t').toLong) } else None
+        pos += l.length + 1
+        ck
+      }
+    }
+    def count(a: Long, b: Long) = ShardedStreamLog.countRange(root, "events", "shard-0", a, b)
+    def readSize(a: Long, b: Long) = ShardedStreamLog.read(root, "events", "shard-0", a, b).size
+    def agree(bounds: Seq[Long]): Unit =
+      for (a <- bounds; b <- bounds if a <= b)
+        assert(count(a, b) == readSize(a, b), s"countRange($a, $b)")
+
+    ShardedStreamLog.append(root, "events", "shard-0", gapped(10L, 900))
+    assert(Files.size(f) > 200000L)
+    var seqs = ShardedStreamLog.read(root, "events", "shard-0", -1L, Long.MaxValue)
+      .map(_.sequenceNumber).toIndexedSeq
+    val cks = checkpointSeqs()
+    assert(cks.size >= 4, s"expected several index checkpoints: $cks")
+    val head = seqs.last
+    val gap = seqs.indices.find(i => seqs(i + 1) - seqs(i) >= 2).get
+    val midInterval = seqs((seqs.indexOf(cks(1)) + seqs.indexOf(cks(2))) / 2)
+    agree(Seq(-1L, 5L, cks(1), cks(2) - 1, cks(3), seqs(gap) + 1, midInterval,
+      head, head + 1000, Long.MaxValue))
+    // every rank, on and between sequences, against the in-memory truth
+    for (s <- seqs; b <- Seq(s - 1, s))
+      assert(count(-1L, b) == seqs.count(_ <= b), s"rank of $b")
+    // a rank scans sequence prefixes over at most one index interval
+    val scanned0 = ShardedStreamLog.bytesScanned.get()
+    count(-1L, midInterval)
+    assert(ShardedStreamLog.bytesScanned.get() - scanned0 <= 65536L + 2 * 300L)
+
+    // a further append advances the index: new checkpoints, new head
+    ShardedStreamLog.append(root, "events", "shard-0", gapped(head + 3L, 400))
+    seqs = ShardedStreamLog.read(root, "events", "shard-0", -1L, Long.MaxValue)
+      .map(_.sequenceNumber).toIndexedSeq
+    val cks2 = checkpointSeqs()
+    assert(cks2.size > cks.size, s"the index did not advance: $cks2")
+    val head2 = seqs.last
+    assert(count(head, head2) == 400L)
+    agree(Seq(-1L, midInterval, head, head + 1, cks2.last, head2, head2 + 1))
+  }
+
   test("trigger planning stays sub-second at 5k shards") {
     // latestOffset lists shards and head-probes each per trigger; the probe
     // is an O(1) incremental size check once warm and runs in parallel
