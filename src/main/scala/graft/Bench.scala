@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
+    Checkpoints.requireFreezes("graft.Bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -123,8 +124,8 @@ object Bench {
         // two-pass-operator query pins a fresh frozen snapshot in executor
         // storage for the rest of the session — accumulated storage
         // pressure perturbs later timings at sf1+. The release (an async
-        // driver-side unpersist over the plan's graft-owned leaves) is
-        // inside the timed region; its cost is sub-ms.
+        // driver-side unpersist of every snapshot the query's build made)
+        // is inside the timed region; its cost is sub-ms.
         val ok =
           try {
             val df = fn(spark, sfDir)

@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Creation + release tooling for `Dataset.localCheckpoint` storage, eager
   * ([[checkpoint]]) and lazy ([[checkpointLazy]]).
@@ -17,11 +22,39 @@ import org.apache.spark.sql.Dataset
   * unpersisting every reachable leaf would silently sever storage this
   * library does not own, so graft-created checkpoint RDD ids are tracked
   * and everything else is left untouched.
+  *
+  * Query ownership: a registered query's build runs under [[owning]]
+  * (`SparkEntry.queries` wraps every `QueryDef.run`), which records every
+  * snapshot the build creates — including ones a later freeze hides from
+  * the returned plan (a sweep that feeds the next sweep's lazy snapshot)
+  * — and binds that set to the returned frame. One [[release]] of that
+  * frame frees them all; no call site keeps its own release duty beyond
+  * an optional early free that bounds a loop's high-water. Shared
+  * build-once relations are built under [[shared]] instead, so no
+  * consumer query ever owns (and frees) them.
   */
 object Checkpoints {
 
   /** RDD ids of checkpoints this library created and has not yet freed. */
   private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+
+  /** RDD ids built under [[shared]]: exempt from [[release]] (a consumer
+    * plan reaches them as leaves) until the memo's [[releaseShared]].
+    */
+  private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+
+  /** The snapshots registered by the build running on this thread, or
+    * null outside any [[owning]]/[[shared]] build. Thread-local, so
+    * concurrent builds on one session never collect each other's.
+    */
+  private val collector = new ThreadLocal[ArrayBuffer[RDD[_]]]
+
+  /** Snapshots each owner built, keyed by the owner's identity (a
+    * query's returned frame, a shared memo's handle). Weak keys: an owner
+    * dropped without release does not pin its entry.
+    */
+  private val builtBy = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[AnyRef, Seq[RDD[_]]]())
 
   /** Plan-dump escape hatch (round 17): with SPARK_GRAFT_NO_FREEZE=1 both
     * checkpoint flavors return their input unchanged, so `graft.Explain`
@@ -30,58 +63,20 @@ object Checkpoints {
     * r16's committed plan pair started AT the freeze). Plan inspection
     * only: freezes are correctness-bearing for the two-pass operators
     * (RangePartitioner boundary pinning), so benches and verification
-    * must never set it.
+    * refuse to start with it set ([[requireFreezes]]).
     */
-  private def noFreeze: Boolean =
-    sys.env.get("SPARK_GRAFT_NO_FREEZE").contains("1")
+  private def noFreeze(env: collection.Map[String, String]): Boolean =
+    env.get("SPARK_GRAFT_NO_FREEZE").contains("1")
 
-  /** Deferred mid-loop releases (round 17): snapshots freed only when
-    * their OWNER's checkpoint leaf is released. Loop operators (q144's
-    * rank sweeps, q196's relaxations) previously kept EAGER per-sweep
-    * checkpoints solely so they could release the predecessor as soon as
-    * the successor materialized; with LAZY sweep freezes nothing has
-    * materialized mid-loop, so predecessors are instead registered here
-    * against the loop's FINAL frozen frame and drained by the caller's
-    * normal end-of-query [[release]]. Keyed per owner (not a global
-    * drain) so concurrent queries on one session cannot free each
-    * other's pending snapshots.
+  /** Stop a timing or correctness harness before it starts when the
+    * freeze escape hatch is set: its results would be silently wrong.
     */
-  private val dependents = new java.util.concurrent.ConcurrentHashMap[
-    Int, List[org.apache.spark.rdd.RDD[_]]]()
-
-  /** RDD ids of SHARED checkpoints (memoized build-once relations — the
-    * LPA label assignment, the composed ANN index) that a consumer-level
-    * [[release]] must not tear down: the first consumer's release would
-    * otherwise kill the storage every later consumer's plan references
-    * (observed as CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in q157 when the
-    * Verify harness began releasing per query). Pinned ids are freed
-    * only through [[releasePinned]] — the owning cache's evict path.
-    */
-  private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Mark every graft-owned checkpoint leaf reachable from `ds` as
-    * shared/pinned — exempt from [[release]] until [[releasePinned]].
-    */
-  def pin[T](ds: Dataset[T]): Dataset[T] = {
-    ds.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD
-        if owned.contains(r.rdd.id) => pinned.add(r.rdd.id); ()
-      case _ => ()
-    }
-    ds
-  }
-
-  /** Unpin and free the graft-owned checkpoints reachable from `ds` —
-    * the shared-relation owner's evict path (idempotent).
-    */
-  def releasePinned(ds: Dataset[_]): Unit = {
-    ds.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        pinned.remove(r.rdd.id); ()
-      case _ => ()
-    }
-    release(ds)
-  }
+  def requireFreezes(harness: String,
+      env: collection.Map[String, String] = sys.env): Unit =
+    if (noFreeze(env))
+      throw new IllegalStateException(
+        s"$harness refuses to run with SPARK_GRAFT_NO_FREEZE=1: freezes are " +
+          "correctness-bearing; the hatch is for graft.Explain plan dumps only")
 
   /** Eager `localCheckpoint` whose backing RDD is registered as
     * graft-owned — the only checkpoints [[release]] will free. All graft
@@ -89,7 +84,7 @@ object Checkpoints {
     * through here.
     */
   def checkpoint[T](ds: Dataset[T]): Dataset[T] =
-    if (noFreeze) ds else register(ds.localCheckpoint(true))
+    if (noFreeze(sys.env)) ds else register(ds.localCheckpoint(true))
 
   /** LAZY `localCheckpoint` (graft-owned like [[checkpoint]]): the
     * snapshot materializes during the FIRST job that computes it
@@ -104,65 +99,89 @@ object Checkpoints {
     * other consumers before their first action.
     */
   def checkpointLazy[T](ds: Dataset[T]): Dataset[T] =
-    if (noFreeze) ds else register(ds.localCheckpoint(false))
-
-  /** Tie `victims`' graft-owned snapshots to `owner`'s: when [[release]]
-    * frees one of `owner`'s checkpoint leaves, the victims are freed in
-    * the same sweep. Used by loop operators whose per-sweep freezes are
-    * lazy — the predecessor snapshots must outlive the loop (nothing is
-    * materialized until the first consumer job) but die with the final
-    * frame. Returns `owner` for chaining; a no-op when `owner` carries no
-    * graft-owned leaf (e.g. under SPARK_GRAFT_NO_FREEZE).
-    */
-  def releaseWith[T](owner: Dataset[T], victims: Seq[Dataset[_]]): Dataset[T] = {
-    val vRdds = victims.flatMap(_.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD
-        if owned.contains(r.rdd.id) => r.rdd
-    }).toList
-    if (vRdds.nonEmpty) {
-      val oid = owner.queryExecution.analyzed.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD
-          if owned.contains(r.rdd.id) => r.rdd.id
-      }.headOption
-      oid.foreach(id => dependents.merge(id, vRdds, (a, b) => a ++ b))
-    }
-    owner
-  }
+    if (noFreeze(sys.env)) ds else register(ds.localCheckpoint(false))
 
   private def register[T](ck: Dataset[T]): Dataset[T] = {
+    val building = collector.get()
     ck.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => owned.add(r.rdd.id)
+      case r: LogicalRDD =>
+        owned.add(r.rdd.id)
+        if (building != null) building += r.rdd
       case _ => ()
     }
     ck
   }
 
+  /** Run `build` with its own collector; returns what it built and
+    * every snapshot registered meanwhile. A `nested` build also hands its
+    * snapshots to the enclosing build's collector.
+    */
+  private def collecting[T](nested: Boolean)(build: => T): (T, Seq[RDD[_]]) = {
+    val outer = collector.get()
+    val mine = ArrayBuffer.empty[RDD[_]]
+    collector.set(mine)
+    try (build, mine.toSeq)
+    finally {
+      collector.set(outer)
+      if (nested && outer != null) outer ++= mine
+    }
+  }
+
+  /** Wrap a query builder so the frame it returns owns every snapshot
+    * its build created: [[release]] of that exact frame frees them all.
+    */
+  def owning(run: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, d) => {
+    val (df, built) = collecting(nested = true)(run(s, d))
+    if (built.nonEmpty) builtBy.put(df, built)
+    df
+  }
+
+  /** Build a shared build-once relation (a memo served to many queries)
+    * under its own owner: its snapshots never join an enclosing query's
+    * set and survive every consumer's [[release]], until the memo's
+    * evict path calls [[releaseShared]] on the returned handle.
+    */
+  def shared[T <: AnyRef](build: => T): T = {
+    val (memo, built) = collecting(nested = false)(build)
+    val live = built.filter(r => owned.contains(r.id))
+    live.foreach(r => pinned.add(r.id))
+    builtBy.put(memo, live)
+    memo
+  }
+
+  /** Free every snapshot a [[shared]] build made — the memo's evict
+    * path (idempotent).
+    */
+  def releaseShared(memo: AnyRef): Unit =
+    Option(builtBy.remove(memo)).foreach(_.foreach { r =>
+      pinned.remove(r.id)
+      free(r)
+    })
+
   /** Frees the executor storage behind every graft-owned checkpoint,
     * eager or lazy, reachable from `df`'s plan (its `LogicalRDD` leaves),
-    * together with the snapshots registered through [[releaseWith]]
-    * against any leaf it frees (transitively); non-owned persisted
-    * leaves and pinned ones are deliberately not touched. Call once
-    * the data has been consumed — any later action on a plan referencing
-    * the checkpoint would fail or recompute from nothing. Idempotent:
+    * plus — when `df` is a frame a registered query returned — every
+    * snapshot its build created ([[owning]]). Non-owned persisted leaves
+    * and [[shared]] ones are deliberately not touched. Call once the data
+    * has been consumed — any later action on a plan referencing the
+    * checkpoint would fail or recompute from nothing. Idempotent:
     * releasing an already-released frame is a no-op.
     */
-  def release(df: Dataset[_]): Unit =
+  def release(df: Dataset[_]): Unit = {
     df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD
-        if !pinned.contains(r.rdd.id) && owned.remove(r.rdd.id) =>
-        r.rdd.unpersist(false)
-        drainDependents(r.rdd.id)
+      case r: LogicalRDD => free(r.rdd)
       case _ => ()
     }
+    Option(builtBy.remove(df)).foreach(_.foreach(free))
+  }
 
-  /** Free the deferred victims registered against a just-released owner
-    * (transitively — a victim may itself own deferred victims).
-    */
-  private def drainDependents(id: Int): Unit =
-    Option(dependents.remove(id)).foreach(_.foreach { rdd =>
-      if (!pinned.contains(rdd.id) && owned.remove(rdd.id)) {
-        rdd.unpersist(false)
-        drainDependents(rdd.id)
-      }
-    })
+  /** Ids of the snapshots this library still owns (leak checks). */
+  private[graft] def ownedIds: Set[Int] = owned.asScala.toSet
+
+  /** Ids of the snapshots shared memos hold (leak checks). */
+  private[graft] def sharedIds: Set[Int] = pinned.asScala.toSet
+
+  private def free(rdd: RDD[_]): Unit =
+    if (!pinned.contains(rdd.id) && owned.remove(rdd.id)) rdd.unpersist(false)
 }

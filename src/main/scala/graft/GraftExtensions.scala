@@ -13,9 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * instead of calling the per-module `register(spark)` helpers (which
-  * remain for ad-hoc/local use — both paths are idempotent and register
-  * identical expressions).
+  * instead of calling [[GraftExtensions.registerAll]] on each session
+  * (the ad-hoc/local path — both register identical expressions).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -39,7 +38,7 @@ object GraftExtensions {
     }
 
   /** Every native kernel the library ships, by SQL name — the single
-    * source of truth; the per-module `register` helpers delegate here.
+    * source of truth for both registration paths.
     */
   val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "vec_dot" -> arity("vec_dot", 2)(es => functions.DotProduct(es(0), es(1))),
@@ -75,11 +74,15 @@ object GraftExtensions {
         .BloomFilterMightContain(es(0), es(1))))
 
   /** Register all kernels on an already-built session (ad-hoc twin of the
-    * extensions path; idempotent).
+    * extensions path). Only names the session's registry does not already
+    * hold are added, so the operators that call this per build neither
+    * re-register a kernel nor log a replacement warning each time.
     */
-  def registerAll(spark: SparkSession): Unit =
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     kernels.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

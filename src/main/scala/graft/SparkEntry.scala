@@ -35,9 +35,12 @@ object SparkEntry {
       .orderBy("window_start", "c_mktsegment")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each build
+    * owns the snapshots it creates: `Checkpoints.release` of the returned
+    * frame frees them all (see [[Checkpoints.owning]]).
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.run).toMap
+    all.map(q => q.name -> Checkpoints.owning(q.run)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

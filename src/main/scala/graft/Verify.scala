@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    Checkpoints.requireFreezes("graft.Verify")
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name filter (local
     // iteration only — the driver always runs the full surface)

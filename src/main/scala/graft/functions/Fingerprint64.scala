@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -68,10 +67,4 @@ case class Fingerprint64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object Fingerprint64 {
-  /** Register `fingerprint64` in the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,8 +80,4 @@ object MinHashSigs {
   val A0 = 2654435761L
   val AStep = 40503L
   val BStep = 97L
-
-  /** Register `minhash_sigs` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -205,12 +204,4 @@ case class SortedIntersectCountMin(
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object SortedIntersectCount {
-  /** Register `sorted_intersect_count` and `sorted_intersect_count_min`
-    * (idempotent; delegates to the single kernel registry).
-    */
-  def register(spark: SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
 }

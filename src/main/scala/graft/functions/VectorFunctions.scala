@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -74,12 +73,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorFunctions {
-  /** Register `vec_dot` in the session's function registry (idempotent), so
-    * it is usable from `expr(...)` and `spark.sql(...)`.
-    */
-  def register(spark: SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
 }

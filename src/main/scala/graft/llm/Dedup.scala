@@ -120,7 +120,7 @@ object Dedup {
     * 64 bits (P < 1e-12 per pair at these set sizes).
     */
   def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.SortedIntersectCount.register(s)
+    graft.GraftExtensions.registerAll(s)
     // bounded validator: fixed-size deterministic sample beyond the
     // fixture sizes (see JaccardTruthSampleTarget) — the count is a
     // column-pruned plan-time action, the predicate mirrors the oracle's
@@ -431,7 +431,7 @@ object Dedup {
     // equals Jaccard over the strings absent an in-pair 64-bit
     // collision — the q25 precedent).
     QueryDef.sql("q136_prefix_filter_simjoin") { (s, d) =>
-      graft.functions.SortedIntersectCount.register(s)
+      graft.GraftExtensions.registerAll(s)
       // freeze: the shingle relation feeds four consumers (df agg,
       // prefix rank, both verify legs) — without the checkpoint each
       // would re-tokenize and re-hash the corpus
@@ -512,7 +512,7 @@ object Dedup {
     // with no float compare. Oracle: exact postings-join intersection
     // counts over string shingles (the q136 hash-vs-string precedent).
     QueryDef.sql("q146_containment_join") { (s, d) =>
-      graft.functions.SortedIntersectCount.register(s)
+      graft.GraftExtensions.registerAll(s)
       val docs = graft.Checkpoints.checkpointLazy(
         Tables(s, d, "documents")
           .withColumn("tokens", split(col("text"), " "))
@@ -1163,21 +1163,14 @@ object Dedup {
     */
   val SmallGraphEdges: Long = 2L * 1000 * 1000
 
-  /** The final labels checkpoint of the previous distributed run —
-    * released on the NEXT call, so repeated q66/q68 executions in one
-    * session pin at most ONE labels copy instead of one per run (the
-    * generic query harness consumes results lazily and cannot call
-    * release itself).
-    */
-  private var lastCcLabels: Option[DataFrame] = None
-
   /** Storage contract (distributed branch only): the returned frame
-    * rides on the final round's localCheckpoint. It stays valid until
-    * the NEXT `connectedComponents` call in this JVM (which releases it —
-    * a severed checkpoint fails loudly, never silently recomputes), or
-    * until the caller frees it early via `graft.Checkpoints.release`.
-    * Intermediate rounds are released inside the loop; the small-graph
-    * union-find branch holds no checkpoint.
+    * rides on the final round's localCheckpoint, which stays valid until
+    * the caller frees it with `graft.Checkpoints.release` — on the
+    * returned frame or any frame built on it (the labels snapshot is a
+    * leaf of both), or on a registered query's result, which owns every
+    * snapshot its build made. A severed checkpoint fails loudly, never
+    * silently recomputes. Intermediate rounds are released inside the
+    * loop; the small-graph union-find branch holds no checkpoint.
     */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -1186,11 +1179,6 @@ object Dedup {
     // materialize the edge list once BEFORE mirroring it: the union
     // references e twice, and without the cut the upstream pair
     // computation (expensive for near-dup graphs) would run per branch
-    // free the previous run's pinned labels (see lastCcLabels)
-    synchronized {
-      lastCcLabels.foreach(graft.Checkpoints.release)
-      lastCcLabels = None
-    }
     val e = graft.Checkpoints.checkpointLazy(
       edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v")))
     if (e.count() <= smallGraphEdges) {
@@ -1252,7 +1240,6 @@ object Dedup {
         prevSum = nextSum
         i += 1
       }
-      synchronized { lastCcLabels = Some(labels) }
       labels.select(col("id"), col("label").as("cluster_id"))
     } finally und.unpersist()
   }
@@ -1335,7 +1322,7 @@ object Dedup {
       .select("doc_id", "shingles")
     // All 32 signatures in one pass via the native codegen'd kernel
     // (graft.functions.MinHashSigs) over the shingle hashes.
-    graft.functions.MinHashSigs.register(s)
+    graft.GraftExtensions.registerAll(s)
     val sigs = docs
       .select(col("doc_id"), expr("minhash_sigs(shingles)").as("sigs"))
       // plan barrier: materialize signatures once before the 8-band fan-out.
@@ -1365,7 +1352,7 @@ object Dedup {
     // groupBy(doc_a, doc_b). The naive two-sided join costs two scans of
     // the set table and (under AQE at small sizes) two broadcasts of the
     // full array column — measured 3.8s → 0.7s at sf0.1.
-    graft.functions.SortedIntersectCount.register(s)
+    graft.GraftExtensions.registerAll(s)
     val sets = docs.withColumn("n_sh", size(col("shingles")))
     val legs = cand.select(col("doc_a"), col("doc_b"),
       explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
@@ -1390,7 +1377,7 @@ object Dedup {
     // Fingerprint via the native codegen'd kernel (graft.functions.
     // SimHash64) over per-row token hashes — no explode, no shuffle until
     // the band self-join.
-    graft.functions.SimHash64.register(s)
+    graft.GraftExtensions.registerAll(s)
     val fp = Tables(s, d, "documents")
       .select(col("doc_id"), expr(
         "simhash64(transform(array_distinct(split(text, ' ')), t -> xxhash64(t)))")

@@ -153,7 +153,7 @@ object Gates {
     // fixture SF (LlmSpec measures the same bound exhaustively at
     // sf0.001).
     QueryDef.sql("q107_minhash_recall_gate") { (s, d) =>
-      graft.functions.SortedIntersectCount.register(s)
+      graft.GraftExtensions.registerAll(s)
       // round 16: the all-pairs truth verify rides the early-exit
       // sorted-merge kernel (q24's posture) instead of per-pair
       // array_intersect hash sets — same md5-derived shingle hashes,

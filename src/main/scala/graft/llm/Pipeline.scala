@@ -1247,8 +1247,8 @@ object Pipeline {
     // SAME expression q32 audits, so selection cannot drift from the
     // scoring operator. Reported per language: docs/tokens admitted and
     // the admitted quality floor. (The cumsum op pins a corpus-sized
-    // frozen snapshot per run; library callers release it via
-    // Checkpoints.release — q78's posture.)
+    // frozen snapshot per run; the query owns it, so Checkpoints.release
+    // of the result frees it — q78's posture.)
     QueryDef.sql("q115_token_budget_selection") { (s, d) =>
       val scored = Tables(s, d, "documents")
         .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))

@@ -173,7 +173,7 @@ object Search {
     // and vec ids share the fixture key space (embeddings are the
     // documents' vectors), which is what makes the two sides fusable.
     QueryDef.sql("q128_hybrid_retrieval") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val qIds = QuerySet.map(_._1).distinct.sorted // dense queries = same ids
       def sideRanks(scored: DataFrame, scoreCol: String): DataFrame = {
         val w = Window.partitionBy(col("q_id"))

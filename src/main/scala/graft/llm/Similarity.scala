@@ -316,7 +316,7 @@ object Similarity {
     // engines. One posexplode → shrinking (label, half, dim) partial
     // agg; centroid relation is labels×2 rows.
     QueryDef.sql("q159_label_centroid_drift") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val q3 = "transform(embedding, x -> cast(floor(cast(x AS double) * 1000.0) AS double))"
       val emb = Tables(s, d, "embeddings")
         .select(col("label"), (col("vec_id") % 2).as("half"), expr(q3).as("v"))
@@ -374,7 +374,7 @@ object Similarity {
     // 5 vectors are the query set; each scans all candidates. The
     // candidate side stays partitioned; queries are a broadcast (tiny).
     QueryDef.sql("q27_cosine_topk") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val emb = Tables(s, d, "embeddings")
         .select(col("vec_id"), expr(quant).as("v"))
         .withColumn("norm2", dot("v", "v"))
@@ -603,7 +603,7 @@ object Similarity {
     // L2 norm extremes (deterministic), plus mean norm via exact decimal
     // summation.
     QueryDef.sql("q29_label_embedding_stats") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val emb = Tables(s, d, "embeddings")
         .select(col("label"), expr(quant).as("v"))
         .withColumn("norm", sqrt(dot("v", "v")) / 1000000.0)
@@ -641,7 +641,7 @@ object Similarity {
     // partial agg → labels×dims rows → per-label arrays → a labels²
     // broadcast pair join. Nothing large ever shuffles twice.
     QueryDef.sql("q80_label_centroid_sim") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val q3 = "transform(embedding, x -> cast(floor(cast(x AS double) * 1000.0) AS double))"
       val emb = Tables(s, d, "embeddings").select(col("label"), expr(q3).as("v"))
       val sums = emb
@@ -730,7 +730,7 @@ object Similarity {
     // task forwards at most k candidates per anchor, so the per-anchor
     // sort sees ≤ k·map_tasks rows, never the corpus.
     QueryDef.sql("q124_contrastive_mining") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val k = 5
       val emb = Tables(s, d, "embeddings")
         .select(col("vec_id"), col("label"), expr(quant).as("v"))
@@ -913,7 +913,7 @@ object Similarity {
     // 1e3 grid bounds per-vector squared distance at ~7e7, so corpus
     // inertia stays int64-exact to ~1e11 vectors (decimal(38) past it).
     QueryDef.sql("q192_kmeans_lloyd") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       import org.apache.spark.sql.expressions.Window
       val q3 =
         "transform(embedding, x -> cast(floor(cast(x AS double) * 1000.0) AS double))"
@@ -1032,7 +1032,7 @@ object Similarity {
     // map-side folds over ONE broadcast 4×8 centroid row; refit is a
     // (block, cid, pos)-keyed shrinking agg. No KNN joins anywhere.
     QueryDef.sql("q211_pq_codebook") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       import org.apache.spark.sql.expressions.Window
       val q3 =
         "transform(embedding, x -> cast(floor(cast(x AS double) * 1000.0) AS double))"
@@ -1232,7 +1232,7 @@ object Similarity {
     // top-k limits map-side (partial WindowGroupLimit) and the overlap
     // join is k-sized per anchor.
     QueryDef.sql("q220_matryoshka_truncation") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val k = 10
       val emb = Tables(s, d, "embeddings")
         .select(col("vec_id"), expr(quant).as("v"))
@@ -1313,7 +1313,7 @@ object Similarity {
     // on vec_id, vote ties on (count desc, label asc) — deterministic on
     // both engines; quantized-integer dots keep every cosine bit-equal.
     QueryDef.sql("q331_knn_loo_accuracy") { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
+      graft.GraftExtensions.registerAll(s)
       val k = 10
       val emb = Tables(s, d, "embeddings")
         .select(col("vec_id"), col("label"), expr(quant).as("v"))
@@ -1385,7 +1385,7 @@ object Similarity {
     * ONE broadcast centroid row via the map-side argmax fold.
     */
   def centroidConfusion(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     val q3 = "transform(embedding, x -> cast(floor(cast(x AS double) * 1000.0) AS double))"
     val emb = Tables(s, d, "embeddings")
       .select(col("vec_id"), col("label"), expr(q3).as("v"))
@@ -1456,7 +1456,7 @@ object Similarity {
     */
   def semDedup(s: SparkSession, d: String,
       theta: Double = SemDedupThreshold): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     val q3 =
       "transform(embedding, x -> cast(floor(cast(x AS double) * 1000.0) AS double))"
     val emb = Tables(s, d, "embeddings")
@@ -1490,9 +1490,8 @@ object Similarity {
         col("best.sid").as("cluster_id"))
     // freeze: the assignment feeds three consumers (both pair-join legs
     // and the size agg) — without the checkpoint each would re-scan the
-    // corpus and re-run the argmax fold (release owned by the caller via
-    // Checkpoints.release once consumed; Verify/Bench sessions are
-    // short-lived)
+    // corpus and re-run the argmax fold (the caller's Checkpoints.release
+    // of the result frees it once consumed)
     val frozen = graft.Checkpoints.checkpointLazy(assigned)
     val a = frozen.select(col("cluster_id"), col("vec_id").as("vec_a"),
       col("v").as("va"), col("norm2").as("na"))
@@ -1531,7 +1530,7 @@ object Similarity {
   def embeddingNearDupExact(
       s: SparkSession, d: String,
       maxVectors: Long = MaxExactNearDupVectors): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     val emb = Tables(s, d, "embeddings")
     val n = emb.select(col("vec_id")).count() // column-pruned plan-time count
     // pair estimate in BigInt: n*(n-1)/2 overflows Long past n ≈ 4.3e9 —
@@ -1569,7 +1568,7 @@ object Similarity {
   def embeddingNearDupSampled(
       s: SparkSession, d: String,
       targetVectors: Long = MaxExactNearDupVectors): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     val emb = Tables(s, d, "embeddings")
     val n = emb.select(col("vec_id")).count()
     if (n <= targetVectors) return exactPairs(emb)
@@ -1683,7 +1682,7 @@ object Similarity {
   def embeddingNearDupLsh(
       s: SparkSession, d: String,
       tables: Int = 0, planesPerTable: Int = 0): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     val emb = Tables(s, d, "embeddings").select(col("vec_id"), expr(quant).as("v"))
     val planesPT =
       if (planesPerTable > 0) planesPerTable
@@ -1879,7 +1878,7 @@ object Similarity {
 
   def ivfBuild(s: SparkSession, d: String, k: Int = 16,
       lloydIters: Int = 1): Array[Seq[Double]] = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     // cached across the training passes (standard iterative-ML shape;
     // ~n×64 doubles, tiny next to the corpus it indexes); released below
     // once training's jobs have run. A query via the un-cached ivfQuery
@@ -1967,7 +1966,7 @@ object Similarity {
     */
   def ivfQuery(s: SparkSession, d: String, centroids: Array[Seq[Double]],
       nprobe: Int = 4): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     require(centroids.nonEmpty, "ivfQuery: empty centroid model")
     val emb = Tables(s, d, "embeddings").select(col("vec_id"), expr(quant).as("v"))
     val assigned = assign(emb, centroids).withColumn("norm2", dot("v", "v"))
@@ -2097,7 +2096,7 @@ object Similarity {
     */
   def annLsh(s: SparkSession, d: String, numPlanes: Int = 0,
       tables: Int = 4): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     val emb = Tables(s, d, "embeddings").select(col("vec_id"), expr(quant).as("v"))
     val planes = if (numPlanes > 0) numPlanes else planesFor(emb.count())
     // Deterministic hyperplanes ([[planeWeights]]): per-row work is one
@@ -2305,7 +2304,7 @@ object Similarity {
   def pqAdcTopk(s: SparkSession, d: String, k: Int = 10,
       nSeeds: Int = 32, nBlocks: Int = 8, refits: Int = 2,
       shortlist: Int = 100): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     import org.apache.spark.sql.expressions.Window
     val emb0 = unitQuant(s, d)
     val (codes, refit) = pqModel(emb0, nSeeds, nBlocks, refits)
@@ -2353,7 +2352,7 @@ object Similarity {
       coarseK: Int = 16, nprobe: Int = 4, nSeeds: Int = 32,
       nBlocks: Int = 8, refits: Int = 2,
       shortlist: Int = 100): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     import org.apache.spark.sql.expressions.Window
     val emb0 = unitQuant(s, d)
     // coarse router trained in the unit-sphere domain (one exact Lloyd
@@ -2408,7 +2407,7 @@ object Similarity {
     */
   def annOpen(s: SparkSession, d: String, coarseK: Int = 16,
       nSeeds: Int = 32, nBlocks: Int = 8, refits: Int = 2): AnnIndex = {
-    graft.functions.VectorFunctions.register(s)
+    graft.GraftExtensions.registerAll(s)
     val emb0 = unitQuant(s, d)
     val cs = coarseCentroidsFrom(emb0, coarseK, 1)
     val assigned = assign(emb0, cs)
@@ -2446,12 +2445,12 @@ object Similarity {
   /** The per-(session, corpus-dir) DEFAULT-parameter composed index the
     * registered q320 / q321 / q328 deploy against — one [[annOpen]]
     * build per session per corpus, exactly the production shape (build
-    * once, query many). The handle's persisted relations are
-    * session-bounded by construction here (Verify/Bench/test sessions
-    * are short-lived and the cached relations are a compressed
-    * re-expression of one embeddings table — ~nBlocks small ints + one
-    * int vector per row); parameterized callers own their lifecycle via
-    * [[annOpen]]/[[AnnIndex.close]] instead.
+    * once, query many). The build runs under its own owner
+    * (`Checkpoints.shared`), so no consumer query's release frees its
+    * snapshots; [[annSharedEvict]] does. The cached relations are a
+    * compressed re-expression of one embeddings table (~nBlocks small
+    * ints + one int vector per row); parameterized callers own their
+    * lifecycle via [[annOpen]]/[[AnnIndex.close]] instead.
     */
   private val sharedAnn = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), AnnIndex]()
@@ -2464,16 +2463,10 @@ object Similarity {
     // cleanup (close() would try to touch the stopped context).
     val it = sharedAnn.keySet().iterator()
     while (it.hasNext) { if (it.next()._1.sparkContext.isStopped) it.remove() }
-    sharedAnn.computeIfAbsent((s, d), _ => {
-      val idx = annOpen(s, d)
-      // PIN the index's graft-owned checkpoint leaves (the PQ refit
-      // rides one): the relations are persisted, but a consumer-level
-      // Checkpoints.release would free the underlying checkpoint and
-      // leave later consumers one cache eviction away from
-      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; annSharedEvict owns the free
-      idx.pinShared()
-      idx
-    })
+    // the index's snapshots (the PQ refit rides one) belong to the memo:
+    // a consumer's release freeing them would leave later consumers one
+    // cache eviction away from CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    sharedAnn.computeIfAbsent((s, d), _ => graft.Checkpoints.shared(annOpen(s, d)))
   }
 
   /** Drop (and release) the shared index for one (session, dir) — test
@@ -2481,7 +2474,7 @@ object Similarity {
     */
   def annSharedEvict(s: SparkSession, d: String): Unit = {
     val idx = sharedAnn.remove((s, d))
-    if (idx != null) { idx.unpinShared(); idx.close() }
+    if (idx != null) { graft.Checkpoints.releaseShared(idx); idx.close() }
   }
 
   /** Handle returned by [[annOpen]]: coarse model + persisted compressed
@@ -2672,17 +2665,5 @@ object Similarity {
       Seq(queryRel, codesRel, refitRel, exactRel).foreach(_.unpersist())
       ()
     }
-
-    /** Pin the graft-owned checkpoint leaves under the persisted
-      * relations — see [[annShared]]; the shared handle's storage must
-      * survive consumer-level releases.
-      */
-    private[Similarity] def pinShared(): Unit =
-      Seq(queryRel, codesRel, refitRel, exactRel)
-        .foreach(graft.Checkpoints.pin(_))
-
-    private[Similarity] def unpinShared(): Unit =
-      Seq(queryRel, codesRel, refitRel, exactRel)
-        .foreach(graft.Checkpoints.releasePinned)
   }
 }

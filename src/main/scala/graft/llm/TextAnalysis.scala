@@ -563,7 +563,7 @@ object TextAnalysis {
       // per-row loop — no explode (row count stays = doc count, not
       // corpus characters), no per-character shuffle, no per-row array
       // allocation. The only shuffle left is the window on `fingerprint`.
-      graft.functions.Fingerprint64.register(s)
+      graft.GraftExtensions.registerAll(s)
       val docs = Tables(s, d, "documents")
       val fps = docs
         .select(col("doc_id"), expr("fingerprint64(text)").as("fingerprint"))
@@ -724,9 +724,9 @@ object TextAnalysis {
     // real corpus scale the vocab relation is 10^7–10^8 rows, where the
     // naive global window is one straggler task sorting the whole
     // vocabulary. cum_share is one IEEE division of exact int64 sums.
-    // (The two-pass op pins a vocab-sized checkpoint per run; library
-    // callers release it via Checkpoints.release(result) — the driver's
-    // short-lived Verify/Bench sessions don't bother.)
+    // (The two-pass op pins a vocab-sized checkpoint per run; the query
+    // owns it, and Checkpoints.release(result) frees it — Verify, Bench
+    // and the benchmark release every query's result once written.)
     QueryDef.sql("q78_vocab_coverage") { (s, d) =>
       val counts = Tables(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("token"))

@@ -172,7 +172,7 @@ object Graph {
   def lpaEvict(s: SparkSession, d: String): Unit = {
     val rel = sharedLabels.remove((s, d))
     if (rel != null)
-      try Checkpoints.releasePinned(rel)
+      try Checkpoints.releaseShared(rel)
       catch { case scala.util.control.NonFatal(_) => () }
   }
 
@@ -184,7 +184,10 @@ object Graph {
     // sessions must not pin map entries in a long-lived JVM
     val it = sharedLabels.keySet().iterator()
     while (it.hasNext) { if (it.next()._1.sparkContext.isStopped) it.remove() }
-    sharedLabels.computeIfAbsent((s, d), _ => {
+    // built under its own owner, never the consumer query's: q157's
+    // release must not tear the assignment down under q217; lpaEvict
+    // owns the real free
+    sharedLabels.computeIfAbsent((s, d), _ => Checkpoints.shared {
       import org.apache.spark.sql.expressions.Window
       lpaBuildCount.incrementAndGet()
       val e = Checkpoints.checkpointLazy(
@@ -211,10 +214,7 @@ object Graph {
         prevCk = labels
       }
       Checkpoints.release(e)
-      // PIN the memoized assignment: it is shared across q157/q217 (and
-      // any later consumer) — a per-query harness release must not tear
-      // it down under the next consumer; lpaEvict owns the real free
-      Checkpoints.pin(labels)
+      labels
     })
   }
 
@@ -312,14 +312,12 @@ object Graph {
       // job per sweep solely so the predecessor could be released
       // mid-loop; with lazy freezes nothing materializes until the
       // consumer's single job computes the whole 3-sweep chain stage by
-      // stage, and the predecessor snapshots are registered on the final
-      // frame (Checkpoints.releaseWith) so the caller's normal
+      // stage. The earlier sweeps hide behind the later snapshots, not in
+      // the returned plan; the query owns them all, so the caller's
       // end-of-query release frees them. Storage high-water: Iters
       // node-sized rank snapshots held to query end (previously one).
-      val sweeps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       for (_ <- 1 to Iters) {
         val frozen = Checkpoints.checkpointLazy(ranks)
-        sweeps += frozen
         val contrib = e.join(frozen, e("src") === frozen("node"))
           .groupBy(col("dst"))
           .agg(sum(round(col("pr") / col("deg").cast("double") * Grid)
@@ -332,10 +330,7 @@ object Graph {
             (lit(0.25) / col("n").cast("double") +
               lit(0.75) * (col("sgrid").cast("double") / Grid)).as("pr"))
       }
-      Checkpoints.releaseWith(
-        ranks.select(col("node"), col("deg"), col("pr"))
-          .orderBy("node"),
-        sweeps.dropRight(1).toSeq)
+      ranks.select(col("node"), col("deg"), col("pr")).orderBy("node")
     } {
       s"""WITH $EdgeSql,
          |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
@@ -836,8 +831,8 @@ object Graph {
       // truncate the re-embedding: the broadcast-total job materializes
       // each freeze as it streams through, and every later reference
       // reads the snapshot. Identical relational content, plan ~5x
-      // smaller; the harness release frees the snapshots through the
-      // returned frame's leaves.
+      // smaller; the query owns the snapshots, so the caller's release
+      // of the returned frame frees them all.
       // h1: hub = sum of its customers' authorities, L1-normalized on
       // the exact grid total
       val h1g = Checkpoints.checkpointLazy(e.join(a1, "c")
@@ -866,15 +861,13 @@ object Graph {
         .select(col("s"), col("outdeg"),
           (col("hg").cast("double") / col("ht").cast("double")).as("h"))
       // e and h1g are reachable only through FROZEN lineages (truncated
-      // at materialization), so they are not leaves of the returned plan
-      // — register them on it for the caller's end-of-query release
-      Checkpoints.releaseWith(
-        h2.select(lit("hub").as("role"), col("s").as("id"),
-            col("outdeg").as("degree"), col("h").as("score"))
-          .unionAll(a2.select(lit("authority").as("role"), col("c").as("id"),
-            col("indeg").as("degree"), col("a").as("score")))
-          .orderBy("role", "id"),
-        Seq(h1g, e))
+      // at materialization), so they are not leaves of the returned plan;
+      // the query owns them, and the caller's release frees them too
+      h2.select(lit("hub").as("role"), col("s").as("id"),
+          col("outdeg").as("degree"), col("h").as("score"))
+        .unionAll(a2.select(lit("authority").as("role"), col("c").as("id"),
+          col("indeg").as("degree"), col("a").as("score")))
+        .orderBy("role", "id")
     } {
       """WITH e AS (
         |  SELECT l.l_suppkey AS s, o.o_custkey AS c
@@ -925,22 +918,20 @@ object Graph {
     // hops over strong ties can be closer than one weak hop). Three
     // relaxation sweeps, each ONE edge-keyed join of the frozen
     // frontier + a node-keyed min — Bellman–Ford's relational form,
-    // with the same per-sweep Checkpoints freeze/release discipline as
-    // q144 so lineage stays sweep-sized. All-integer costs end-to-end;
-    // the oracle replays the identical three unrolled relaxations.
+    // with the same lazy per-sweep freezes as q144 so lineage stays
+    // sweep-sized. All-integer costs end-to-end; the oracle replays the
+    // identical three unrolled relaxations.
     QueryDef.sql("q196_weighted_shortest_path") { (s, d) =>
       val e = Checkpoints.checkpointLazy(
         edges(s, d).select(col("src"), col("dst"),
           greatest(lit(1L), expr("CAST(1000 DIV w AS BIGINT)")).as("ecost")))
       var dist = s.range(1)
         .select(lit(0L).as("node"), lit(0L).as("cost"))
-      // round 17: lazy sweep freezes + deferred release (the q144
-      // posture — one consumer job materializes the whole relaxation
-      // chain; predecessors die with the final frame)
-      val sweeps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      // round 17: lazy sweep freezes (the q144 posture — one consumer
+      // job materializes the whole relaxation chain; the query owns the
+      // predecessors, so they die with the final frame's release)
       for (_ <- 1 to 3) {
         val frozen = Checkpoints.checkpointLazy(dist)
-        sweeps += frozen
         val relaxed = e.join(frozen, e("src") === frozen("node"))
           .select(col("dst").as("node"),
             (col("ecost") + frozen("cost")).as("cost"))
@@ -948,7 +939,7 @@ object Graph {
           .unionAll(relaxed)
           .groupBy(col("node")).agg(min(col("cost")).as("cost"))
       }
-      Checkpoints.releaseWith(dist.orderBy("node"), sweeps.dropRight(1).toSeq)
+      dist.orderBy("node")
     } {
       s"""WITH $EdgeSql,
          |ec AS (

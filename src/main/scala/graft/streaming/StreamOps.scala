@@ -194,7 +194,7 @@ object StreamOps {
       stateTtl: Option[String] = None): Dataset[(Long, Long)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.MinHashSigs.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val bands = docs
       // null/malformed ids would kill the Long encoder (or the ANSI
       // cast) downstream — drop them instead of dying on a poison record

@@ -8,7 +8,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("vec_dot matches the higher-order-function fold exactly") {
     import spark.implicits._
-    VectorFunctions.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val df = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(-1.5, 0.25), Seq(2.0, 8.0)),
@@ -26,7 +26,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("vec_dot survives whole-stage codegen on fixture embeddings") {
     import spark.implicits._
-    VectorFunctions.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) as v")
     val norms = emb.selectExpr("vec_id", "vec_dot(v, v) as n2").as[(Long, Double)]
@@ -41,7 +41,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("minhash_sigs matches the higher-order fold formula exactly") {
     import spark.implicits._
-    MinHashSigs.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val df = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .selectExpr("transform(split(text, ' '), t -> xxhash64(t)) AS hs")
     val rows = df.selectExpr(
@@ -58,7 +58,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("simhash64 matches the higher-order fold exactly") {
     import spark.implicits._
-    SimHash64.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val df = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .selectExpr("transform(array_distinct(split(text, ' ')), t -> xxhash64(t)) AS hs")
     val rows = df.selectExpr(
@@ -77,7 +77,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("fingerprint64 matches the higher-order fold exactly, incl. non-ASCII") {
     import spark.implicits._
-    Fingerprint64.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val fixture = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select($"text")
     val extra = Seq("", "a", "héllo wörld", "日本語テキスト", "mixed éé 123").toDF("text")
@@ -97,7 +97,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("sorted_intersect_count matches size(array_intersect) on sorted distinct sets") {
     import spark.implicits._
-    SortedIntersectCount.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .selectExpr("array_sort(array_distinct(split(text, ' '))) AS toks", "lang")
     val pairs = docs.alias("a").join(docs.alias("b"), Seq("lang"))
@@ -121,7 +121,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
   test("sorted_intersect_count_min returns exact counts above threshold, -1 below") {
     import spark.implicits._
-    SortedIntersectCount.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .selectExpr("array_sort(array_distinct(split(text, ' '))) AS toks", "lang")
     val rows = docs.alias("a").join(docs.alias("b"), Seq("lang"))
@@ -142,7 +142,7 @@ class VectorFunctionsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("null inputs propagate null") {
-    VectorFunctions.register(spark)
+    graft.GraftExtensions.registerAll(spark)
     val row = spark.sql("SELECT vec_dot(cast(null as array<double>), array(1.0d))")
       .collect().head
     assert(row.isNullAt(0))

@@ -34,8 +34,8 @@ class GraphSpec extends AnyFunSuite with SparkTestSession {
     val df = graft.SparkEntry.queries("q144_copurchase_pagerank")(spark, d)
     df.collect()
     // sweep freezes are lazy, so none can be freed mid-loop: the earlier
-    // sweeps are registered against the final frame (releaseWith) and
-    // held to query end. High-water = 1 edge freeze + Iters (3) sweep
+    // sweeps belong to the query's own snapshot set and are held to
+    // query end. High-water = 1 edge freeze + Iters (3) sweep
     // freezes = 4 graft-owned snapshots, and release must free them all
     val created = persistedIds -- before
     assert(created.size == 4,

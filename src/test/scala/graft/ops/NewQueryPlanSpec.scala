@@ -298,6 +298,28 @@ class NewQueryPlanSpec extends AnyFunSuite with SparkTestSession {
       s"pair expansion must be the postings transform, never a cartesian:\n$p")
   }
 
+  test("q126 shares ONE (da, db) exchange across its distinct, window and rollups") {
+    val p = plan("q126_repeated_spans")
+    val pairKeyed = "Exchange hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(p)
+      .map(_.group(1)).filter(_.startsWith("da#")).toList
+    assert(pairKeyed.size == 1 && pairKeyed.head.matches("da#\\d+L?, db#\\d+L?, \\d+"),
+      s"expected exactly one hash exchange, on (da, db), for the pair stages; " +
+        s"got $pairKeyed:\n$p")
+  }
+
+  test("q190's lazy sweep freezes keep its plan small") {
+    // unfrozen, each sweep re-embedded its upstream tree twice (the
+    // broadcast total and the per-node division): 2,091 plan lines with
+    // 40 SortMergeJoins by the last sweep. Frozen, the returned plan reads
+    // only the h2g/a2g snapshots: 22 lines, no keyed join, no scan
+    val df = graft.SparkEntry.queries("q190_hits_bipartite")(spark, d)
+    val p = df.queryExecution.executedPlan.toString
+    val lines = p.linesIterator.size
+    assert(lines <= 60 && !p.contains("SortMergeJoin") && !p.contains("Scan parquet"),
+      s"q190's plan grew back toward the unfrozen shape ($lines lines):\n$p")
+    graft.Checkpoints.release(df)
+  }
+
   private def windowsPartitionBy(p: String, keys: String*): Unit = {
     val windows = p.linesIterator.filter(_.contains("windowspecdefinition")).toList
     assert(windows.nonEmpty, s"expected a window in:\n$p")
