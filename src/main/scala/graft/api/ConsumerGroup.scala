@@ -14,8 +14,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   *   - `logRoot`   — sharded-stream log root (the Kinesis data plane)
   *   - `checkpointRoot` — offset store root (≈ the DynamoDB state store;
   *                   here the Structured Streaming offset WAL)
-  *   - `scanLimit` — per-shard records per micro-batch
-  *                   (≈ `Config.ScanLimit`, default 2000)
+  *   - `scanLimit` — at most this many records per shard per micro-batch,
+  *                   gapped sequences too (≈ `Config.ScanLimit`, default 2000)
   *   - `scanIntervalMs` — trigger cadence (≈ `Config.ScanInterval`)
   *   - `startFromLatest` — `LATEST` vs `TRIM_HORIZON` start
   *                   (≈ `GetShardIterator` mode, `kinesumer.go:706-729`)

@@ -1,10 +1,13 @@
 package graft.source
 
 import java.nio.charset.StandardCharsets
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.util.Base64
 import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** The on-disk sharded stream log — this environment's stand-in for the
   * Kinesis data plane (zero egress). Layout:
@@ -14,9 +17,11 @@ import scala.jdk.CollectionConverters._
   *   <root>/<stream>/<shardId>/_CLOSED       marker: shard is closed (resharded)
   * }}}
   *
-  * Each record line: `seq \t partitionKey \t arrivalEpochMs \t base64(data)`.
-  * Sequence numbers are monotonically increasing per shard — the analog of
-  * the Kinesis per-shard `SequenceNumber` the reference checkpoints
+  * Each record line: `seq \t partitionKey \t arrivalEpochMs \t base64(data)`,
+  * written only by [[append]] and read only through [[RecordCursor]], which
+  * holds the rule for what a record line is. Sequence numbers are
+  * monotonically increasing per shard — the analog of the Kinesis
+  * per-shard `SequenceNumber` the reference checkpoints
   * (`/root/reference/statemodel.go:40-45`). A closed shard keeps its tail
   * readable until drained — unlike the reference, which filters closed
   * shards out before reading and can drop their tails
@@ -47,6 +52,12 @@ object ShardedStreamLog {
     val seqs = records.map(_.sequenceNumber)
     require(seqs.zip(seqs.drop(1)).forall { case (a, b) => a < b },
       s"append to $stream/$shard must be strictly sequence-ascending")
+    // a tab or line break in a key would shift or split the record's line
+    val badKey = records.iterator.map(_.partitionKey)
+      .find(k => k != null && k.exists(c => c == '\t' || c == '\n' || c == '\r'))
+    require(badKey.isEmpty, s"append to $stream/$shard: partition key '" +
+      badKey.get.replace("\t", "\\t").replace("\n", "\\n").replace("\r", "\\r") +
+      "' holds a tab or line break")
     // O(1) invariant check: the last line of a monotone log holds its max
     // (a full maxSequence/advance here would parse the whole history on a
     // fresh writer JVM)
@@ -160,82 +171,157 @@ object ShardedStreamLog {
     }
   }
 
-  /** Sequence number of the file's last complete line (its max, since the
+  /** Sequence number of the file's last record line (its max, since the
     * log is monotone), or -1 for a missing/empty file — reads only the
     * file tail.
     */
   private def lastSequence(f: Path): Long = {
     if (!Files.exists(f)) return -1L
     val size = Files.size(f)
-    if (size == 0) return -1L
-    // Grow the tail window until it holds a complete line (or covers the
-    // whole file): a single record line larger than the initial window —
-    // a base64 payload past ~48 KB — must not read as "no records"
-    // (returning -1 would let append's monotonicity guard pass silently).
-    // The window is capped below Int.MaxValue: ByteBuffer.allocate takes
-    // an int, so a > 2 GiB file with no parseable line in its tail must
-    // give up rather than request a negative-sized buffer.
-    val maxWindow = math.min(size, (Int.MaxValue - 8).toLong)
-    var window = math.min(maxWindow, 64L * 1024)
-    while (true) {
-      val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-      val tail = try {
-        ch.position(size - window)
-        val buf = java.nio.ByteBuffer.allocate(window.toInt)
-        while (buf.hasRemaining && ch.read(buf) >= 0) {}
-        new String(buf.array(), 0, buf.position(), StandardCharsets.UTF_8)
-      } finally ch.close()
-      // last complete (newline-terminated) line wins; append always writes
-      // a trailing \n, so only a concurrent partial append lacks one. The
-      // final split element is that partial tail (or "" after \n) — drop
-      // it; the first may be clipped by the window start — drop it too
-      // unless the window covers the whole file.
-      val lines = tail.split("\n", -1).dropRight(1)
-      val complete = if (window < size) lines.drop(1) else lines
-      val found = complete.reverseIterator
-        .find(l => l.nonEmpty && l.indexOf('\t') > 0)
-        .map(l => l.substring(0, l.indexOf('\t')).toLong)
-      found match {
-        case Some(seq) => return seq
-        case None if window >= maxWindow => return -1L
-        case None => window = math.min(maxWindow, window * 2)
+    // Grow the tail window from 4 KiB until it holds a complete record line
+    // (or covers the whole file): a single record line larger than the
+    // window must not read as "no records" (returning -1 would let
+    // append's monotonicity guard pass silently).
+    var window = 0L
+    var last = -1L
+    while (last < 0 && window < size) {
+      window = math.min(size, math.max(4096L, window * 2))
+      // a window inside the file may start inside a line: step over it
+      Using.resource(new RecordCursor(f, size - window, size)) { c =>
+        if (window == size || c.skipLine()) while (c.next()) last = c.seq
       }
     }
-    -1L // unreachable
+    last
+  }
+
+  // -------------------------------------------------------------------
+  // The record-line reader: every read of a shard file walks one cursor,
+  // which holds the line format's rules in one place.
+  //   - A line ends at '\n'. A line crossing the caller's size snapshot (or
+  //     the end of the file) is a concurrent partial append: the cursor
+  //     stops before it, never parsing it (a truncated base64 payload can
+  //     decode "successfully" into corrupt data).
+  //   - A record line starts with one or more ASCII digits, its sequence
+  //     number, and a '\t' (append's guard admits only sequences ≥ 0). Any
+  //     other complete line is stepped over.
+  //   - Offsets count bytes. Every byte stepped over joins [[bytesScanned]].
+  //   - Key and payload are decoded only for a caller that asks.
+  // It reads in chunks of up to 64 KiB, never past `limit`.
+
+  private final class RecordCursor(f: Path, from: Long, limit: Long) extends AutoCloseable {
+    private val ch = FileChannel.open(f, StandardOpenOption.READ)
+    private var buf = new Array[Byte](math.max(1L, math.min(64L * 1024, limit - from)).toInt)
+    private var bufOff = from // file offset of buf(0)
+    private var filled = 0 // bytes of buf read from the file
+    private var pos = 0 // start of the first line not yet stepped over
+    // the current record line is buf[start, nl), its first tab at tab1
+    private var start, nl, tab1 = 0
+    /** Sequence number of the current record line. */
+    var seq: Long = -1L
+
+    /** Byte offset of the current record line. */
+    def offset: Long = bufOff + start
+
+    /** Byte offset just past the last line stepped over. */
+    def end: Long = bufOff + pos
+
+    /** Step to the next record line; false once no complete line is left. */
+    def next(): Boolean = {
+      while (true) {
+        val e = newline()
+        if (e < 0) return false
+        val s = pos
+        pos = e + 1
+        var i = s
+        var v = 0L
+        while (i < e && buf(i) >= '0' && buf(i) <= '9') { v = v * 10 + (buf(i) - '0'); i += 1 }
+        if (i > s && buf(i) == '\t') { start = s; nl = e; tab1 = i; seq = v; return true }
+      }
+      false
+    }
+
+    /** Step over one line, record or not; false when none is complete. */
+    def skipLine(): Boolean = { val e = newline(); if (e >= 0) pos = e + 1; e >= 0 }
+
+    def arrivalMs: Long = { val t2 = tabAfter(tab1); arrival(t2, tabAfter(t2)) }
+
+    def record: LogRecord = {
+      val t2 = tabAfter(tab1)
+      val t3 = tabAfter(t2)
+      val data = Base64.getDecoder.decode(ByteBuffer.wrap(buf, t3 + 1, nl - t3 - 1))
+      LogRecord(seq, new String(buf, tab1 + 1, t2 - tab1 - 1, StandardCharsets.UTF_8),
+        arrival(t2, t3), java.util.Arrays.copyOf(data.array, data.limit))
+    }
+
+    def close(): Unit = { bytesScanned.addAndGet(end - from); ch.close() }
+
+    private def arrival(t2: Int, t3: Int): Long =
+      java.lang.Long.parseLong(new String(buf, t2 + 1, t3 - t2 - 1, StandardCharsets.US_ASCII))
+
+    private def tabAfter(t: Int): Int = {
+      var j = t + 1
+      while (j < nl && buf(j) != '\t') j += 1
+      if (j == nl) throw new IllegalStateException(
+        s"record line at byte $offset of $f has fewer than four fields")
+      j
+    }
+
+    /** Index in buf of the '\n' ending the line at `pos`, reading on as
+      * needed; -1 when that line is not complete before the limit.
+      */
+    private def newline(): Int = {
+      var i = pos
+      while (true) {
+        while (i < filled) { if (buf(i) == '\n') return i; i += 1 }
+        // move the unread bytes to the buffer's head (doubling it when one
+        // line fills it), then read on
+        System.arraycopy(buf, pos, buf, 0, filled - pos)
+        bufOff += pos; filled -= pos; i -= pos; pos = 0
+        if (filled == buf.length)
+          buf = java.util.Arrays.copyOf(buf, math.min(buf.length * 2L, Int.MaxValue - 8L).toInt)
+        val want = math.min(buf.length - filled, limit - bufOff - filled)
+        val n = if (want <= 0) -1 else ch.read(ByteBuffer.wrap(buf, filled, want.toInt), bufOff + filled)
+        if (n <= 0) return -1
+        filled += n
+      }
+      -1
+    }
   }
 
   // -------------------------------------------------------------------
   // Incremental index. The log is append-only with per-shard monotone
   // sequence numbers, so each JVM (driver or executor) keeps, per file, the
   // byte position scanned so far, the max sequence seen, the record count,
-  // and sparse (sequence → byte offset, ordinal) checkpoints every
+  // and sparse (sequence, byte offset, ordinal) checkpoints every
   // [[IndexEveryBytes]]. A trigger's `maxSequence` then costs O(new bytes)
   // instead of O(history); `read` seeks to the nearest checkpoint ≤ afterSeq
-  // and stops at the first record > untilSeq, and `countRange` ranks a
-  // bound from the same checkpoint — never rescanning full history.
+  // and stops at the first record > untilSeq, `countRange` ranks a bound
+  // from the same checkpoint, and `nthSequenceAfter` walks from the
+  // checkpoint at or below an ordinal — never rescanning full history.
 
   private val IndexEveryBytes: Long = 64L * 1024
+
+  /** The record at byte `offset`; `ordinal` records precede it. */
+  private final case class Checkpoint(seq: Long, offset: Long, ordinal: Long)
 
   private final class ShardIndex {
     var scannedBytes: Long = 0L
     var maxSeq: Long = -1L
     // records parsed so far — the ordinal of the next record
     var records: Long = 0L
-    var lastCkptBytes: Long = -IndexEveryBytes
     // first bytes of the file when first scanned — identity signal to
     // catch a file that was deleted and recreated at equal-or-larger size
     // (size alone would keep the stale index and yield wrong reads)
     var identity: Array[Byte] = null
-    // (sequence of the record starting at byte offset, byte offset, its
-    // ordinal = records before it); the first record always gets one
-    val checkpoints = new java.util.ArrayList[Array[Long]]()
+    // ascending in every field; the first record always gets one
+    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[Checkpoint]
     // byte offset + sequence of the LAST record parsed — the identity
     // spot-probe target: matching here means the file agrees with the
     // index at the scan frontier, not merely at the head
     var lastRecOff: Long = -1L
     var lastRecSeq: Long = -1L
     def reset(): Unit = {
-      scannedBytes = 0L; maxSeq = -1L; records = 0L; lastCkptBytes = -IndexEveryBytes
+      scannedBytes = 0L; maxSeq = -1L; records = 0L
       identity = null
       lastRecOff = -1L
       lastRecSeq = -1L
@@ -262,34 +348,22 @@ object ShardedStreamLog {
     } catch { case _: java.nio.file.NoSuchFileException => Array.emptyByteArray }
   }
 
-  /** Parse the sequence number of the record starting at byte `off`, or
-    * -1 if there is none (including a concurrent-delete race) — an O(1)
+  /** Sequence number of the record line starting at byte `off`, or -1 if
+    * there is none (including a concurrent-delete race) — an O(1)
     * spot-probe used to re-verify a file's logical identity without
     * rescanning it.
     */
   private def seqAt(f: Path, off: Long): Long =
     try {
-      val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-      try {
-        ch.position(off)
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          java.nio.channels.Channels.newInputStream(ch), StandardCharsets.UTF_8), 256)
-        val line = in.readLine()
-        if (line == null) -1L
-        else {
-          val tab = line.indexOf('\t')
-          if (tab > 0)
-            try line.substring(0, tab).toLong
-            catch { case _: NumberFormatException => -1L }
-          else -1L
-        }
-      } finally ch.close()
+      Using.resource(new RecordCursor(f, off, Files.size(f))) { c =>
+        if (c.next() && c.offset == off) c.seq else -1L
+      }
     } catch { case _: java.nio.file.NoSuchFileException => -1L }
 
   /** Whether `f` is (still) the log this index was built from: the head
     * bytes captured at first scan must be unchanged AND the record at
     * the SCAN FRONTIER (the last record the index parsed) must still
-    * start with the sequence captured there — one ~256-byte read at a
+    * start with the sequence captured there — one small read at a
     * known offset per trigger. A recreated file that diverges anywhere
     * before the frontier shifts its record boundaries, so it would have
     * to reproduce that exact (offset, sequence) coincidence under
@@ -340,43 +414,20 @@ object ShardedStreamLog {
         // non-atomic recreate in flight) resets instead of killing the
         // streaming query; the next trigger sees the new file — POSIX
         // keeps an already-open fd readable, so only the open can race
-        val ch = try java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-        catch { case _: java.nio.file.NoSuchFileException => idx.reset(); return idx }
-        try {
-          ch.position(idx.scannedBytes)
-          val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-            java.nio.channels.Channels.newInputStream(ch),
-            StandardCharsets.UTF_8), 1 << 16)
-          var pos = idx.scannedBytes
-          var line = in.readLine()
-          var stop = false
-          while (line != null && !stop) {
-            val lineBytes = line.getBytes(StandardCharsets.UTF_8).length + 1L
-            // a line crossing the size snapshot is a concurrent partial
-            // append — leave it for the next advance
-            if (pos + lineBytes > size) stop = true
-            else {
-              if (line.nonEmpty) {
-                val tab = line.indexOf('\t')
-                if (tab > 0) {
-                  val seq = line.substring(0, tab).toLong
-                  if (seq > idx.maxSeq) idx.maxSeq = seq
-                  idx.lastRecOff = pos
-                  idx.lastRecSeq = seq
-                  if (pos - idx.lastCkptBytes >= IndexEveryBytes) {
-                    idx.checkpoints.add(Array(seq, pos, idx.records))
-                    idx.lastCkptBytes = pos
-                  }
-                  idx.records += 1
-                }
-              }
-              pos += lineBytes
-              bytesScanned.addAndGet(lineBytes)
-              line = in.readLine()
-            }
+        try Using.resource(new RecordCursor(f, idx.scannedBytes, size)) { c =>
+          while (c.next()) {
+            val pos = c.offset
+            if (c.seq > idx.maxSeq) idx.maxSeq = c.seq
+            idx.lastRecOff = pos
+            idx.lastRecSeq = c.seq
+            if (idx.checkpoints.isEmpty || pos - idx.checkpoints.last.offset >= IndexEveryBytes)
+              idx.checkpoints += Checkpoint(c.seq, pos, idx.records)
+            idx.records += 1
           }
-          idx.scannedBytes = pos
-        } finally ch.close()
+          // the cursor stopped after the last complete line: a line
+          // crossing the size snapshot is left for the next advance
+          idx.scannedBytes = c.end
+        } catch { case _: java.nio.file.NoSuchFileException => idx.reset() }
       }
       idx
     }
@@ -418,32 +469,11 @@ object ShardedStreamLog {
   def seqBeforeTimestamp(root: String, stream: String, shard: String, tsMs: Long): Long = {
     val f = recordsFile(root, stream, shard)
     if (!Files.exists(f)) return -1L
-    val size = Files.size(f)
-    val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-    try {
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-        java.nio.channels.Channels.newInputStream(ch),
-        StandardCharsets.UTF_8), 1 << 16)
-      var pos = 0L
+    Using.resource(new RecordCursor(f, 0L, Files.size(f))) { c =>
       var prevSeq = -1L
-      var line = in.readLine()
-      while (line != null) {
-        val lineBytes = line.getBytes(StandardCharsets.UTF_8).length + 1L
-        // a line crossing the size snapshot is a concurrent partial append
-        if (pos + lineBytes > size) return prevSeq
-        if (line.nonEmpty) {
-          val parts = line.split("\t", 4)
-          if (parts.length >= 3) {
-            val seq = parts(0).toLong
-            if (parts(2).toLong >= tsMs) return prevSeq
-            prevSeq = seq
-          }
-        }
-        pos += lineBytes
-        line = in.readLine()
-      }
+      while (c.next() && c.arrivalMs < tsMs) prevSeq = c.seq
       prevSeq
-    } finally ch.close()
+    }
   }
 
   /** [[seqBeforeTimestamp]] over many shards in parallel — same flat-in-
@@ -453,18 +483,6 @@ object ShardedStreamLog {
       shards: Iterable[String], tsMs: Long): Map[String, Long] = {
     import scala.collection.parallel.CollectionConverters._
     shards.par.map(sh => sh -> seqBeforeTimestamp(root, stream, sh, tsMs)).toMap.seq
-  }
-
-  /** The last index checkpoint with sequence ≤ `seq`, or null when `seq`
-    * lies below the shard's first record. Caller holds `idx`'s lock.
-    */
-  private def checkpointAtOrBelow(idx: ShardIndex, seq: Long): Array[Long] = {
-    var ck: Array[Long] = null
-    var i = 0
-    while (i < idx.checkpoints.size && idx.checkpoints.get(i)(0) <= seq) {
-      ck = idx.checkpoints.get(i); i += 1
-    }
-    ck
   }
 
   /** Number of records with sequence in (afterSeq, untilSeq] — what
@@ -485,43 +503,41 @@ object ShardedStreamLog {
     }
   }
 
+  /** Sequence of the `n`-th record (n ≥ 1) after `afterSeq`, or the
+    * indexed head when fewer than `n` follow it: where a batch of at most
+    * `n` records ends. Ranks `afterSeq`, then walks from the checkpoint at
+    * or below the wanted ordinal — at most two index intervals of scanning.
+    */
+  private[source] def nthSequenceAfter(root: String, stream: String, shard: String,
+      afterSeq: Long, n: Long): Long = {
+    val f = recordsFile(root, stream, shard)
+    if (!Files.exists(f)) return -1L
+    val idx = advance(f)
+    val want = rank(f, idx, afterSeq) + n - 1
+    val (total, head, ck, frontier) = idx.synchronized {
+      (idx.records, idx.maxSeq, idx.checkpoints.findLast(_.ordinal <= want).orNull, idx.scannedBytes)
+    }
+    if (want >= total || ck == null) head
+    else Using.resource(new RecordCursor(f, ck.offset, frontier)) { c =>
+      var ordinal = ck.ordinal - 1
+      while (ordinal < want && c.next()) ordinal += 1
+      if (ordinal == want) c.seq else head
+    }
+  }
+
   /** Records with sequence ≤ `seq` among those `idx` has indexed. */
   private def rank(f: Path, idx: ShardIndex, seq: Long): Long = {
     val (total, head, ck, frontier) = idx.synchronized {
-      (idx.records, idx.maxSeq, checkpointAtOrBelow(idx, seq), idx.scannedBytes)
+      (idx.records, idx.maxSeq, idx.checkpoints.findLast(_.seq <= seq).orNull, idx.scannedBytes)
     }
     if (seq >= head) total
     else if (ck == null) 0L
-    else {
-      val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-      try {
-        ch.position(ck(1))
-        val in = new java.io.BufferedInputStream(
-          java.nio.channels.Channels.newInputStream(ch), 1 << 16)
-        var pos = ck(1)
-        var n = ck(2)
-        var done = false
-        // per line: parse the leading sequence, skip to '\n'. A record
-        // above `seq` exists before the frontier (seq < head), so the
-        // frontier only guards against a concurrent index reset
-        while (!done && pos < frontier) {
-          var s = 0L
-          var digits = 0
-          var b = in.read()
-          while (b >= '0' && b <= '9') {
-            s = s * 10 + (b - '0'); digits += 1; pos += 1; b = in.read()
-          }
-          val isRecord = b == '\t' && digits > 0
-          while (b != '\n' && b != -1) { pos += 1; b = in.read() }
-          if (b == -1) done = true
-          else {
-            pos += 1
-            if (isRecord) { if (s > seq) done = true else n += 1 }
-          }
-        }
-        bytesScanned.addAndGet(pos - ck(1))
-        n
-      } finally ch.close()
+    // a record above `seq` exists before the frontier (seq < head), so
+    // the frontier only guards against a concurrent index reset
+    else Using.resource(new RecordCursor(f, ck.offset, frontier)) { c =>
+      var n = ck.ordinal
+      while (c.next() && c.seq <= seq) n += 1
+      n
     }
   }
 
@@ -538,45 +554,17 @@ object ShardedStreamLog {
     else {
       val idx = advance(f)
       val startPos = idx.synchronized {
-        val ck = checkpointAtOrBelow(idx, afterSeq)
-        if (ck == null) 0L else ck(1)
+        idx.checkpoints.findLast(_.seq <= afterSeq).fold(0L)(_.offset)
       }
-      val out = scala.collection.mutable.ArrayBuffer.empty[LogRecord]
-      // snapshot the committed size: a line crossing it is a concurrent
-      // partial append — never parse it (a truncated base64 payload can
-      // decode "successfully" into corrupt data)
-      val size = Files.size(f)
-      val ch = java.nio.channels.FileChannel.open(f, StandardOpenOption.READ)
-      try {
-        ch.position(startPos)
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          java.nio.channels.Channels.newInputStream(ch),
-          StandardCharsets.UTF_8), 1 << 16)
-        var pos = startPos
-        var line = in.readLine()
-        var done = false
-        while (line != null && !done) {
-          val lineBytes = line.getBytes(StandardCharsets.UTF_8).length + 1L
-          if (pos + lineBytes > size) done = true
-          else {
-            if (line.nonEmpty) {
-              bytesScanned.addAndGet(lineBytes)
-              val parts = line.split("\t", 4)
-              val seq = parts(0).toLong
-              if (seq > untilSeq) done = true
-              else if (seq > afterSeq)
-                out += LogRecord(seq, parts(1), parts(2).toLong,
-                  Base64.getDecoder.decode(parts(3)))
-            }
-            pos += lineBytes
-            if (!done) line = in.readLine()
-          }
-        }
-      } finally ch.close()
-      // records are in sequence order by construction: append() enforces
-      // per-shard monotonicity, which the checkpoint seek and the early
-      // stop above already rely on
-      out.iterator
+      // the committed size snapshot: the cursor never parses a line
+      // crossing it (a concurrent partial append). Records come in sequence
+      // order by construction: append() enforces per-shard monotonicity,
+      // which the checkpoint seek and the early stop already rely on
+      Using.resource(new RecordCursor(f, startPos, Files.size(f))) { c =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[LogRecord]
+        while (c.next() && c.seq <= untilSeq) if (c.seq > afterSeq) out += c.record
+        out.iterator
+      }
     }
   }
 }

@@ -31,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     checkpoint dir; once a checkpoint exists it wins (exactly-once
   *     resume, no overlap with the positional start)
   *   - per-shard `maxRecordsPerShardPerBatch` ≈ `scanLimit`
-  *     (`kinesumer.go:29`)
+  *     (`kinesumer.go:29`): records per shard per batch, not sequence distance
   *   - one InputPartition per (stream, shard) per batch ≈ the per-shard
   *     consume goroutine (`kinesumer.go:615-622`)
   *   - closed shards drain to their last record and only then stop being
@@ -164,9 +164,11 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
   }
   private val startPosition: StartPosition =
     StartPosition.parse(options.getOrDefault("startingposition", "trim_horizon"))
-  // parity with the reference's defaultScanLimit (kinesumer.go:29)
+  // records per shard per batch; parity with the reference's
+  // defaultScanLimit (kinesumer.go:29)
   private val maxPerShard: Long =
     options.getLong("maxrecordspershardperbatch", 2000L)
+  require(maxPerShard > 0, s"option 'maxRecordsPerShardPerBatch' must be positive: $maxPerShard")
 
   /** Parallel head-probe of a stream's shards — see
     * [[ShardedStreamLog.maxSequences]] (shared with `ConsumerGroup.lag`):
@@ -273,8 +275,13 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
         // reshard never loses records (unlike the reference — SURVEY §2.3)
         val from = known.getOrElse(sh, -1L)
         val released = ShardedStreamLog.parents(root, s, sh).forall(parentDrained)
-        sh -> (if (released) math.max(from, math.min(servedHead(sh), from + maxPerShard))
-               else from)
+        val head = servedHead(sh)
+        // the limit counts records (kinesumer's GetRecords Limit): a range
+        // no wider in sequences than the limit needs no index walk
+        sh -> (if (!released) from
+               else if (head - from <= maxPerShard) math.max(from, head)
+               else math.max(from, math.min(head,
+                 ShardedStreamLog.nthSequenceAfter(root, s, sh, from, maxPerShard))))
       }.toMap
       // shards that vanished from disk keep their checkpoint entry
       s -> (known ++ next)

@@ -126,6 +126,9 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
       "both streams drain to their own query-start heads")
     assert(p1.records == Map("s1" -> 12L, "s2" -> 4L), s"progress: $p1")
     assert(p1.shards == Map("s1" -> 1L, "s2" -> 1L), s"progress: $p1")
+    // scanLimit counts records: s1 takes 5+5+2 and s2's four records fit
+    // in its first batch (not 20 empty batches of sequence distance 5)
+    assert(p1.batches <= 3L, s"progress: $p1")
     // a tail appended AFTER the drain belongs to the next run only
     ShardedStreamLog.append(root, "s2", "shard-0", (104L to 105L).map(rec))
     val p2 = cg.drain(Seq("s1", "s2")) { (df, _) =>
@@ -152,7 +155,7 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
     assert(Files.size(java.nio.file.Paths.get(root, "events", "shard-0", "records.tsv")) > 65536L)
     val seen = new ConcurrentLinkedQueue[Long]()
     val cg = new ConsumerGroup(spark, ConsumerConfig(app = "bf-gap",
-      logRoot = root, checkpointRoot = ck, scanLimit = 700L))
+      logRoot = root, checkpointRoot = ck, scanLimit = 250L))
     val collect: (org.apache.spark.sql.DataFrame, Long) => Unit = (df, _) =>
       df.select("sequence_number").collect().foreach(r => seen.add(r.getString(0).toLong))
     val p1 = cg.drain(Seq("events"))(collect)
@@ -175,7 +178,7 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
     ShardedStreamLog.append(root, "s1", "shard-1", gapped(rnd, 50L, 25))
     ShardedStreamLog.append(root, "s2", "shard-0", (100L to 103L).map(rec))
     val cg = new ConsumerGroup(spark, ConsumerConfig(app = "bf-ignore",
-      logRoot = root, checkpointRoot = ck, scanLimit = 60L))
+      logRoot = root, checkpointRoot = ck, scanLimit = 15L))
     val p = cg.drain(Seq("s1", "s2"))((_, _) => ())
     assert(p.records == Map("s1" -> 65L, "s2" -> 4L), s"progress: $p")
     assert(p.shards == Map("s1" -> 2L, "s2" -> 1L), s"progress: $p")

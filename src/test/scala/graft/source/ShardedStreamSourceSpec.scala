@@ -18,6 +18,13 @@ class ShardedStreamSourceSpec extends AnyFunSuite with SparkTestSession {
   private def rec(seq: Long, pk: String = "pk", ms: Long = 1700000000000L) =
     LogRecord(seq, pk, ms, s"payload-$seq".getBytes("UTF-8"))
 
+  // ~290-byte lines whose sequences step by 1–7 (never dense), with
+  // 3-byte UTF-8 characters in the key, so byte offsets differ from
+  // character offsets, and arrival times rising with the sequence
+  private def gapped(rnd: scala.util.Random, from: Long, n: Int): Seq[LogRecord] =
+    Iterator.iterate(from)(_ + 1 + rnd.nextInt(7)).take(n).map(s =>
+      LogRecord(s, s"키-$s", 1700000000000L + s, Array.fill(200)('z'.toByte))).toSeq
+
   private def freshDirs(): (String, String, String) =
     (Files.createTempDirectory("sslog").toString,
       Files.createTempDirectory("ssck").toString,
@@ -327,16 +334,13 @@ class ShardedStreamSourceSpec extends AnyFunSuite with SparkTestSession {
     val root = Files.createTempDirectory("sslog").toString
     val f = java.nio.file.Paths.get(root, "events", "shard-0", "records.tsv")
     val rnd = new scala.util.Random(11)
-    // ~290-byte lines whose sequences step by 1–7: never dense
-    def gapped(from: Long, n: Int): Seq[LogRecord] =
-      Iterator.iterate(from)(_ + 1 + rnd.nextInt(7)).take(n).map(s =>
-        LogRecord(s, s"pk$s", 1700000000000L, Array.fill(200)('z'.toByte))).toSeq
     // sequences starting an index interval: the first record, then the
     // first record at least 64 KiB past the previous checkpoint
     def checkpointSeqs(): Seq[Long] = {
       var pos = 0L
       var last = -65536L
-      new String(Files.readAllBytes(f), "US-ASCII").split("\n").toSeq.flatMap { l =>
+      // one char per byte, so a line's length is its byte count
+      new String(Files.readAllBytes(f), "ISO-8859-1").split("\n").toSeq.flatMap { l =>
         val ck = if (pos - last >= 65536) { last = pos; Some(l.takeWhile(_ != '\t').toLong) } else None
         pos += l.length + 1
         ck
@@ -348,10 +352,13 @@ class ShardedStreamSourceSpec extends AnyFunSuite with SparkTestSession {
       for (a <- bounds; b <- bounds if a <= b)
         assert(count(a, b) == readSize(a, b), s"countRange($a, $b)")
 
-    ShardedStreamLog.append(root, "events", "shard-0", gapped(10L, 900))
+    val written = gapped(rnd, 10L, 900)
+    ShardedStreamLog.append(root, "events", "shard-0", written)
     assert(Files.size(f) > 200000L)
-    var seqs = ShardedStreamLog.read(root, "events", "shard-0", -1L, Long.MaxValue)
-      .map(_.sequenceNumber).toIndexedSeq
+    val recs = ShardedStreamLog.read(root, "events", "shard-0", -1L, Long.MaxValue).toIndexedSeq
+    assert(recs.map(r => (r.sequenceNumber, r.partitionKey, r.arrivalEpochMs, r.data.toSeq)) ==
+      written.map(r => (r.sequenceNumber, r.partitionKey, r.arrivalEpochMs, r.data.toSeq)))
+    var seqs = recs.map(_.sequenceNumber)
     val cks = checkpointSeqs()
     assert(cks.size >= 4, s"expected several index checkpoints: $cks")
     val head = seqs.last
@@ -362,13 +369,19 @@ class ShardedStreamSourceSpec extends AnyFunSuite with SparkTestSession {
     // every rank, on and between sequences, against the in-memory truth
     for (s <- seqs; b <- Seq(s - 1, s))
       assert(count(-1L, b) == seqs.count(_ <= b), s"rank of $b")
+    // the AT_TIMESTAMP start against the in-memory list, at and between
+    // arrivals, before the first and past the last
+    for (ts <- Seq(0L, recs.head.arrivalEpochMs, recs(gap).arrivalEpochMs + 1,
+        1700000000000L + midInterval, recs.last.arrivalEpochMs, recs.last.arrivalEpochMs + 1))
+      assert(ShardedStreamLog.seqBeforeTimestamp(root, "events", "shard-0", ts) ==
+        recs.filter(_.arrivalEpochMs < ts).lastOption.fold(-1L)(_.sequenceNumber), s"at $ts")
     // a rank scans sequence prefixes over at most one index interval
     val scanned0 = ShardedStreamLog.bytesScanned.get()
     count(-1L, midInterval)
     assert(ShardedStreamLog.bytesScanned.get() - scanned0 <= 65536L + 2 * 300L)
 
     // a further append advances the index: new checkpoints, new head
-    ShardedStreamLog.append(root, "events", "shard-0", gapped(head + 3L, 400))
+    ShardedStreamLog.append(root, "events", "shard-0", gapped(rnd, head + 3L, 400))
     seqs = ShardedStreamLog.read(root, "events", "shard-0", -1L, Long.MaxValue)
       .map(_.sequenceNumber).toIndexedSeq
     val cks2 = checkpointSeqs()
@@ -376,6 +389,73 @@ class ShardedStreamSourceSpec extends AnyFunSuite with SparkTestSession {
     val head2 = seqs.last
     assert(count(head, head2) == 400L)
     agree(Seq(-1L, midInterval, head, head + 1, cks2.last, head2, head2 + 1))
+  }
+
+  test("maxRecordsPerShardPerBatch counts records: on gapped shards every batch but the last carries the limit") {
+    val (root, ck, _) = freshDirs()
+    val rnd = new scala.util.Random(3)
+    val small = gapped(rnd, 4L, 23).map(_.sequenceNumber)
+    ShardedStreamLog.append(root, "events", "shard-0", small.map(rec(_)))
+    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+    val q = spark.readStream
+      .format("graft.source.ShardedStreamProvider")
+      .option("path", root)
+      .option("streams", "events")
+      .option("maxRecordsPerShardPerBatch", 5L)
+      .load()
+      .writeStream
+      .option("checkpointLocation", ck)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        val got = df.select("sequence_number").collect().map(_.getString(0).toLong).toSeq
+        batches.synchronized { batches += id -> got.sorted }
+        ()
+      }
+      .start()
+    assert(q.awaitTermination(120000), "AvailableNow query must stop on its own")
+    val served = batches.synchronized(batches.toSeq).sortBy(_._1).map(_._2).filter(_.nonEmpty)
+    assert(served.map(_.size) == Seq(5, 5, 5, 5, 3), s"batch sizes: ${served.map(_.size)}")
+    assert(served.flatten == small)
+
+    // planning alone on a 64 KiB+ gapped shard: each capped range crosses
+    // index checkpoints somewhere, and still holds exactly the limit
+    val big = gapped(rnd, 7L, 900).map(_.sequenceNumber)
+    ShardedStreamLog.append(root, "deep", "shard-0", big.map(rec(_)))
+    val mb = new ShardedStreamMicroBatch(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", root, "streams", "deep", "maxRecordsPerShardPerBatch", "5")))
+    def at(o: org.apache.spark.sql.connector.read.streaming.Offset): Long =
+      o.asInstanceOf[ShardedStreamOffset].positions("deep")("shard-0")
+    var cur = mb.initialOffset()
+    val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var end = mb.latestOffset(cur, mb.getDefaultReadLimit)
+    while (at(end) > at(cur)) {
+      sizes += big.count(s => s > at(cur) && s <= at(end))
+      cur = end
+      end = mb.latestOffset(cur, mb.getDefaultReadLimit)
+    }
+    assert(at(cur) == big.last)
+    assert(sizes.size == 180 && sizes.forall(_ == 5), s"range sizes: ${sizes.distinct}")
+  }
+
+  test("append rejects a partition key holding a tab or a line break") {
+    val root = Files.createTempDirectory("sslog").toString
+    val f = java.nio.file.Paths.get(root, "events", "shard-0", "records.tsv")
+    ShardedStreamLog.append(root, "events", "shard-0", Seq(rec(0L), rec(1L)))
+    val size = Files.size(f)
+    for (key <- Seq("a\nb", "x\ty", "c\rd")) {
+      val e = intercept[IllegalArgumentException] {
+        ShardedStreamLog.append(root, "events", "shard-0", Seq(rec(2L), rec(3L, key)))
+      }
+      assert(e.getMessage.contains("events/shard-0") &&
+        e.getMessage.contains(key.replace("\t", "\\t").replace("\n", "\\n").replace("\r", "\\r")),
+        e.getMessage)
+      assert(Files.size(f) == size, s"key ${key.map(_.toInt)} wrote bytes before it was rejected")
+    }
+    assert(ShardedStreamLog.maxSequence(root, "events", "shard-0") == 1L)
+    assert(ShardedStreamLog.read(root, "events", "shard-0", -1L, Long.MaxValue)
+      .map(_.sequenceNumber).toSeq == Seq(0L, 1L))
+    ShardedStreamLog.append(root, "events", "shard-0", Seq(rec(2L, "키")))
+    assert(ShardedStreamLog.read(root, "events", "shard-0", 1L, 2L).map(_.partitionKey).toSeq == Seq("키"))
   }
 
   test("trigger planning stays sub-second at 5k shards") {
