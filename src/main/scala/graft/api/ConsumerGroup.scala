@@ -455,15 +455,16 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     */
   def processAllAvailable(): Unit = active.foreach(_._1.processAllAvailable())
 
-  /** Consumer lag per (stream, shard): the SEQUENCE DISTANCE between the
-    * log's newest record and the last COMMITTED batch's end offset — the
-    * monitoring metric the reference left as an open TODO
-    * (`/root/reference/kinesumer.go:128`; Kinesis exposes the analogous
-    * MillisBehindLatest). Reads the running query's committed end offset
-    * (the offset-WAL JSON surfaced through `lastProgress`) and the log's
-    * incremental max-sequence index — O(new bytes), driver-side only.
-    * With dense sequences the distance equals the record backlog; shards
-    * never read yet report maxSeq − (−1). Committed-but-empty logs and a
+  /** Consumer lag per (stream, shard): the number of records after the
+    * last COMMITTED batch's end offset — the monitoring metric the
+    * reference left as an open TODO (`kinesumer.go:128`; Kinesis exposes
+    * the analogous MillisBehindLatest). Reads the running query's
+    * committed end offset (the offset-WAL JSON surfaced through
+    * `lastProgress`) and counts the records above it from the log's
+    * incremental index (`ShardedStreamLog.countRange`) — O(new bytes plus
+    * one index interval), driver-side only. Sequences need not be dense,
+    * so this is a record count, not a sequence distance; shards never
+    * read yet report every record. Committed-but-empty logs and a
     * not-yet-started consumer report 0 / an empty map respectively.
     *
     * `lastProgress` is null until the running query's FIRST trigger
@@ -490,16 +491,16 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
           else try walCommittedPositions()
           catch { case scala.util.control.NonFatal(_) => Map.empty }
         }
+      import scala.collection.parallel.CollectionConverters._
       streams.flatMap { stream =>
         val shards = graft.source.ShardedStreamLog.listShards(cfg.logRoot, stream).keys
-        // parallel head-probe (shared with the source's offset planning):
-        // a sequential per-shard loop would make this monitoring call
-        // linear in shard count
-        val maxSeqs = graft.source.ShardedStreamLog.maxSequences(cfg.logRoot, stream, shards)
-        maxSeqs.map { case (shard, maxSeq) =>
-          val done = committed.getOrElse(stream, Map.empty).getOrElse(shard, -1L)
-          (stream, shard) -> math.max(0L, maxSeq - done)
-        }
+        val done = committed.getOrElse(stream, Map.empty)
+        // parallel per-shard count: a sequential loop would make this
+        // monitoring call linear in shard count
+        shards.toSeq.par.map { shard =>
+          (stream, shard) -> graft.source.ShardedStreamLog.countRange(
+            cfg.logRoot, stream, shard, done.getOrElse(shard, -1L), Long.MaxValue)
+        }.seq
       }.toMap
   }
 

@@ -4,9 +4,8 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared LSH building blocks, used by the batch dedup operators here,
-  * the decontamination join (`Pipeline` q62) and the streaming candidate
-  * detector (`streaming.StreamOps`).
+/** Shared LSH building blocks, used by the batch dedup operators here
+  * and the decontamination join (`Pipeline` q62).
   */
 private[graft] object Lsh {
 

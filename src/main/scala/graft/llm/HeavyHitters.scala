@@ -29,18 +29,12 @@ import scala.jdk.CollectionConverters._
   */
 object HeavyHitters {
 
-  /** Pass 1: per-partition Misra–Gries candidates (≤ `counters` per
-    * partition). Decrement-all is amortized O(1)/item: each sweep removes
-    * `counters` units that matching increments previously added.
-    */
   /** One Misra–Gries update on a mutable counter map: increment a
-    * tracked item, admit while below capacity, else decrement-all.
-    * Shared by the batch sketch pass and the streaming
-    * `StreamOps.heavyHitterSketch` twin, so both carry the identical
-    * undercount bound (≤ n/(counters+1) per item over the updates the
-    * map has absorbed).
+    * tracked item, admit while below capacity, else decrement-all. The
+    * undercount bound is ≤ n/(counters+1) per item over the updates the
+    * map has absorbed.
     */
-  def mgUpdate(counts: java.util.HashMap[String, Long], x: String,
+  private def mgUpdate(counts: java.util.HashMap[String, Long], x: String,
       counters: Int): Unit = {
     val cur = counts.get(x)
     if (cur != 0L || counts.containsKey(x)) counts.put(x, cur + 1L)
@@ -55,6 +49,10 @@ object HeavyHitters {
     }
   }
 
+  /** Pass 1: per-partition Misra–Gries candidates (≤ `counters` per
+    * partition). Decrement-all is amortized O(1)/item: each sweep removes
+    * `counters` units that matching increments previously added.
+    */
   def candidates(items: DataFrame, itemCol: String, counters: Int): DataFrame = {
     require(counters >= 1, s"counters must be >= 1 (got $counters)")
     val spark = items.sparkSession

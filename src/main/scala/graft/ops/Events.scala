@@ -4569,9 +4569,9 @@ object Events {
 
     // ------------------------------------------------------------------
     // q341: GROUP-SEQUENTIAL STOPPING AUDIT — the "peeking" guard: a
-    // team reading the daily dashboard (q199 / the live abSnapshotOf)
-    // every day runs MANY correlated tests, so the nominal 1.96 cut
-    // inflates false positives severalfold; group-sequential monitoring
+    // team reading the daily dashboard (q199) every day runs MANY
+    // correlated tests, so the nominal 1.96 cut inflates false
+    // positives severalfold; group-sequential monitoring
     // replays the daily looks per nation and applies a fixed
     // conservative boundary |z| > 2.5 (z² > 6.25, the
     // Pocock-style constant-boundary discipline) to report WHEN each

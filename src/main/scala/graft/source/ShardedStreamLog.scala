@@ -446,8 +446,7 @@ object ShardedStreamLog {
     * index is lock-striped (ConcurrentHashMap + per-index synchronized),
     * so distinct shards never serialize on each other. A sequential loop
     * makes the caller linear in shard count — fine at 5 shards, a stall
-    * at 10k — so every many-shard caller (trigger planning, lag) goes
-    * through here.
+    * at 10k — so trigger planning goes through here.
     */
   def maxSequences(
       root: String, stream: String, shards: Iterable[String]): Map[String, Long] = {

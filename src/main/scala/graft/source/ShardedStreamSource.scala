@@ -171,8 +171,8 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
   require(maxPerShard > 0, s"option 'maxRecordsPerShardPerBatch' must be positive: $maxPerShard")
 
   /** Parallel head-probe of a stream's shards — see
-    * [[ShardedStreamLog.maxSequences]] (shared with `ConsumerGroup.lag`):
-    * offset planning stays flat in shard count.
+    * [[ShardedStreamLog.maxSequences]]: offset planning stays flat in
+    * shard count.
     */
   private def probeHeads(stream: String, shards: Iterable[String]): Map[String, Long] =
     ShardedStreamLog.maxSequences(root, stream, shards)

@@ -241,6 +241,8 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
     val (root, ck) = newEnv()
     ShardedStreamLog.append(root, "events", "shard-0", (0L to 9L).map(rec))
     ShardedStreamLog.append(root, "events", "shard-1", (0L to 4L).map(rec))
+    // gapped sequences: lag counts records, not sequence distance
+    ShardedStreamLog.append(root, "events", "shard-2", (10L to 100L by 10L).map(rec))
     // a wide trigger interval keeps the background query from racing the
     // append→lag() window below (with the default 100 ms cadence a trigger
     // could commit the new records before lag() reads lastProgress)
@@ -252,15 +254,19 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
       cg.start(Seq("events")) { (df, _) => df.count(); () }
       cg.processAllAvailable()
       val drained = cg.lag()
-      assert(drained == Map(("events", "shard-0") -> 0L, ("events", "shard-1") -> 0L),
+      assert(drained == Map(("events", "shard-0") -> 0L, ("events", "shard-1") -> 0L,
+        ("events", "shard-2") -> 0L),
         s"drained consumer must report zero lag: $drained")
       // new records arrive but no trigger has committed them yet… the
-      // sequence distance surfaces immediately via the incremental index
+      // backlog surfaces immediately via the incremental index
       ShardedStreamLog.append(root, "events", "shard-0", (10L to 14L).map(rec))
-      val behind = cg.lag()(("events", "shard-0"))
-      assert(behind == 5L, s"expected 5 records behind, got $behind")
+      ShardedStreamLog.append(root, "events", "shard-2", Seq(110L, 120L).map(rec))
+      val behind = cg.lag()
+      assert(behind(("events", "shard-0")) == 5L, s"expected 5 records behind, got $behind")
+      assert(behind(("events", "shard-2")) == 2L,
+        s"expected 2 unread records on the gapped shard, got $behind")
       cg.processAllAvailable()
-      assert(cg.lag()(("events", "shard-0")) == 0L)
+      assert(cg.lag().values.forall(_ == 0L))
     } finally cg.close()
   }
 

@@ -6,7 +6,6 @@ import graft.SparkTestSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
@@ -201,29 +200,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
       (None, Some(3L), Some(ts(10)))))
   }
 
-  test("streamingNearDupCandidates pairs a document with near-dups from earlier batches") {
-    import spark.implicits._
-    val base = (1 to 30).map(i => s"tok$i").mkString(" ")
-    val input = MemoryStream[(Long, String)](spark)
-    val out = StreamOps.streamingNearDupCandidates(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text").toDF("a", "b")
-    spark.sql("DROP TABLE IF EXISTS snd_sink")
-    val q = out.writeStream.format("memory").queryName("snd_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: doc 1 and an unrelated doc 3
-      input.addData((1L, base), (3L, (100 to 140).map(i => s"other$i").mkString(" ")))
-      q.processAllAvailable()
-      val afterBatch1 = spark.table("snd_sink").count()
-      assert(afterBatch1 == 0, s"no near-dups yet, got $afterBatch1 pairs")
-      // batch 2: doc 2 is identical to doc 1 (same bands in every bucket)
-      input.addData((2L, base))
-      q.processAllAvailable()
-    } finally q.stop()
-    val pairs = spark.table("snd_sink").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 2L)), s"expected exactly the cross-batch pair, got $pairs")
-  }
-
   test("closedSessions emits on gap-crossing and on event-time timeout") {
     import spark.implicits._
     val input = MemoryStream[(Timestamp, Long)](spark)
@@ -330,1820 +306,5 @@ class StreamOpsSpec extends AnyFunSuite with SparkTestSession {
       .agg(max($"n_records").as("n"), max($"max_sequence").as("m"))
       .as[(String, String, Long, Long)].collect().toSeq.sorted
     assert(last == Seq(("events", "shard-0", 3L, 9L), ("events", "shard-1", 1L, 7L)))
-  }
-
-  test("burstAlerts fires once per (key, window) the moment the threshold is hit") {
-    import spark.implicits._
-    val input = MemoryStream[(Timestamp, Long)](spark)
-    val out = StreamOps.burstAlerts(
-      input.toDF().toDF("ts", "user_id"), "ts", "user_id",
-      windowMinutes = 60, threshold = 3, watermarkDelay = "0 seconds").toDF()
-    spark.sql("DROP TABLE IF EXISTS burst_sink")
-    val q = out.writeStream.format("memory").queryName("burst_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // user 1: two events — below threshold, no alert yet
-      input.addData((ts(0), 1L), (ts(10), 1L))
-      q.processAllAvailable()
-      // third event in the SAME window, a batch later → alert fires NOW
-      // (cross-batch count), with the count at crossing
-      input.addData((ts(20), 1L), (ts(20), 2L))
-      q.processAllAvailable()
-      // further events in the alerted window must NOT re-fire (latch)
-      input.addData((ts(25), 1L), (ts(30), 1L))
-      q.processAllAvailable()
-      // a new window bursts independently (3 events at once)
-      input.addData((ts(70), 1L), (ts(75), 1L), (ts(80), 1L))
-      q.processAllAvailable()
-      // overshoot contract: one batch carries the count from 1 past the
-      // threshold to 5 — n_events reports the END-OF-BATCH count (5),
-      // not the count at crossing (batch boundaries decide the number)
-      input.addData((ts(130), 7L))
-      q.processAllAvailable()
-      input.addData((ts(135), 7L), (ts(140), 7L), (ts(145), 7L), (ts(150), 7L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("burst_sink")
-      .as[(Long, Timestamp, Long)].collect().toSeq
-      .sortBy(r => (r._1, r._2.getTime))
-    assert(rows == Seq((1L, ts(0), 3L), (1L, ts(60), 3L), (7L, ts(120), 5L)),
-      s"got $rows")
-  }
-
-  test("funnelProgress replays buffered events in ts order — arrival order cannot skip steps") {
-    import spark.implicits._
-    val input = MemoryStream[(Timestamp, Long, Long, String)](spark)
-    val out = StreamOps.funnelProgress(
-      input.toDF().toDF("ts", "user_id", "event_id", "event_type"),
-      "ts", "user_id",
-      steps = Seq("signup", "view", "click", "purchase"),
-      watermarkDelay = "120 minutes").toDF()
-    spark.sql("DROP TABLE IF EXISTS funnel_sink")
-    val q = out.writeStream.format("memory").queryName("funnel_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: click@50 arrives BEFORE the view that enables it — an
-      // arrival-order automaton would discard it; watermark still low,
-      // so nothing is final and nothing may be emitted
-      input.addData((ts(0), 1L, 1L, "signup"), (ts(50), 1L, 2L, "click"),
-        (ts(60), 99L, 90L, "signup"))
-      q.processAllAvailable()
-      assert(spark.table("funnel_sink").filter($"user_id" === 1L).count() == 0,
-        "no event is final below the watermark — nothing to emit yet")
-      // batch 2: the missing view@10 arrives; flusher pushes wm to 180
-      // → all three finalize and replay in ts order: signup, view, click
-      input.addData((ts(10), 1L, 3L, "view"), (ts(300), 99L, 91L, "signup"))
-      q.processAllAvailable()
-      val mid = spark.table("funnel_sink").filter($"user_id" === 1L)
-        .select($"step", $"step_name", $"ts")
-        .as[(Int, String, Timestamp)].collect().sortBy(_._1)
-      assert(mid.toSeq == Seq((1, "signup", ts(0)), (2, "view", ts(10)),
-        (3, "click", ts(50))), s"got ${mid.toSeq}")
-      // batch 3: purchase@200 (after click@50) completes the funnel
-      input.addData((ts(200), 1L, 4L, "purchase"), (ts(500), 99L, 92L, "signup"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("funnel_sink").filter($"user_id" === 1L)
-      .select($"step", $"step_name", $"ts")
-      .as[(Int, String, Timestamp)].collect().sortBy(_._1)
-    assert(rows.toSeq == Seq((1, "signup", ts(0)), (2, "view", ts(10)),
-      (3, "click", ts(50)), (4, "purchase", ts(200))), s"got ${rows.toSeq}")
-  }
-
-  test("transitionEmitter bridges triggers and replays late events in ts order") {
-    import spark.implicits._
-    val input = MemoryStream[(Timestamp, Long, Long, String)](spark)
-    val out = StreamOps.transitionEmitter(
-      input.toDF().toDF("ts", "user_id", "event_id", "event_type"),
-      "ts", "user_id", watermarkDelay = "120 minutes").toDF()
-    spark.sql("DROP TABLE IF EXISTS trans_sink")
-    val q = out.writeStream.format("memory").queryName("trans_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // view@50 arrives before signup@10: finalized replay must order
-      // them signup -> view, not arrival order
-      input.addData((ts(0), 1L, 1L, "signup"), (ts(50), 1L, 2L, "click"),
-        (ts(60), 99L, 90L, "flush"))
-      q.processAllAvailable()
-      input.addData((ts(10), 1L, 3L, "view"), (ts(300), 99L, 91L, "flush"))
-      q.processAllAvailable()
-      // next trigger: purchase@200 must bridge from click@50 held in state
-      input.addData((ts(200), 1L, 4L, "purchase"), (ts(500), 99L, 92L, "flush"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("trans_sink").filter($"user_id" === 1L)
-      .select($"from_type", $"to_type", $"ts")
-      .as[(String, String, Timestamp)].collect().sortBy(_._3.getTime)
-    assert(rows.toSeq == Seq(
-      ("signup", "view", ts(10)), ("view", "click", ts(50)),
-      ("click", "purchase", ts(200))), s"got ${rows.toSeq}")
-    // equivalence with the batch lead-window form on the same events
-    val batch = Seq((ts(0), 1L, 1L, "signup"), (ts(50), 1L, 2L, "click"),
-      (ts(10), 1L, 3L, "view"), (ts(200), 1L, 4L, "purchase"))
-      .toDF("ts", "user_id", "event_id", "event_type")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val expected = batch
-      .withColumn("to_type", org.apache.spark.sql.functions.lead($"event_type", 1).over(w))
-      .filter($"to_type".isNotNull)
-      .select($"event_type", $"to_type")
-      .as[(String, String)].collect().toSeq.sorted
-    assert(rows.map(r => (r._1, r._2)).toSeq.sorted == expected)
-  }
-
-  test("latestValueStore: a late older record can never overwrite a newer value") {
-    import spark.implicits._
-    val input = MemoryStream[(Timestamp, Long, Long, Double)](spark)
-    val out = StreamOps.latestValueStore(
-      input.toDF().toDF("ts", "user_id", "event_id", "value"),
-      "ts", "user_id", "value", watermarkDelay = "120 minutes").toDF()
-    spark.sql("DROP TABLE IF EXISTS scd1_sink")
-    val q = out.writeStream.format("memory").queryName("scd1_sink")
-      .outputMode(OutputMode.Update).start()
-    try {
-      // v=10@0 and v=30@100 arrive; later the MISSING v=20@50 shows up.
-      // An arrival-order store would end at 20; event-time replay must
-      // end at 30.
-      input.addData((ts(0), 1L, 1L, 10.0), (ts(100), 1L, 2L, 30.0),
-        (ts(120), 99L, 90L, 0.0))
-      q.processAllAvailable()
-      input.addData((ts(50), 1L, 3L, 20.0), (ts(400), 99L, 91L, 0.0))
-      q.processAllAvailable()
-      input.addData((ts(600), 99L, 92L, 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("scd1_sink").filter($"user_id" === 1L)
-      .select($"value", $"versions", $"ts")
-      .as[(Double, Long, Timestamp)].collect().sortBy(_._2)
-    assert(rows.nonEmpty)
-    // final state: value 30 (ts 100), with all three versions counted
-    val last = rows.last
-    assert(last._1 == 30.0 && last._2 == 3L && last._3 == ts(100),
-      s"got $last from ${rows.toSeq}")
-    // no emitted row ever carries a value older than its version count
-    // implies (monotone versions per emission)
-    assert(rows.map(_._2).toSeq == rows.map(_._2).toSeq.sorted)
-  }
-
-  test("orphanRateAlerts fires once per finalized window that breaches the threshold") {
-    import spark.implicits._
-    val input = MemoryStream[(Timestamp, Long)](spark)
-    val dim = Seq(1L, 2L, 3L).toDF("c_custkey")
-    val out = StreamOps.orphanRateAlerts(
-      input.toDF().toDF("ts", "user_id"), dim,
-      "ts", "user_id", "c_custkey",
-      windowDuration = "1 hour", watermarkDelay = "30 minutes",
-      threshold = 0.5)
-    spark.sql("DROP TABLE IF EXISTS orphan_sink")
-    val q = out.writeStream.format("memory").queryName("orphan_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // window [0, 60): 1 known + 2 unknown users -> rate 2/3 >= 0.5
-      // window [60, 120): 2 known + 1 unknown -> rate 1/3 < 0.5
-      input.addData((ts(0), 1L), (ts(10), 999L), (ts(20), 888L),
-        (ts(70), 2L), (ts(80), 3L), (ts(90), 777L))
-      q.processAllAvailable()
-      // max ts 90 − 30 delay = watermark 60: the [0, 60) window is
-      // already final and breaches → exactly one alert; [60, 120) is
-      // still open
-      assert(spark.table("orphan_sink").count() == 1)
-      // flusher finalizes [60, 120): under threshold → NO new alert,
-      // and the finalized [0, 60) alert must not re-emit
-      input.addData((ts(300), 1L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("orphan_sink")
-      .select($"window_start", $"n_events", $"n_orphans", $"orphan_rate")
-      .as[(Timestamp, Long, Long, Double)].collect()
-    assert(rows.toSeq == Seq((ts(0), 3L, 2L, 2.0 / 3.0)),
-      s"expected exactly the [0,60) window to alert, got ${rows.toSeq}")
-  }
-
-  test("lastTouchAttribution matches the q153 window on a replayed fixture") {
-    import spark.implicits._
-    val d = "/root/testdata/sf0.001"
-    val lookbackUs = 7L * 24 * 3600 * 1000000L
-    val ev = graft.Tables(spark, d, "events")
-      .filter($"user_id" % 7 === 0)
-      .select($"ts".cast("timestamp").as("ts"), $"user_id", $"event_id", $"event_type", $"value")
-    // batch expectation: exactly q153's ignore-nulls window on the subset
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts", $"event_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val expected = ev
-      .withColumn("ts_us", expr("unix_micros(cast(ts AS timestamp))"))
-      .withColumn("prev_type", last(
-        when($"event_type" =!= "purchase", $"event_type"), ignoreNulls = true).over(w))
-      .withColumn("prev_ts_us", last(
-        when($"event_type" =!= "purchase", $"ts_us"), ignoreNulls = true).over(w))
-      .filter($"event_type" === "purchase")
-      .withColumn("channel", when($"prev_type".isNotNull &&
-        $"ts_us" - $"prev_ts_us" <= lookbackUs, $"prev_type").otherwise("organic"))
-      .select($"user_id", $"channel", $"value")
-      .as[(Long, String, Double)].collect().sorted.toSeq
-    assert(expected.nonEmpty, "fixture cohort has no purchases — widen it")
-    // stream: replay the same rows in three arrival-SHUFFLED chunks
-    // (each chunk reversed — arrival order is adversarial within the
-    // watermark horizon), then sentinels to flush the tail
-    val rows = ev.as[(Timestamp, Long, Long, String, Double)].collect()
-      .sortBy(r => (r._1.getTime, r._3))
-    val maxTs = rows.map(_._1.getTime).max
-    val chunks = rows.grouped(math.max(1, rows.length / 3)).map(_.reverse).toSeq
-    val input = MemoryStream[(Timestamp, Long, Long, String, Double)](spark)
-    val out = StreamOps.lastTouchAttribution(
-      input.toDF().toDF("ts", "user_id", "event_id", "event_type", "value"),
-      "ts", "user_id", "purchase", lookbackUs, "10 minutes")
-    spark.sql("DROP TABLE IF EXISTS attr_sink")
-    val q = out.writeStream.format("memory").queryName("attr_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      chunks.foreach { c => input.addData(c.toSeq); q.processAllAvailable() }
-      input.addData((new Timestamp(maxTs + 20L * 86400000), 999999999L, 0L, "view", 0.0))
-      q.processAllAvailable()
-      input.addData((new Timestamp(maxTs + 21L * 86400000), 999999999L, 1L, "view", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("attr_sink")
-      .filter($"user_id" =!= 999999999L)
-      .select($"user_id", $"channel", $"value")
-      .as[(Long, String, Double)].collect().sorted.toSeq
-    assert(got == expected,
-      s"stream/batch divergence: missing ${expected.diff(got).take(3)}, " +
-        s"extra ${got.diff(expected).take(3)}")
-  }
-
-  test("intervalCoverage islands reproduce the q166 batch coverage on a replayed fixture") {
-    import spark.implicits._
-    val d = "/root/testdata/sf0.001"
-    val halfHourUs = 1800000000L
-    val ev = graft.Tables(spark, d, "events")
-      .filter($"user_id" % 11 === 0)
-      .select($"ts".cast("timestamp").as("ts"), $"user_id", $"event_id")
-    // batch expectation: q166's gaps-and-islands on the subset
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val expected = ev
-      .withColumn("s_us", expr("unix_micros(cast(ts AS timestamp))"))
-      .withColumn("e_us", $"s_us" + halfHourUs)
-      .withColumn("prev_max_end", max($"e_us").over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)))
-      .withColumn("new_island", when($"prev_max_end".isNull ||
-        $"s_us" > $"prev_max_end", 1L).otherwise(0L))
-      .withColumn("island", sum($"new_island").over(
-        w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy($"user_id", $"island")
-      .agg(min($"s_us").as("i_start"), max($"e_us").as("i_end"))
-      .select($"user_id", ($"i_end" - $"i_start").as("dur"))
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(expected.nonEmpty)
-    val rows = ev.as[(Timestamp, Long, Long)].collect()
-      .sortBy(r => (r._1.getTime, r._3))
-    val maxTs = rows.map(_._1.getTime).max
-    val chunks = rows.grouped(math.max(1, rows.length / 3)).map(_.reverse).toSeq
-    val input = MemoryStream[(Timestamp, Long, Long)](spark)
-    val out = StreamOps.intervalCoverage(
-      input.toDF().toDF("ts", "user_id", "event_id"),
-      "ts", "user_id", halfHourUs, "10 minutes")
-    spark.sql("DROP TABLE IF EXISTS island_sink")
-    val q = out.writeStream.format("memory").queryName("island_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      chunks.foreach { c => input.addData(c.toSeq); q.processAllAvailable() }
-      input.addData((new Timestamp(maxTs + 20L * 86400000), 999999999L, 0L))
-      q.processAllAvailable()
-      input.addData((new Timestamp(maxTs + 21L * 86400000), 999999999L, 1L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("island_sink")
-      .filter($"user_id" =!= 999999999L)
-      .select($"user_id", $"duration_us")
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(got == expected,
-      s"stream/batch island divergence: missing ${expected.diff(got).take(3)}, " +
-        s"extra ${got.diff(expected).take(3)}")
-  }
-
-  test("drawdownAlerts agrees with the batch episode fold on shuffled arrivals") {
-    import spark.implicits._
-    val d = "/root/testdata/sf0.001"
-    val thresholdCents = 10000L
-    val ev = graft.Tables(spark, d, "events")
-      .filter(graft.Ids.hash("user_id") % 10 === 0)
-      .select(expr("cast(ts AS timestamp)").as("ts"), $"user_id",
-        $"event_id", $"value")
-    val rows = ev.as[(Timestamp, Long, Long, Double)].collect()
-    // batch reference: per user, event-ordered episode fold (alert on
-    // first breach, re-arm on a new peak) — q178's recurrence
-    val expected = rows.groupBy(_._2).toSeq.flatMap { case (u, es) =>
-      var peak = Long.MinValue; var armed = true
-      es.sortBy(e => (e._1.getTime, e._3)).flatMap { e =>
-        val vc = math.round(e._4 * 100)
-        if (vc > peak) { peak = vc; armed = true; None }
-        else if (armed && peak - vc >= thresholdCents) {
-          armed = false; Some((u, peak / 100.0, vc / 100.0))
-        } else None
-      }
-    }.sorted
-    assert(expected.nonEmpty, "fixture must produce at least one alert")
-    val maxTs = rows.map(_._1.getTime).max
-    val chunks = rows.sortBy(r => (r._1.getTime, r._3))
-      .grouped(math.max(1, rows.length / 3)).map(_.reverse).toSeq
-    val input = MemoryStream[(Timestamp, Long, Long, Double)](spark)
-    val out = StreamOps.drawdownAlerts(
-      input.toDF().toDF("ts", "user_id", "event_id", "value"),
-      "ts", "user_id", "value", thresholdCents, "10 minutes")
-    spark.sql("DROP TABLE IF EXISTS dd_sink")
-    val q = out.writeStream.format("memory").queryName("dd_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      chunks.foreach { c => input.addData(c.toSeq); q.processAllAvailable() }
-      input.addData((new Timestamp(maxTs + 30L * 86400000), 999999999L, 0L, 1.0))
-      q.processAllAvailable()
-      input.addData((new Timestamp(maxTs + 31L * 86400000), 999999999L, 1L, 1.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("dd_sink")
-      .filter($"user_id" =!= 999999999L)
-      .select($"user_id", $"peak_value", $"value")
-      .as[(Long, Double, Double)].collect().sorted.toSeq
-    assert(got == expected,
-      s"stream/batch drawdown divergence: missing ${expected.diff(got).take(3)}, " +
-        s"extra ${got.diff(expected).take(3)}")
-  }
-
-  test("heavyHitterSketch keeps every true heavy hitter with bounded undercount") {
-    import spark.implicits._
-    val buckets = 2
-    val counters = 3
-    // skewed universe: two genuinely heavy items + a one-off tail that
-    // forces decrement sweeps; split into 3 batches to prove the sketch
-    // state carries across micro-batches
-    val items = Seq.fill(60)("heavy_a") ++ Seq.fill(40)("heavy_b") ++
-      (1 to 50).map(i => s"tail_$i")
-    val batches = scala.util.Random.shuffle(items).grouped(50).toSeq
-    val input = MemoryStream[String](spark)
-    val out = StreamOps.heavyHitterSketch(
-      input.toDF().toDF("item"), "item", buckets, counters)
-    spark.sql("DROP TABLE IF EXISTS hh_sink")
-    val q = out.writeStream.format("memory").queryName("hh_sink")
-      .outputMode(OutputMode.Update).start()
-    try batches.foreach { b => input.addData(b); q.processAllAvailable() }
-    finally q.stop()
-    // latest snapshot per bucket = the one with the largest n_seen
-    val snaps = spark.table("hh_sink")
-      .as[StreamOps.HHSnapshot].collect()
-      .groupBy(_.bucket).map(_._2.maxBy(_.n_seen)).toSeq
-    // exact truth, bucketed exactly as the operator buckets
-    val truth = items.toDF("item")
-      .select($"item", pmod(graft.Ids.hash("item"), lit(buckets)).as("b"))
-      .groupBy($"item", $"b").count()
-      .as[(String, Long, Long)].collect()
-      .groupBy(_._2).map { case (b, xs) =>
-        b -> xs.map(x => x._1 -> x._3).toMap
-      }
-    assert(snaps.map(_.n_seen).sum == items.length)
-    assert(snaps.forall(_.candidates.size <= counters),
-      "state must stay bounded at `counters` entries per bucket")
-    snaps.foreach { s =>
-      val exact = truth(s.bucket)
-      val bound = s.n_seen / (counters + 1)
-      exact.foreach { case (item, c) =>
-        if (c > bound)
-          assert(s.candidates.contains(item),
-            s"bucket ${s.bucket}: heavy item $item (count $c > $bound) lost")
-        s.candidates.get(item).foreach { v =>
-          assert(v <= c && v >= c - bound,
-            s"bucket ${s.bucket}: $item estimate $v outside [${c - bound}, $c]")
-        }
-      }
-      // no phantom items: every candidate really occurred in this bucket
-      s.candidates.keySet.foreach(k => assert(exact.contains(k)))
-    }
-    // the two planted heavy hitters survive in their buckets
-    Seq("heavy_a", "heavy_b").foreach { h =>
-      assert(snaps.exists(_.candidates.contains(h)), s"$h missing from sketch")
-    }
-  }
-
-  test("ewmaLevels finalizes dense days and agrees with the dyadic batch recurrence") {
-    import spark.implicits._
-    def dayTs(day: Int, hour: Int = 12): Timestamp =
-      Timestamp.valueOf(f"2024-01-${1 + day}%02d $hour%02d:00:00")
-    // counts: day 0 ×3, day 1 ×1, day 3 ×5 (day 2 silent), day 20 ×100
-    val counts = Map(0 -> 3, 1 -> 1, 3 -> 5, 20 -> 100)
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val out = StreamOps.ewmaLevels(
-      input.toDF().toDF("ts", "event_type"), "ts", "event_type",
-      watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS ewma_sink")
-    val q = out.writeStream.format("memory").queryName("ewma_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(counts.toSeq.flatMap { case (day, n) =>
-        Seq.fill(n)((dayTs(day), "click"))
-      })
-      q.processAllAvailable()
-      // processAllAvailable keeps running micro-batches while the
-      // watermark advances: day 20@12:00 − 1 h finalizes days 0..19
-      assert(spark.table("ewma_sink").count() == 20)
-      input.addData((dayTs(29, 23), "flush"))
-      q.processAllAvailable()
-      input.addData((dayTs(30, 23), "flush"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("ewma_sink")
-      .filter($"etype" === "click")
-      .select($"day", $"c", $"eprime", $"spike")
-      .as[(Long, Long, Long, Boolean)].collect().toSeq.sortBy(_._1)
-    assert(got.nonEmpty && got.head._1 == 0L)
-    // independent sequential replay of the q202 recurrence
-    var window = List.empty[Long]
-    val expect = (0L to got.last._1).map { day =>
-      val c = counts.getOrElse(day.toInt, 0).toLong
-      val eprev = window.zipWithIndex.map { case (v, k) =>
-        v * (1L << (15 - k))
-      }.sum
-      window = (c :: window).take(16)
-      val eprime = window.zipWithIndex.map { case (v, k) =>
-        v * (1L << (15 - k))
-      }.sum
-      (day, c, eprime, day + 1 > 16 && c * 65536L > eprev * 3L)
-    }
-    assert(got == expect, s"got $got\nexpect $expect")
-    // the planted burst on day 20 fires the spike flag exactly once
-    assert(got.count(_._4) == 1 && got.find(_._4).get._1 == 20L)
-    // contiguous dense emission: every day in the range appears once
-    assert(got.map(_._1) == (0L to got.last._1))
-  }
-
-  test("kmvDistinctSketch's final snapshot equals the batch k-min set exactly") {
-    import spark.implicits._
-    def md5h(s: String): Long = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).take(4)
-        .map(b => f"${b & 0xff}%02x").mkString, 16)
-    // "click" overflows k=256 (300 distinct user-days); "view" stays
-    // exact (40); both arrive split across batches with repeats
-    val clicks = (0 until 300).map(u =>
-      (Timestamp.valueOf("2024-01-05 10:00:00"), u.toLong, "click"))
-    val views = (0 until 40).map(u =>
-      (Timestamp.valueOf("2024-01-06 10:00:00"), u.toLong, "view"))
-    val input = MemoryStream[(Timestamp, Long, String)](spark)
-    val out = StreamOps.kmvDistinctSketch(
-      input.toDF().toDF("ts", "user_id", "event_type"),
-      "ts", "event_type", "user_id").toDF()
-    spark.sql("DROP TABLE IF EXISTS kmv_sink")
-    val q = out.writeStream.format("memory").queryName("kmv_sink")
-      .outputMode(OutputMode.Update).start()
-    try {
-      input.addData(clicks.take(150) ++ views.take(10))
-      q.processAllAvailable()
-      // duplicates + the rest, out of order
-      input.addData(clicks.reverse ++ views ++ clicks.take(5))
-      q.processAllAvailable()
-    } finally q.stop()
-    // latest snapshot per segment: n_sk grows to the cap, then hk only
-    // shrinks as the k-min set improves — (n_sk max, hk min) is final
-    val finals = spark.table("kmv_sink")
-      .select($"etype", $"n_sk", $"hk", $"estimate")
-      .as[(String, Long, Long, Double)].collect().toSeq
-      .groupBy(_._1).view.mapValues(rs => rs.maxBy(r => (r._2, -r._3)))
-      .toMap
-    def replay(rows: Seq[(Timestamp, Long, String)]): (Long, Long, Double) = {
-      val hs = rows.map { case (ts, u, _) =>
-        md5h(s"$u:${ts.toLocalDateTime.toLocalDate}")
-      }.distinct.sorted.take(256)
-      val n = hs.size.toLong
-      val est = if (n < 256) n.toDouble else 255.0 * 4294967296.0 / hs.last
-      (n, hs.last, est)
-    }
-    val (cn, chk, cest) = replay(clicks)
-    assert(finals("click") == (("click", cn, chk, cest)))
-    assert(cn == 256L) // the estimate branch is actually exercised
-    val (vn, vhk, vest) = replay(views)
-    assert(finals("view") == (("view", vn, vhk, vest)))
-    assert(vn == 40L && vest == 40.0) // exact branch below k
-  }
-
-  test("burnRateAlerts pages only when both finalized windows burn hot") {
-    import spark.implicits._
-    def hTs(hour: Int, minute: Int = 30): Timestamp =
-      Timestamp.valueOf(f"2024-01-01 $hour%02d:$minute%02d:00")
-    // one shard (user 0): hours 0-2 healthy (10% errors), hour 3 an
-    // outage (60%), hour 4 healthy again; 1h burn fires only in hour 3,
-    // and the 6h window (carrying the outage, 18/80 = 22.5x) crosses too
-    def mix(hour: Int, total: Int, errors: Int) =
-      (0 until total).map(i =>
-        (hTs(hour, 1 + i % 50), 0L, if (i < errors) "error" else "click"))
-    val events =
-      mix(0, 20, 2) ++ mix(1, 20, 2) ++ mix(2, 20, 2) ++
-        mix(3, 20, 12) ++ mix(4, 20, 2)
-    val input = MemoryStream[(Timestamp, Long, String)](spark)
-    val out = StreamOps.burnRateAlerts(
-      input.toDF().toDF("ts", "user_id", "event_type"),
-      "ts", "event_type", "user_id", watermarkDelay = "30 minutes").toDF()
-    spark.sql("DROP TABLE IF EXISTS burn_sink")
-    val q = out.writeStream.format("memory").queryName("burn_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(events)
-      q.processAllAvailable()
-      input.addData((hTs(8), 99L, "click")) // flusher advances the watermark
-      q.processAllAvailable()
-      input.addData((hTs(9), 99L, "click"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("burn_sink").filter($"shard" === 0L)
-      .select($"hour", $"n", $"e", $"burn_1h", $"burn_6h")
-      .as[(Long, Long, Long, Double, Double)].collect().toSeq.sortBy(_._1)
-    val hourBase = hTs(0).toInstant.toEpochMilli / 3600000L
-    // replay: only hour 3 pages (1h burn 50, 6h burn carries the spike)
-    assert(got.size == 1, s"got $got")
-    assert(got.head._1 == hourBase + 3)
-    assert(got.head._2 == 20L && got.head._3 == 12L)
-    assert(got.head._4 == (12.0 / 20.0) / 0.01)
-    // 6h window at hour 3 = hours 0..3: 80 records, 18 errors
-    assert(got.head._5 == (18.0 / 80.0) / 0.01)
-  }
-
-  test("freshnessAlerts pages a silent producer once, re-arms on new data, and agrees with q253's stale set") {
-    import spark.implicits._
-    def dayTs(day: Int, hour: Int = 12): Timestamp =
-      Timestamp.valueOf(f"2024-01-${1 + day}%02d $hour%02d:00:00")
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val out = StreamOps.freshnessAlerts(
-      input.toDF().toDF("ts", "event_type"), "ts", "event_type",
-      watermarkDelay = "1 hour", thresholdMin = 1440L).toDF()
-    spark.sql("DROP TABLE IF EXISTS fresh_sink")
-    val q = out.writeStream.format("memory").queryName("fresh_sink")
-      .outputMode(OutputMode.Append).start()
-    val fed = scala.collection.mutable.ArrayBuffer.empty[(Timestamp, String)]
-    def feed(rows: (Timestamp, String)*): Unit = {
-      fed ++= rows; input.addData(rows: _*); q.processAllAvailable()
-    }
-    try {
-      // clicks stop after day 2; views keep the watermark advancing
-      feed(((0 to 2).map(d => (dayTs(d), "click")) ++
-        (0 to 10).map(d => (dayTs(d), "view"))): _*)
-      feed((dayTs(11), "view"))
-      feed((dayTs(12), "view"))
-      val first = spark.table("fresh_sink")
-        .as[(String, Long, Long)].collect().toSeq
-      assert(first.map(_._1) == Seq("click"),
-        s"exactly one page, for the silent type: $first")
-      assert(first.head._2 ==
-        dayTs(2).toInstant.toEpochMilli * 1000L)
-      assert(first.head._3 >= 1440L)
-      // fresh data re-arms; a second quiet period pages a second time
-      feed((dayTs(13), "click"), (dayTs(13), "view"))
-      feed((dayTs(14), "view"))
-      feed((dayTs(15), "view"))
-      feed((dayTs(16), "view"))
-      val fin = spark.table("fresh_sink")
-        .as[(String, Long, Long)].collect().toSeq.sortBy(_._2)
-      assert(fin.size == 2 && fin.forall(_._1 == "click"))
-      assert(fin(1)._2 == dayTs(13).toInstant.toEpochMilli * 1000L)
-      assert(fin(1)._3 >= 1440L)
-    } finally q.stop()
-    // agreement with the batch audit: the paged set IS q253's stale set
-    // (staleness vs the corpus high-water mark ≥ threshold) on the fed
-    // corpus as of the final watermark
-    val hwUs = fed.map(_._1.toInstant.toEpochMilli).max * 1000L
-    val staleBatch = fed.groupBy(_._2).collect {
-      case (et, rs)
-        if (hwUs - rs.map(_._1.toInstant.toEpochMilli).max * 1000L)
-          / 60000000L >= 1440L => et
-    }.toSet
-    assert(staleBatch == Set("click"))
-  }
-
-  test("dailyQuantileMonitor finalizes each day bit-identical to the batch R-7") {
-    import spark.implicits._
-    def dayTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(f"2024-01-${1 + day}%02d $hour%02d:00:00")
-    // deterministic per-day value sets incl. duplicates and an even-n
-    // day (interpolated median) — arrival order shuffled
-    val vals = Map(
-      0 -> Seq(12.34, 5.0, 99.99, 5.0),
-      1 -> Seq(50.0, 10.0, 20.0, 30.0, 40.0, 60.0, 70.0),
-      2 -> Seq(7.77))
-    val rows = new scala.util.Random(42).shuffle(
-      vals.toSeq.flatMap { case (d, vs) =>
-        vs.zipWithIndex.map { case (v, i) =>
-          (dayTs(d, 1 + i % 20), "purchase", v)
-        }
-      })
-    val input = MemoryStream[(Timestamp, String, Double)](spark)
-    val out = StreamOps.dailyQuantileMonitor(
-      input.toDF().toDF("ts", "event_type", "value"), "ts", "event_type",
-      "value", watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS dq_sink")
-    val q = out.writeStream.format("memory").queryName("dq_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      // flush rows (non-purchase) advance the watermark past day 2
-      input.addData((dayTs(4, 12), "flush", 0.0))
-      q.processAllAvailable()
-      input.addData((dayTs(5, 12), "flush", 0.0))
-      q.processAllAvailable()
-      input.addData((dayTs(6, 12), "flush", 0.0))
-      q.processAllAvailable()
-      input.addData((dayTs(7, 12), "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("dq_sink")
-      .as[(String, Long, Double, Double)].collect().toSeq.sortBy(_._1)
-    // batch replay: engine-identical R-7 over exact cents
-    def r7(vs: Seq[Long], p: Double): Double = {
-      val s = vs.sorted; val h = (s.size - 1) * p
-      val lo = h.toInt; val w = h - lo
-      if (lo + 1 < s.size) s(lo) + (s(lo + 1) - s(lo)) * w else s(lo).toDouble
-    }
-    val exp = vals.toSeq.sortBy(_._1).map { case (d, vs) =>
-      val cents = vs.map(v => math.round(v * 100))
-      (f"2024-01-${1 + d}%02d", cents.size.toLong,
-        r7(cents, 0.5), r7(cents, 0.875))
-    }
-    assert(got == exp)
-  }
-
-  test("dailyChecksumMonitor finalizes each day's order-free checksum exactly once") {
-    import spark.implicits._
-    def dayTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(f"2024-01-${1 + day}%02d $hour%02d:00:00")
-    def idHash(id: Long): Long =
-      java.lang.Long.parseLong(
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(id.toString.getBytes("UTF-8"))
-          .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
-    // ids spread over 3 days, arrival order shuffled
-    val rows = new scala.util.Random(7).shuffle(
-      (1L to 30L).map(i => (dayTs((i % 3).toInt, 1 + (i % 20).toInt), i)))
-    val input = MemoryStream[(Timestamp, Long)](spark)
-    val out = StreamOps.dailyChecksumMonitor(
-      input.toDF().toDF("ts", "event_id"), "ts", "event_id",
-      watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS ck_sink")
-    val q = out.writeStream.format("memory").queryName("ck_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((dayTs(5, 12), 99999L))
-      q.processAllAvailable()
-      input.addData((dayTs(6, 12), 99998L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("ck_sink")
-      .as[(String, Long, Long)].collect().toSeq.sortBy(_._1)
-    val exp = (1L to 30L).groupBy(i => (i % 3).toInt).toSeq
-      .sortBy(_._1).map { case (day, ids) =>
-        (f"2024-01-${1 + day}%02d", ids.size.toLong, ids.map(idHash).sum)
-      } :+ ("2024-01-06", 1L, idHash(99999L))
-    // the day-5 flush row is itself a (finalized) day — the monitor
-    // checksums EVERY row; the day-6 flush stays open at the final
-    // watermark and correctly never emits
-    assert(got == exp)
-  }
-
-  test("cooldownDedup keeps exactly the batch greedy-chain events on shuffled arrivals") {
-    import spark.implicits._
-    def hTs(hours: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, 0, 0).plusHours(hours.toLong))
-    // user 1 "alert": 0h keep, 10h drop, 23h drop, 24h keep (>= boundary),
-    // 30h drop (6h after last KEPT — the self-referential case: a lag
-    // against the previous ROW at 24h would wrongly keep it), 49h keep.
-    // user 2 "alert": single event. user 1 "billing": independent chain.
-    val fixture = Seq(
-      (1L, "alert", 0), (1L, "alert", 10), (1L, "alert", 23),
-      (1L, "alert", 24), (1L, "alert", 30), (1L, "alert", 49),
-      (2L, "alert", 5), (1L, "billing", 2), (1L, "billing", 27))
-    val rows = new scala.util.Random(11).shuffle(
-      fixture.zipWithIndex.map { case ((u, t, h), i) =>
-        (hTs(h), u, t, 1000L + i)
-      })
-    val input = MemoryStream[(Timestamp, Long, String, Long)](spark)
-    val out = StreamOps.cooldownDedup(
-      input.toDF().toDF("ts", "user_id", "event_type", "event_id"),
-      "ts", "user_id", "event_type", watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS cd_sink")
-    val q = out.writeStream.format("memory").queryName("cd_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((hTs(24 * 10), 99L, "flush", 9999L))
-      q.processAllAvailable()
-      input.addData((hTs(24 * 11), 99L, "flush", 9998L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("cd_sink")
-      .select($"user_id", $"event_type", $"event_id")
-      .as[(Long, String, Long)].collect().toSet
-    // batch replay: the q260 fold (sentinel start, >= last + 24h keeps)
-    val exp = fixture.zipWithIndex
-      .map { case ((u, t, h), i) => (u, t, h.toLong * 3600000000L, 1000L + i) }
-      .groupBy(r => (r._1, r._2)).flatMap { case (_, evs) =>
-        var last = -86400000001L
-        evs.sortBy(e => (e._3, e._4)).flatMap { case (u, t, tus, id) =>
-          if (tus >= last + 86400000000L) { last = tus; Some((u, t, id)) }
-          else None
-        }
-      }.toSet + ((99L, "flush", 9999L)) // first flush finalizes and keeps
-    assert(got == exp)
-  }
-
-  test("seasonalAnomalyAlerts fires the batch 2x weekday test on finalized days") {
-    import spark.implicits._
-    val day0 = java.time.LocalDate.ofEpochDay(2821L * 7) // wd 0
-    def dTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(day0.plusDays(day.toLong).atTime(hour, 0))
-    // model: weekday 0 mean 4 (n_days=2, s_w=8), weekday 1 mean 10
-    val model = Map(0L -> (2L, 8L), 1L -> (2L, 20L))
-    // day 0 (wd 0): 9 purchases -> 9*2 > 2*8 -> anomaly (ratio 2.25)
-    // day 1 (wd 1): 10 purchases -> exactly the mean -> healthy
-    // day 7 (wd 0): 1 purchase -> 2*1*2 < 8 -> anomaly (ratio 0.25)
-    val rows = new scala.util.Random(4).shuffle(
-      (1 to 9).map(i => (dTs(0, 1 + i % 20), "purchase")) ++
-        (1 to 10).map(i => (dTs(1, 1 + i % 20), "purchase")) ++
-        Seq((dTs(7, 5), "purchase"), (dTs(0, 6), "view")))
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val out = StreamOps.seasonalAnomalyAlerts(
-      input.toDF().toDF("ts", "event_type"), "ts", "event_type",
-      model, watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS sa_sink")
-    val q = out.writeStream.format("memory").queryName("sa_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((dTs(10, 12), "flush"))
-      q.processAllAvailable()
-      input.addData((dTs(11, 12), "flush"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("sa_sink")
-      .as[(String, Long, Long, Double, Boolean)].collect().toSet
-    val exp = Set(
-      (day0.toString, 0L, 9L, 2.25, true),
-      (day0.plusDays(1).toString, 1L, 10L, 1.0, false),
-      (day0.plusDays(7).toString, 0L, 1L, 0.25, true))
-    assert(got == exp)
-  }
-
-  test("weeklyTvDrift finalizes adjacent weeks with the batch cross-multiplied TV") {
-    import spark.implicits._
-    val day0 = java.time.LocalDate.ofEpochDay(2820L * 7) // a week boundary
-    def wTs(week: Int, day: Int): Timestamp =
-      Timestamp.valueOf(day0.plusDays(week * 7L + day).atTime(12, 0))
-    // weeks 0,1 populated; week 2 EMPTY (chain must break); week 3
-    // populated (no emission for it — its previous week is empty)
-    val bandCounts: Map[Int, Seq[(Double, Int)]] = Map(
-      0 -> Seq((5.0, 3), (25.0, 2), (45.0, 1)), // bands 0,1,2
-      1 -> Seq((5.0, 1), (25.0, 4)),            // bands 0,1
-      3 -> Seq((45.0, 2)))                       // band 2
-    val rows = new scala.util.Random(9).shuffle(
-      bandCounts.toSeq.flatMap { case (w, vs) =>
-        vs.flatMap { case (v, c) =>
-          (1 to c).map(i => (wTs(w, i % 6), "purchase", v))
-        }
-      }) :+ ((wTs(0, 2), "view", 999.0)) // non-purchase rows are ignored
-    val input = MemoryStream[(Timestamp, String, Double)](spark)
-    val out = StreamOps.weeklyTvDrift(
-      input.toDF().toDF("ts", "event_type", "value"), "ts", "event_type",
-      "value", watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS tv_sink")
-    val q = out.writeStream.format("memory").queryName("tv_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((wTs(6, 1), "flush", 0.0))
-      q.processAllAvailable()
-      input.addData((wTs(7, 1), "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("tv_sink")
-      .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
-    // batch replay: only week 1 emits (week 0 has no predecessor; week 2
-    // is empty; week 3's predecessor is empty)
-    def hist(w: Int): Seq[Long] = {
-      val h = Array.fill(20)(0L)
-      bandCounts.getOrElse(w, Nil).foreach { case (v, c) =>
-        h((math.round(v * 100) / 2000).toInt min 19) += c.toLong
-      }
-      h.toSeq
-    }
-    val (h0, h1) = (hist(0), hist(1))
-    val (n0, n1) = (h0.sum, h1.sum)
-    val num = h1.zip(h0).map { case (c, pc) => math.abs(c * n0 - pc * n1) }.sum
-    val exp = Seq((2821L, n0, n1, num.toDouble / (2.0 * n0.toDouble * n1.toDouble)))
-    assert(got == exp)
-  }
-
-  test("cappedSessions closes on gap, cap, and timeout with the batch break rules") {
-    import spark.implicits._
-    def mTs(min: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, 0, 0).plusMinutes(min.toLong))
-    def us(min: Int): Long = mTs(0).getTime * 1000L + min.toLong * 60000000L
-    // u1: s1 = 0,10,20 (gap-broken by the 40-min jump to 60); s2 = every
-    // 25 min from 60 to 285 (10 events) — the event at 310 sits 250 min
-    // after s2's START (> 240 cap) though only 25 min after its last
-    // event, so ONLY the cap rule breaks it (the self-referential case);
-    // s3 = 310, closed by timeout. u2: one event, closed by timeout.
-    val u1 = Seq(0, 10, 20) ++ (60 to 285 by 25) :+ 310
-    val fixture = u1.map(m => (1L, m)) :+ ((2L, 5))
-    val rows = new scala.util.Random(5).shuffle(
-      fixture.zipWithIndex.map { case ((u, m), i) =>
-        (mTs(m), u, 5000L + i)
-      })
-    val input = MemoryStream[(Timestamp, Long, Long)](spark)
-    val out = StreamOps.cappedSessions(
-      input.toDF().toDF("ts", "user_id", "event_id"),
-      "ts", "user_id", watermarkDelay = "10 minutes").toDF()
-    spark.sql("DROP TABLE IF EXISTS cs_sink")
-    val q = out.writeStream.format("memory").queryName("cs_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((mTs(24 * 60), 99L, 9999L))
-      q.processAllAvailable()
-      input.addData((mTs(25 * 60), 99L, 9998L))
-      q.processAllAvailable()
-    } finally q.stop()
-    // the flush user (99) needs a further trigger after the watermark
-    // passes its gap — like the dailyChecksum flush, it correctly stays
-    // open at the final watermark and is excluded from the assertion
-    val got = spark.table("cs_sink")
-      .as[(Long, Long, Long, Long, String)].collect()
-      .filter(_._1 < 90L).toSet
-    val exp = Set(
-      (1L, us(0), us(20), 3L, "gap"),
-      (1L, us(60), us(285), 10L, "cap"),
-      (1L, us(310), us(310), 1L, "timeout"),
-      (2L, us(5), us(5), 1L, "timeout"))
-    assert(got == exp)
-  }
-
-  test("rollingCorrelation finalizes dense days with the batch exact-moment frame") {
-    import spark.implicits._
-    def dTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, hour, 0).plusDays(day.toLong))
-    // 16 active days with deterministic per-day (view, purchase) counts;
-    // day 12 fully silent (dense (0,0) walk), correlated-with-noise series
-    val counts = (0 to 16).filter(_ != 12).map { d =>
-      d -> ((d % 5 + 1).toLong, ((d * 3) % 7).toLong)
-    }.toMap
-    val rows = new scala.util.Random(3).shuffle(
-      counts.toSeq.flatMap { case (d, (v, p)) =>
-        (1L to v).map(i => (dTs(d, 1 + (i % 20).toInt), "view")) ++
-          (1L to p).map(i => (dTs(d, 2 + (i % 20).toInt), "purchase"))
-      })
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val out = StreamOps.rollingCorrelation(
-      input.toDF().toDF("ts", "event_type"), "ts", "event_type",
-      watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS rc_sink")
-    val q = out.writeStream.format("memory").queryName("rc_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((dTs(20, 12), "flush"))
-      q.processAllAvailable()
-      input.addData((dTs(21, 12), "flush"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("rc_sink")
-      .as[(String, Long, Long, Option[Double])].collect().toSeq.sortBy(_._1)
-    // batch replay: dense walk day0..day20 (the second flush advances the
-    // watermark past day 20, whose own count is the flush's (0,0)),
-    // emit once the 14-deep frame fills, exact int64 moments
-    val dense = (0 to 20).map(d => counts.getOrElse(d, (0L, 0L)))
-    val exp = (13 to 20).map { d =>
-      val w = dense.slice(d - 13, d + 1)
-      val n = 14L
-      val sa = w.map(_._1).sum; val sb = w.map(_._2).sum
-      val saa = w.map(x => x._1 * x._1).sum
-      val sbb = w.map(x => x._2 * x._2).sum
-      val sab = w.map(x => x._1 * x._2).sum
-      val den = (n * saa - sa * sa) * (n * sbb - sb * sb)
-      val corr = if (den <= 0L) None
-        else Some((n * sab - sa * sb).toDouble / math.sqrt(den.toDouble))
-      (java.time.LocalDate.of(2024, 1, 1).plusDays(d.toLong).toString,
-        dense(d)._1, dense(d)._2, corr)
-    }
-    assert(got == exp)
-  }
-
-  test("recoveryLatency resolves each error to the batch next-ok distance on shuffled arrivals") {
-    import spark.implicits._
-    def hTs(hours: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, 0, 0).plusHours(hours.toLong))
-    // u1: error@0 resolved by view@1 (1h); consecutive errors @2,@3 BOTH
-    // resolved by purchase@5 (3h, 2h — the batch window gives each its
-    // own distance); trailing error@6 right-censored (never emitted).
-    // u2: error and view at the SAME instant — id tie-break resolves it
-    // at 0 µs; a view at the same instant with a LOWER id than a later
-    // error must NOT resolve it (order is (tus, id) asc).
-    val fixture = Seq(
-      (1L, "error", 0, 1L), (1L, "view", 1, 2L),
-      (1L, "error", 2, 3L), (1L, "error", 3, 4L), (1L, "purchase", 5, 5L),
-      (1L, "error", 6, 6L),
-      (2L, "error", 1, 10L), (2L, "view", 1, 11L),
-      (2L, "view", 2, 20L), (2L, "error", 2, 21L), (2L, "view", 3, 22L))
-    val rows = new scala.util.Random(7).shuffle(
-      fixture.map { case (u, t, h, id) => (hTs(h), u, t, id) })
-    val input = MemoryStream[(Timestamp, Long, String, Long)](spark)
-    val out = StreamOps.recoveryLatency(
-      input.toDF().toDF("ts", "user_id", "event_type", "event_id"),
-      "ts", "user_id", "event_type", watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS rl_sink")
-    val q = out.writeStream.format("memory").queryName("rl_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((hTs(240), 99L, "view", 9999L))
-      q.processAllAvailable()
-      input.addData((hTs(264), 99L, "view", 9998L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("rl_sink")
-      .as[(Long, Long, Long)].collect().toSet
-    val H = 3600000000L
-    assert(got == Set(
-      (1L, 1L, 1L * H), (1L, 3L, 3L * H), (1L, 4L, 2L * H),
-      (2L, 10L, 0L), (2L, 21L, 1L * H)))
-  }
-
-  test("weekdayProfileMonitor's final snapshot is bit-equal to the batch q272 algebra") {
-    import spark.implicits._
-    def dTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, hour, 0).plusDays(day.toLong))
-    // purchase counts over 10 calendar days (two Mondays etc.), with a
-    // silent day 4 (absent from the batch's daily relation) and
-    // non-purchase noise that must not enter the profile
-    val plan = Map(0 -> 4, 1 -> 6, 2 -> 3, 3 -> 5, 5 -> 2, 6 -> 7,
-      7 -> 1, 8 -> 9, 9 -> 2)
-    val rows = new scala.util.Random(11).shuffle(plan.toSeq.flatMap {
-      case (d, n) =>
-        (1 to n).map(i => (dTs(d, 1 + i % 20), "purchase")) ++
-          Seq((dTs(d, 3), "view"))
-    })
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val out = StreamOps.weekdayProfileMonitor(
-      input.toDF().toDF("ts", "event_type"), "ts", "event_type",
-      watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS wp_sink")
-    val q = out.writeStream.format("memory").queryName("wp_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((dTs(30, 12), "view"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val lastDay = java.time.LocalDate.of(2024, 1, 1).plusDays(9).toString
-    val got = spark.table("wp_sink")
-      .filter(col("day") === lastDay)
-      .as[(String, Long, Long, Long, Double, Option[Double])]
-      .collect().toSeq.sortBy(_._2)
-    // batch q272 algebra replayed over the full plan (epoch-day mod 7,
-    // weekday-ordered contrib fold, identical IEEE chains)
-    val epoch0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay
-    val byWd = plan.toSeq.map { case (d, n) => (math.floorMod(epoch0 + d, 7L), n.toLong) }
-      .groupBy(_._1).map { case (w, xs) => w -> (xs.size.toLong, xs.map(_._2).sum) }
-    val (nAll, sAll) = (byWd.values.map(_._1).sum, byWd.values.map(_._2).sum)
-    val qAll = plan.values.map(n => n.toLong * n.toLong).sum
-    val f = byWd.toSeq.sortBy(_._1).foldLeft(0.0) { case (acc, (_, (nd, tot))) =>
-      acc + (tot.toDouble * tot.toDouble) / nd.toDouble }
-    val denom = nAll.toDouble * qAll.toDouble - sAll.toDouble * sAll.toDouble
-    val eta2 = if (denom <= 0.0) None
-      else Some((nAll.toDouble * f - sAll.toDouble * sAll.toDouble) / denom)
-    val exp = byWd.toSeq.sortBy(_._1).map { case (w, (nd, tot)) =>
-      (lastDay, w, nd, tot,
-        (tot.toDouble * nAll.toDouble) / (nd.toDouble * sAll.toDouble), eta2)
-    }
-    assert(got == exp)
-    // every finalized active day snapshots: 9 active days, profile rows
-    // grow with the number of weekdays seen so far
-    val snapshots = spark.table("wp_sink").select("day").distinct().count()
-    assert(snapshots == 9L, "one snapshot per finalized ACTIVE day (silent day 4 emits nothing)")
-  }
-
-  test("userWeekSplits + weeklySplitOf reproduce the batch q293 new-vs-returning split") {
-    import spark.implicits._
-    val epoch0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay // a Monday
-    def wTs(week: Int, day: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDate.ofEpochDay(epoch0 + week * 7L + day)
-        .atTime(10, 0))
-    // (user, week, cents): u1 new in wk0, returns wk1+wk2; u2 new in
-    // wk1 only; u3 new in wk2; u4 new in wk0, skips wk1, returns wk2
-    val fixture = Seq(
-      (1L, 0, 500L), (1L, 0, 250L), (1L, 1, 100L), (1L, 2, 400L),
-      (2L, 1, 900L),
-      (3L, 2, 300L), (3L, 2, 299L),
-      (4L, 0, 1000L), (4L, 2, 50L))
-    // day offset capped at 2: epoch weeks are Thursday-based and
-    // 2024-01-01 sits 4 days into its epoch week, so offsets ≤ 2 keep
-    // every row inside the intended week bucket
-    val rows = new scala.util.Random(13).shuffle(fixture.map {
-      case (u, w, c) => (wTs(w, (c % 3L).toInt), u, "purchase", c.toDouble / 100.0)
-    } :+ ((wTs(0, 2), 9L, "view", 0.0)))
-    val input = MemoryStream[(Timestamp, Long, String, Double)](spark)
-    val out = StreamOps.userWeekSplits(
-      input.toDF().toDF("ts", "user_id", "event_type", "value"),
-      "ts", "user_id", "event_type", "value", watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS uw_sink")
-    val q = out.writeStream.format("memory").queryName("uw_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((wTs(5, 0), 9L, "view", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    // stage 2 over the delta topic = the weekly dashboard rows
-    val got = StreamOps.weeklySplitOf(spark.table("uw_sink"))
-      .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
-    // batch q293 algebra replayed inline: per (user, week) sums joined
-    // against the user's min week
-    val uw = fixture.groupBy(t => (t._1, t._2)).map { case ((u, w), xs) =>
-      (u, w.toLong, xs.size.toLong, xs.map(_._3).sum) }.toSeq
-    val first = uw.groupBy(_._1).map { case (u, xs) => u -> xs.map(_._2).min }
-    val wk0 = epoch0 / 7L
-    val exp = uw.groupBy(_._2).toSeq.sortBy(_._1).map { case (w, xs) =>
-      val nNew = xs.count(x => first(x._1) == w).toLong
-      val newC = xs.filter(x => first(x._1) == w).map(_._4).sum
-      val retC = xs.filter(x => first(x._1) != w).map(_._4).sum
-      (wk0 + w, nNew, xs.size.toLong - nNew, newC, retC,
-        newC.toDouble / (newC + retC).toDouble)
-    }
-    assert(got == exp)
-    // the view-only user never produces a split row
-    assert(spark.table("uw_sink").filter(col("user_id") === 9L).count() == 0L)
-    // SECOND consumer of the same delta topic: the q299 LTV triangle —
-    // cohort = the week is_new fired; cells and the cumulative
-    // per-user value replay the batch algebra bit-for-bit
-    val ltv = StreamOps.cohortLtvOf(spark.table("uw_sink"))
-      .as[(Long, Long, Long, Long, Long, Long, Double)].collect().toSeq
-    val cohortOf = first // user -> first week (the batch's min-week)
-    val sizes = cohortOf.values.groupBy(identity).map { case (c, xs) => c -> xs.size.toLong }
-    val cells = uw.groupBy(x => (cohortOf(x._1), x._2 - cohortOf(x._1))).toSeq
-      .sortBy(_._1).map { case ((c, a), xs) =>
-        (c, a, xs.map(_._1).distinct.size.toLong, xs.map(_._4).sum) }
-    var cumBy = Map.empty[Long, Long]
-    val expLtv = cells.map { case (c, a, au, cents) =>
-      val cum = cumBy.getOrElse(c, 0L) + cents
-      cumBy = cumBy.updated(c, cum)
-      (wk0 + c, a, sizes(c), au, cents, cum, cum.toDouble / sizes(c).toDouble)
-    }
-    assert(ltv == expLtv)
-  }
-
-  test("purchaseGaps + intervalHistogramOf reproduce the batch q292 interval histogram") {
-    import spark.implicits._
-    def dTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, hour, 0).plusDays(day.toLong))
-    // per-user purchase days: u1 gaps 1,2,40(caps to 31); u2 gaps 0 (two
-    // same-day purchases) and 3; u3 single purchase (no gap); views ride
-    // along for watermark progress only
-    val fixture = Seq(
-      (1L, 0, 9, "purchase", 100L), (1L, 1, 9, "purchase", 101L),
-      (1L, 3, 9, "purchase", 102L), (1L, 43, 9, "purchase", 103L),
-      (2L, 0, 10, "purchase", 200L), (2L, 0, 15, "purchase", 201L),
-      (2L, 3, 15, "purchase", 202L),
-      (3L, 5, 12, "purchase", 300L),
-      (1L, 2, 1, "view", 900L))
-    val rows = new scala.util.Random(17).shuffle(fixture.map {
-      case (u, d0, h, t, id) => (dTs(d0, h), u, t, id) })
-    val input = MemoryStream[(Timestamp, Long, String, Long)](spark)
-    val out = StreamOps.purchaseGaps(
-      input.toDF().toDF("ts", "user_id", "event_type", "event_id"),
-      "ts", "user_id", "event_type", watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS pg_sink")
-    val q = out.writeStream.format("memory").queryName("pg_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((dTs(60, 12), 9L, "view", 9999L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val samples = spark.table("pg_sink")
-      .as[(Long, Long, Long)].collect().toSet
-    // each gap finalizes against the previous purchase in event order
-    assert(samples == Set(
-      (1L, 101L, 1L), (1L, 102L, 2L), (1L, 103L, 31L),
-      (2L, 201L, 0L), (2L, 202L, 3L)),
-      s"got $samples")
-    // stage 2 = the batch q292 histogram algebra over the delta topic
-    val got = StreamOps.intervalHistogramOf(spark.table("pg_sink"))
-      .as[(Long, Long, Double, Double)].collect().toSeq
-    val gaps = samples.toSeq.map(_._3)
-    val hist = gaps.groupBy(identity).map { case (g, xs) => g -> xs.size.toLong }
-      .toSeq.sortBy(_._1)
-    val nTot = gaps.size.toLong
-    var cum = 0L
-    val exp = hist.map { case (g, n) =>
-      cum += n
-      (g, n, n.toDouble / nTot.toDouble, cum.toDouble / nTot.toDouble)
-    }
-    assert(got == exp)
-  }
-
-  test("statsStalenessMonitor re-prices the frozen stats per finalized day") {
-    import spark.implicits._
-    def dTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, hour, 0).plusDays(day.toLong))
-    // per-day (events, purchases): day 2 fully silent — staleness keeps
-    // growing precisely when nothing arrives, so silent days emit too
-    val plan = Map(0 -> (4, 1), 1 -> (6, 3), 3 -> (10, 2))
-    val rows = new scala.util.Random(5).shuffle(plan.toSeq.flatMap {
-      case (d, (n, p)) =>
-        (1 to p).map(i => (dTs(d, 1 + i % 20), "purchase")) ++
-          (1 to (n - p)).map(i => (dTs(d, 2 + i % 20), "view"))
-    })
-    val (nOld, pOld, thr) = (5L, 2L, 3.0)
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val out = StreamOps.statsStalenessMonitor(
-      input.toDF().toDF("ts", "event_type"), "ts", "event_type",
-      watermarkDelay = "1 hour", nOld, pOld, thr).toDF()
-    spark.sql("DROP TABLE IF EXISTS ss_sink")
-    val q = out.writeStream.format("memory").queryName("ss_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((dTs(6, 12), "flush"))
-      q.processAllAvailable()
-      input.addData((dTs(7, 12), "flush"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("ss_sink")
-      .as[(String, Long, Long, Double, Double, Long, Option[Double], Boolean)]
-      .collect().toSeq.sortBy(_._1)
-    // batch replay: cumulative fold day 0..6 (the day-6 flush event
-    // itself counts toward n_cur — it is a row in the table)
-    val dense = (0 to 6).map(d =>
-      if (d == 6) (1, 0) else plan.getOrElse(d, (0, 0)))
-    var (nc, pc) = (0L, 0L)
-    val exp = (0 to 6).map { d =>
-      nc += dense(d)._1; pc += dense(d)._2
-      val growth = nc.toDouble / nOld.toDouble
-      val est = pOld.toDouble * nc.toDouble / nOld.toDouble
-      (java.time.LocalDate.of(2024, 1, 1).plusDays(d.toLong).toString,
-        nc, pc, growth, est, pc,
-        if (pc == 0L) None else Some(est / pc.toDouble), growth >= thr)
-    }
-    assert(got == exp)
-  }
-
-  test("cusumDriftPager replays the batch q195 recurrence bit-exactly and pages once per episode") {
-    import spark.implicits._
-    def dTs(day: Int, i: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDate.ofEpochDay(day.toLong)
-        .atTime(1, 1 + (i % 50)))
-    // trained model (q195's exact per-key pair): nd=10 days, total=20
-    // orders → rational mean 2/day; page when S/nd > threshold=2
-    val model = Map("1-URGENT" -> (10L, 20L))
-    // day plan with a surge (d2-d3), a silent recovery (d4-d5 absent →
-    // zero-filled), and a SECOND surge (d7): two episodes, two pages
-    val plan = Map(0 -> 2, 1 -> 2, 2 -> 5, 3 -> 5, 6 -> 2, 7 -> 6, 8 -> 2)
-    val rows = new scala.util.Random(17).shuffle(plan.toSeq.flatMap {
-      case (d, n) => (1 to n).map(i => (dTs(d, i), "1-URGENT"))
-    })
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val out = StreamOps.cusumDriftPager(
-      input.toDF().toDF("ts", "prio"), "ts", "prio", model,
-      threshold = 2L, watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS cu_sink")
-    val q = out.writeStream.format("memory").queryName("cu_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      // unmodeled key: advances the watermark past every plan day but
-      // must never page or fail the state function
-      input.addData((dTs(30, 1), "9-UNMODELED"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("cu_sink")
-      .as[(String, String, Long, Long, Double)].collect().toSeq.sortBy(_._2)
-    // batch q195 recurrence replayed inline over the dense day grid
-    // (0..28 finalized by the day-30 sentinel): P += c·nd − total,
-    // S = P − min P — exact int64 all the way, one terminal division
-    val (nd, total) = model("1-URGENT")
-    var (p, minP, inEpisode) = (0L, 0L, false)
-    val exp = (0 to 28).flatMap { d =>
-      val c = plan.getOrElse(d, 0).toLong
-      p += c * nd - total
-      if (p < minP) minP = p
-      val s = p - minP
-      if (s > nd * 2L) {
-        val fire = !inEpisode
-        inEpisode = true
-        if (fire) Some(("1-URGENT",
-          java.time.LocalDate.ofEpochDay(d.toLong).toString, c, s,
-          s.toDouble / nd.toDouble))
-        else None
-      } else { inEpisode = false; None }
-    }
-    assert(got == exp)
-    // the fixture's two surges page exactly twice, at their FIRST days
-    assert(got.map(_._2) == Seq("1970-01-03", "1970-01-08"))
-    assert(got.map(_._4) == Seq(30L, 60L), "exact n-scaled statistics")
-    assert(spark.table("cu_sink").filter(col("key") === "9-UNMODELED").count() == 0L)
-  }
-
-  test("sessionDeltas + concurrencyPeaks reproduce the batch sweep-line daily peaks") {
-    import spark.implicits._
-    val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    def mTs(day: Int, min: Int): Timestamp =
-      new Timestamp(base + day * 86400000L + min * 60000L)
-    def us(day: Int, min: Int): Long =
-      (base + day * 86400000L + min * 60000L) * 1000L
-    // u1: 0,10 then 50 (40-min gap > 30 breaks); u2: 5,20,45 one session;
-    // u4: 100,130 — exactly 30 min apart: q288 breaks only on gap > 30,
-    // so ONE session (the inclusive boundary closedSessions would split);
-    // u3 entirely on day 1 (carry-over running sum across days)
-    val fixture = Seq(
-      (1L, 0, 0), (1L, 0, 10), (1L, 0, 50),
-      (2L, 0, 5), (2L, 0, 20), (2L, 0, 45),
-      (4L, 0, 100), (4L, 0, 130),
-      (3L, 1, 600), (3L, 1, 605))
-    val rows = new scala.util.Random(9).shuffle(
-      fixture.map { case (u, d, m) => (mTs(d, m), u) })
-    val input = MemoryStream[(Timestamp, Long)](spark)
-    val out = StreamOps.sessionDeltas(
-      input.toDF().toDF("ts", "user_id"), "ts", "user_id",
-      gapUs = 1800000000L, watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS sd_sink")
-    val q = out.writeStream.format("memory").queryName("sd_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      input.addData((mTs(3, 720), 99L))
-      q.processAllAvailable()
-      input.addData((mTs(4, 720), 99L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val sessions = spark.table("sd_sink")
-      .as[(Long, Long, Long, Timestamp)].collect().toSet
-    val expSessions = Set(
-      (1L, us(0, 0), us(0, 10)), (1L, us(0, 50), us(0, 50)),
-      (2L, us(0, 5), us(0, 45)), (4L, us(0, 100), us(0, 130)),
-      (3L, us(1, 600), us(1, 605)),
-      (99L, us(3, 720), us(3, 720))) // the day-3 flush session finalizes
-    assert(sessions.map(s => (s._1, s._2, s._3)) == expSessions)
-
-    // stage 2: feed the finalized sessions (the delta topic) shuffled in
-    // ONE batch, then two far-future flush sessions to drive the
-    // watermark past every fixture day (the first flush's day finalizes
-    // under the second; the last flush's own day stays open)
-    val sess2 = new scala.util.Random(13).shuffle(expSessions.toSeq)
-      .map { case (u, a, b) => (new Timestamp(a / 1000L), u, a, b) }
-    val input2 = MemoryStream[(Timestamp, Long, Long, Long)](spark)
-    val out2 = StreamOps.concurrencyPeaks(
-      input2.toDF().toDF("sstart_ts", "user_id", "sstart_us", "send_us"),
-      watermarkDelay = "2 hours").toDF()
-    spark.sql("DROP TABLE IF EXISTS cp_sink")
-    val q2 = out2.writeStream.format("memory").queryName("cp_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input2.addData(sess2: _*)
-      q2.processAllAvailable()
-      input2.addData((mTs(6, 720), 99L, us(6, 720), us(6, 720)))
-      q2.processAllAvailable()
-      input2.addData((mTs(8, 720), 99L, us(8, 720), us(8, 720)))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val got = spark.table("cp_sink")
-      .as[(String, Long, Long)].collect().toSeq.sortBy(_._1)
-    // batch replay: q288's sweep line over the same sessions — +1 at
-    // sstart, −1 at send+1, global (t, dlt desc, user, sstart) order,
-    // running sum never resets, per-day max + point count. The day-6
-    // flush finalizes under the day-8 flush's watermark, so it's part
-    // of the expectation; the day-8 flush's own day stays open.
-    val deltas = (expSessions + ((99L, us(6, 720), us(6, 720)))).toSeq
-      .flatMap { case (u, a, b) =>
-        Seq((a, 1L, u, a), (b + 1L, -1L, u, a)) }
-    var conc = 0L
-    var days = Map.empty[Long, (Long, Long)]
-    deltas.sortBy { case (t, dlt, u, ss) => (t, -dlt, u, ss) }.foreach {
-      case (t, dlt, _, _) =>
-        conc += dlt
-        val day = Math.floorDiv(t, 86400000000L)
-        val (pk, n) = days.getOrElse(day, (Long.MinValue, 0L))
-        days = days.updated(day, (math.max(pk, conc), n + 1L))
-    }
-    val exp = days.toSeq.sortBy(_._1).map { case (d, (pk, n)) =>
-      (java.time.LocalDate.ofEpochDay(d).toString, pk, n) }
-    assert(got == exp)
-  }
-
-  test("abDeltas + abSnapshotOf replay batch q199 bit-equal on every finalized prefix") {
-    import spark.implicits._
-    def dTs(day: Int, hour: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, hour, 0).plusDays(day.toLong))
-    def idHash(id: Long): Long = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
-    // u1 view d0 then buy d2; u2 buys d1 BEFORE its view d4 (the
-    // contract is order-free); u3 view-only d3; u4 view+buy same day;
-    // u5 buys but is never exposed — must contribute nothing
-    val fixture = Seq(
-      (1L, 0, "view"), (1L, 2, "purchase"),
-      (2L, 1, "purchase"), (2L, 4, "view"),
-      (3L, 3, "view"),
-      (4L, 1, "view"), (4L, 1, "purchase"),
-      (5L, 2, "purchase"))
-    val rows = new scala.util.Random(23).shuffle(
-      fixture.map { case (u, d0, t) => (dTs(d0, 10), u, t) })
-    val input = MemoryStream[(Timestamp, Long, String)](spark)
-    val out = StreamOps.abDeltas(
-      input.toDF().toDF("ts", "user_id", "event_type"),
-      "ts", "user_id", "event_type", watermarkDelay = "1 hour").toDF()
-    spark.sql("DROP TABLE IF EXISTS ab_sink")
-    val q = out.writeStream.format("memory").queryName("ab_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      // straggler BELOW the watermark for u1's already-finalized day —
-      // the lastDay guard must not double-count the exposure
-      input.addData((dTs(0, 9), 1L, "view"))
-      q.processAllAvailable()
-      input.addData((dTs(30, 12), 9L, "view")) // finalize everything
-      q.processAllAvailable()
-    } finally q.stop()
-    val snaps = StreamOps.abSnapshotOf(spark.table("ab_sink"))
-      .as[(Long, Long, Long, Long, Long, Double, Long)].collect().toSeq
-    val epoch0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay
-    // inline batch q199 replay over the prefix ending at dayIncl
-    def batchAt(dayIncl: Long): (Long, Long, Long, Long, Double, Long) = {
-      val flags = fixture.filter(_._2 <= dayIncl).groupBy(_._1).toSeq
-        .map { case (u, xs) =>
-          (u, xs.exists(_._3 == "view"), xs.exists(_._3 == "purchase")) }
-        .filter(_._2)
-      val (a, b) = flags.partition { case (u, _, _) => idHash(u) % 2 == 0 }
-      val (na, xa) = (a.size.toLong, a.count(_._3).toLong)
-      val (nb, xb) = (b.size.toLong, b.count(_._3).toLong)
-      if (na == 0L || nb == 0L) (na, xa, nb, xb, 0.0, 0L)
-      else {
-        val pp = (xa + xb).toDouble / (na + nb).toDouble
-        val se = math.sqrt(
-          (pp * (1.0 - pp)) * (1.0 / na.toDouble + 1.0 / nb.toDouble))
-        val z = if (se == 0.0) 0.0
-          else (xa.toDouble / na.toDouble - xb.toDouble / nb.toDouble) / se
-        (na, xa, nb, xb, z,
-          if (se != 0.0 && math.abs(z) > 1.96) 1L else 0L)
-      }
-    }
-    // transition days: u1 exposed d0, u4 d1, u1 converts d2, u3 d3,
-    // u2 d4; u5 never appears
-    assert(snaps.map(_._1) == Seq(0, 1, 2, 3, 4).map(_ + epoch0),
-      s"snapshot days: ${snaps.map(_._1)}")
-    snaps.foreach { case (day, na, xa, nb, xb, z, sig) =>
-      val exp = batchAt(day - epoch0)
-      assert((na, xa, nb, xb, z, sig) == exp,
-        s"day $day: got ${(na, xa, nb, xb, z, sig)}, batch $exp")
-    }
-    // the final prefix covers all four exposed users exactly once
-    val last = snaps.last
-    assert(last._2 + last._4 == 4L)
-    // THIRD consumer of the same topic: the live SRM guard — each day's
-    // chi² equals the batch q337 global cell over that prefix
-    val srm = StreamOps.srmMonitorOf(spark.table("ab_sink"))
-      .as[(Long, Long, Long, Double, Long)].collect().toSeq
-    assert(srm.map(_._1) == snaps.map(_._1))
-    srm.foreach { case (day, na, nb, chi2, flag) =>
-      val (ena, _, enb, _, _, _) = batchAt(day - epoch0)
-      assert((na, nb) == (ena, enb), s"day $day arm counts")
-      val expChi2 = (na - nb).toDouble * (na - nb).toDouble /
-        (na + nb).toDouble
-      assert(chi2 == expChi2, s"day $day chi2")
-      assert(flag == (if (expChi2 > 3.841) 1L else 0L))
-    }
-  }
-
-  test("abNationSnapshotOf replays the q335 per-nation BH chain bit-equal on every finalized prefix") {
-    import spark.implicits._
-    def dTs(day: Int, hour: Int = 10): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime
-        .of(2024, 1, 1, hour, 0).plusDays(day.toLong))
-    def idHash(id: Long): Long = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
-    // static dimension: nation 10 = {u1,u2,u3,u11}, nation 20 =
-    // {u4,u5,u6,u9}; u7 has NO lookup row (the batch inner join drops
-    // it — so must the topic)
-    val nationOf = Map(1L -> 10L, 2L -> 10L, 3L -> 10L, 11L -> 10L,
-      4L -> 20L, 5L -> 20L, 6L -> 20L, 9L -> 20L)
-    val lookup = nationOf.toSeq.toDF("cust", "nat")
-    // conversion = q335's heavy-buyer cut, scaled to the fixture: ≥ 2
-    // purchases. u2 converts but is never exposed (contributes nothing);
-    // u9 is exposed but buys once (never converts); u4 buys pre-exposure
-    // (order-free contract); u7 would convert but has no customer row.
-    val fixture = Seq(
-      (1L, 0, "view"), (1L, 1, "purchase"), (1L, 2, "purchase"),
-      (2L, 0, "purchase"), (2L, 0, "purchase"),
-      (3L, 1, "view"),
-      (11L, 1, "view"), (11L, 1, "purchase"), (11L, 1, "purchase"),
-      (4L, 1, "purchase"), (4L, 2, "view"), (4L, 3, "purchase"),
-      (5L, 0, "view"), (5L, 0, "purchase"), (5L, 0, "purchase"),
-      (6L, 3, "view"),
-      (9L, 0, "view"), (9L, 2, "purchase"),
-      (7L, 0, "view"), (7L, 1, "purchase"), (7L, 2, "purchase"))
-    val rows = new scala.util.Random(41).shuffle(
-      fixture.map { case (u, d0, t) => (dTs(d0), u, t) })
-    val input = MemoryStream[(Timestamp, Long, String)](spark)
-    val out = StreamOps.abDeltas(
-      input.toDF().toDF("ts", "user_id", "event_type"),
-      "ts", "user_id", "event_type", watermarkDelay = "1 hour",
-      users = Some(lookup), convertAtPurchases = 2L).toDF()
-    spark.sql("DROP TABLE IF EXISTS abn_sink")
-    val q = out.writeStream.format("memory").queryName("abn_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      // u7 only advances the watermark: it has no lookup row, so it must
-      // finalize everyone else without ever appearing in a delta
-      input.addData((dTs(30), 7L, "view"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val deltas = spark.table("abn_sink")
-    assert(deltas.filter(col("nation") === -1L ||
-      !col("nation").isin(10L, 20L)).count() == 0L,
-      "every delta must carry a joined nation key")
-    val snaps = StreamOps.abNationSnapshotOf(deltas)
-      .as[(Long, Long, Long, Long, Long, Long, Double, Double, Int, Long)]
-      .collect().toSeq
-    val epoch0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay
-    // inline batch q335 replay (nation tests + BH step-up at α=0.1 on
-    // Chebyshev p) over the prefix ending at dayIncl
-    def batchAt(dayIncl: Long): Seq[(Long, Long, Long, Long, Long, Double, Double, Int, Long)] = {
-      val perUser = fixture.filter(_._2 <= dayIncl).groupBy(_._1).toSeq
-        .flatMap { case (u, xs) =>
-          nationOf.get(u).map { nat =>
-            (u, nat, xs.exists(_._3 == "view"),
-              xs.count(_._3 == "purchase") >= 2) }
-        }
-        .filter(_._3)
-      val tests = perUser.groupBy(_._2).toSeq.flatMap { case (nat, us) =>
-        val (a, b) = us.partition { case (u, _, _, _) => idHash(u) % 2 == 0 }
-        val (na, xa) = (a.size.toLong, a.count(_._4).toLong)
-        val (nb, xb) = (b.size.toLong, b.count(_._4).toLong)
-        if (na == 0L || nb == 0L) None else Some((nat, na, xa, nb, xb))
-      }
-      val scored = tests.map { case (nat, na, xa, nb, xb) =>
-        val pp = (xa + xb).toDouble / (na + nb).toDouble
-        val se = math.sqrt(
-          (pp * (1.0 - pp)) * (1.0 / na.toDouble + 1.0 / nb.toDouble))
-        val z = if (se == 0.0) 0.0
-          else (xa.toDouble / na.toDouble - xb.toDouble / nb.toDouble) / se
-        val z2 = z * z
-        val p = if (z2 == 0.0) 1.0 else math.min(1.0, 1.0 / z2)
-        (nat, na, xa, nb, xb, z, z2, p)
-      }
-      val m = scored.size
-      val ranked = scored.sortBy { case (nat, _, _, _, _, _, z2, _) => (-z2, nat) }
-        .zipWithIndex.map { case (t, i) => (t, i + 1) }
-      val k = ranked.collect {
-        case ((_, _, _, _, _, _, z2, _), r) if r * z2 >= m * 10.0 => r
-      }.foldLeft(0)(math.max)
-      ranked.map { case ((nat, na, xa, nb, xb, z, _, p), r) =>
-        (nat, na, xa, nb, xb, z, p, r, if (r <= k) 1L else 0L)
-      }.sortBy(_._1)
-    }
-    // transition days: d0 (u1,u5,u9 exposed), d1 (u3, u11), d2 (u1
-    // converts, u4 exposed), d3 (u4 converts, u6 exposed)
-    val snapDays = snaps.map(_._1).distinct.sorted
-    assert(snapDays == Seq(0L, 1L, 2L, 3L).map(_ + epoch0),
-      s"snapshot days: $snapDays")
-    snapDays.foreach { day =>
-      val got = snaps.filter(_._1 == day)
-        .map(s => (s._2, s._3, s._4, s._5, s._6, s._7, s._8, s._9, s._10))
-        .sortBy(_._1)
-      val exp = batchAt(day - epoch0)
-      assert(got == exp, s"day $day:\n got  $got\n want $exp")
-    }
-    // day 0: nation 10 is A-only (u1) → filtered; only nation 20 tests
-    assert(snaps.filter(_._1 == epoch0).map(_._2) == Seq(20L))
-    // final prefix: both nations test, 7 exposed users total (u7 absent)
-    val lastRows = snaps.filter(_._1 == epoch0 + 3)
-    assert(lastRows.map(r => r._3 + r._5).sum == 7L)
-  }
-
-  test("sequentialStopOf twin-pins batch q341's first crossing day") {
-    import spark.implicits._
-    def dTs(day: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime.of(2024, 1, 1, 10, 0)
-        .plusDays(day.toLong))
-    def idHash(id: Long): Long = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
-    // nation 10: a REAL effect — every A-arm user converts on its
-    // exposure day, no B user ever does; users arrive spread over five
-    // days, so the running z crosses the |z| > 2.5 boundary on some
-    // mid-experiment day. nation 20: an A/A null that never crosses.
-    val users = (1L to 40L)
-    val events = users.flatMap { u =>
-      val d0 = (u % 5L).toInt
-      val base = Seq((dTs(d0), u, "view"))
-      if (u <= 30 && idHash(u) % 2 == 0) base :+ ((dTs(d0), u, "purchase"))
-      else base
-    } :+ ((dTs(30), 999L, "view")) // watermark push; no customer row
-    val dir = java.nio.file.Files.createTempDirectory("seqstop").toString
-    events.zipWithIndex.map { case ((t, u, ty), i) =>
-      (i.toLong, t, u, ty, 1.0, "{}")
-    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // users 1-30 → nation 10 (the effect), 31-40 → nation 20 (the null:
-    // nobody purchases there, both arms at p = 0 → z = 0 forever)
-    users.map(u => (u, if (u <= 30) 10L else 20L))
-      .toDF("c_custkey", "c_nationkey")
-      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val batch = graft.SparkEntry.queries("q341_sequential_stopping")(spark, dir)
-      .select($"nationkey", $"first_cross_day", $"crossed")
-      .as[(Long, Option[Timestamp], Long)].collect().toSeq
-    val expCross = batch.collect { case (nk, Some(t), 1L) =>
-      nk -> t.toLocalDateTime.toLocalDate.toEpochDay }.toMap
-    assert(expCross.contains(10L), s"fixture must cross in nation 10: $batch")
-    assert(!expCross.contains(20L), s"the null nation must not cross: $batch")
-    // live twin: same events through the delta topic with the same
-    // customer lookup
-    val input = MemoryStream[(Timestamp, Long, String)](spark)
-    val out = StreamOps.abDeltas(
-      input.toDF().toDF("ts", "user_id", "event_type"),
-      "ts", "user_id", "event_type", watermarkDelay = "1 hour",
-      users = Some(spark.read.parquet(s"$dir/customer.parquet"))).toDF()
-    spark.sql("DROP TABLE IF EXISTS seq_sink")
-    val q = out.writeStream.format("memory").queryName("seq_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // two rounds: the corpus, then the far-future pusher — watermarks
-      // only advance BETWEEN batches, so finalization needs a successor
-      input.addData(new scala.util.Random(7).shuffle(events.dropRight(1)): _*)
-      q.processAllAvailable()
-      input.addData(events.last)
-      q.processAllAvailable()
-    } finally q.stop()
-    val live = StreamOps.sequentialStopOf(spark.table("seq_sink"))
-      .select(col("nationkey"), col("first_cross_day"))
-      .as[(Long, Long)].collect().toMap
-    assert(live == expCross,
-      s"live stop days $live must equal batch q341's $expCross")
-  }
-
-  test("heterogeneityMonitorOf replays batch q346's Q/I² on every finalized prefix") {
-    import spark.implicits._
-    def dTs(day: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime.of(2024, 1, 1, 10, 0)
-        .plusDays(day.toLong))
-    def idHash(id: Long): Long = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
-    // arms (md5): A = {1,3,6,9,10}, B = {2,4,5,11,12}. nation 10 has a
-    // REAL effect (A converts, B doesn't); nation 20 is null (half of
-    // each arm converts); nation 30 is DEGENERATE (everyone converts →
-    // vᵢ = 0, excluded from the meta-set exactly as in batch).
-    val nationOf = Map(1L -> 10L, 3L -> 10L, 2L -> 10L, 11L -> 10L,
-      4L -> 20L, 5L -> 20L, 6L -> 20L, 9L -> 20L, 10L -> 30L, 12L -> 30L)
-    val viewDay = Map(1L -> 0, 3L -> 1, 11L -> 0, 2L -> 1, 4L -> 0,
-      5L -> 2, 6L -> 1, 9L -> 2, 10L -> 2, 12L -> 2)
-    val converts = Set(1L, 3L, 6L, 4L, 10L, 12L) // ≥14 purchases
-    val fixture: Seq[(Timestamp, Long, String)] = nationOf.keys.toSeq.sorted
-      .flatMap { u =>
-        val d0 = viewDay(u)
-        Seq((dTs(d0), u, "view")) ++
-          Seq.fill(if (converts(u)) 15 else 1)((dTs(d0), u, "purchase"))
-      }
-    val dir = java.nio.file.Files.createTempDirectory("hetmon").toString
-    fixture.zipWithIndex.map { case ((t, u, ty), i) =>
-      (i.toLong, t, u, ty, 1.0, "{}")
-    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    nationOf.toSeq.toDF("c_custkey", "c_nationkey")
-      .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val input = MemoryStream[(Timestamp, Long, String)](spark)
-    val out = StreamOps.abDeltas(
-      input.toDF().toDF("ts", "user_id", "event_type"),
-      "ts", "user_id", "event_type", watermarkDelay = "1 hour",
-      users = Some(spark.read.parquet(s"$dir/customer.parquet")),
-      convertAtPurchases = 14L).toDF()
-    spark.sql("DROP TABLE IF EXISTS het_sink")
-    val q = out.writeStream.format("memory").queryName("het_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(new scala.util.Random(19).shuffle(fixture): _*)
-      q.processAllAvailable()
-      input.addData((dTs(30), 999L, "view")) // watermark pusher, no lookup
-      q.processAllAvailable()
-    } finally q.stop()
-    val mon = StreamOps.heterogeneityMonitorOf(spark.table("het_sink"))
-      .as[(Long, Long, Double, Double, Double)].collect().toSeq.sortBy(_._1)
-    val epoch0 = java.time.LocalDate.of(2024, 1, 1).toEpochDay
-    def dsumReplay(xs: Iterable[Double]): Double = {
-      val units = xs.map(x => BigInt(math.floor(x * 1e6 + 0.5).toLong)).sum
-      (BigDecimal(units) / BigDecimal(1000000)).toDouble
-    }
-    // inline batch q346 replay over the prefix ending at dayIncl
-    def batchAt(dayIncl: Long): (Long, Double, Double, Double) = {
-      val cells = nationOf.keys.toSeq.filter(viewDay(_) <= dayIncl)
-        .map(u => (nationOf(u), idHash(u) % 2 == 0, converts(u)))
-        .groupBy(_._1).toSeq.flatMap { case (_, us) =>
-          val (a, b) = us.partition(_._2)
-          if (a.isEmpty || b.isEmpty) None
-          else {
-            val pa = a.count(_._3).toDouble / a.size.toDouble
-            val pb = b.count(_._3).toDouble / b.size.toDouble
-            val vi = pa * (1.0 - pa) / a.size + pb * (1.0 - pb) / b.size
-            if (vi > 0.0) Some((pa - pb, 1.0 / vi)) else None
-          }
-        }
-      val k = cells.size.toLong
-      val sw = dsumReplay(cells.map(_._2))
-      val swt = dsumReplay(cells.map(c => c._2 * c._1))
-      val swtt = dsumReplay(cells.map(c => c._2 * c._1 * c._1))
-      val qs = swtt - swt * swt / sw
-      val i2 = if (qs <= 0.0 || k <= 1L) 0.0
-        else math.max(0.0, (qs - (k - 1).toDouble) / qs)
-      (k, swt / sw, qs, i2)
-    }
-    assert(mon.nonEmpty)
-    mon.foreach { case (day, k, tb, qs, i2) =>
-      val exp = batchAt(day - epoch0)
-      assert((k, tb, qs, i2) == exp, s"day $day: got ${(k, tb, qs, i2)}, want $exp")
-    }
-    // the final prefix equals the REGISTERED batch q346 on the same dir
-    val batch = graft.SparkEntry.queries("q346_effect_heterogeneity")(spark, dir)
-      .select($"k", $"theta_bar", $"q_stat", $"i2")
-      .as[(Long, Double, Double, Double)].collect().head
-    val last = mon.last
-    assert((last._2, last._3, last._4, last._5) == batch,
-      s"final prefix ${(last._2, last._3, last._4, last._5)} vs batch $batch")
-    // the degenerate nation 30 never joins the meta-set
-    assert(mon.forall(_._2 <= 2L), s"k must exclude nation 30: $mon")
-  }
-
-  test("valueDriftMonitorOf replays batch q343's χ² on every finalized prefix") {
-    import spark.implicits._
-    def at(day: Int, hour: Int = 9): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime.of(2024, 1, day, hour, 0))
-    // pre days (10/12/14): click mass in bucket 0, error mass split;
-    // post days (18/20): click mass migrates to bucket 6 — the mix
-    // shift q343 exists to catch. "error" stays stable (no drift).
-    val fixture: Seq[(Timestamp, String, Double)] =
-      Seq.fill(6)((at(10), "click", 10.0)) ++
-        Seq.fill(4)((at(12), "click", 20.0)) ++
-        Seq.fill(5)((at(14), "click", 30.0)) ++
-        Seq.fill(3)((at(10), "error", 10.0)) ++
-        Seq.fill(3)((at(12), "error", 310.0)) ++
-        Seq.fill(7)((at(18), "click", 310.0)) ++
-        Seq.fill(8)((at(20), "click", 320.0)) ++
-        Seq.fill(2)((at(18), "error", 10.0)) ++
-        Seq.fill(2)((at(20), "error", 310.0))
-    val input = MemoryStream[(Timestamp, String, Double)](spark)
-    val cells = StreamOps.dailyValueCells(
-      input.toDF().toDF("ts", "event_type", "value"),
-      "ts", "event_type", "value", watermarkDelay = "1 hour")
-    spark.sql("DROP TABLE IF EXISTS vd_sink")
-    val q = cells.writeStream.format("memory").queryName("vd_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(new scala.util.Random(13).shuffle(fixture): _*)
-      q.processAllAvailable()
-      input.addData((at(31, 12), "click", 1.0)) // watermark pusher
-      q.processAllAvailable()
-    } finally q.stop()
-    val mon = StreamOps.valueDriftMonitorOf(spark.table("vd_sink"))
-      .as[(Timestamp, String, Long, Long, Long, Double, Long)]
-      .collect().toSeq
-    val cut = Timestamp.valueOf("2024-01-16 00:00:00")
-    def dsumReplay(xs: Iterable[Double]): Double = {
-      val units = xs.map(x => BigInt(math.floor(x * 1e6 + 0.5).toLong)).sum
-      (BigDecimal(units) / BigDecimal(1000000)).toDouble
-    }
-    // inline batch q343 replay over the prefix of whole days ≤ dayIncl
-    def batchAt(dayIncl: Timestamp): Map[String, (Long, Long, Long, Double, Long)] =
-      fixture.filter(!_._1.toLocalDateTime.toLocalDate
-          .isAfter(dayIncl.toLocalDateTime.toLocalDate))
-        .groupBy(_._2).map { case (t, es) =>
-          val cellsB = es.groupBy(e => math.min(math.floor(e._3 / 50.0), 6.0).toLong)
-            .map { case (b, xs) =>
-              b -> (xs.count(_._1.before(cut)).toLong,
-                xs.count(!_._1.before(cut)).toLong) }
-          val nn1 = cellsB.values.map(_._1).sum
-          val nn2 = cellsB.values.map(_._2).sum
-          val chi2 = dsumReplay(cellsB.values.map { case (n1, n2) =>
-            if (nn1 == 0L || nn2 == 0L) 0.0
-            else {
-              val (a, b2, c, e2) =
-                (n1.toDouble, n2.toDouble, nn1.toDouble, nn2.toDouble)
-              (a * e2 - b2 * c) * (a * e2 - b2 * c) / (c * e2 * (a + b2))
-            }
-          })
-          t -> (nn1, nn2, cellsB.size.toLong, chi2,
-            if (chi2 > 12.592) 1L else 0L)
-        }
-    val days = mon.map(_._1).distinct.sorted(Ordering.by((t: Timestamp) => t.getTime))
-    assert(days.size == 5, s"five finalized event days: $days")
-    days.foreach { day =>
-      val got = mon.filter(_._1 == day)
-        .map(r => r._2 -> (r._3, r._4, r._5, r._6, r._7)).toMap
-      val exp = batchAt(day)
-      assert(got == exp, s"day $day:\n got  $got\n want $exp")
-    }
-    // before the boundary the monitor is silent about drift (χ² = 0);
-    // after the post-mass lands, click trips and error doesn't
-    val lastClick = mon.filter(r => r._1 == days.last && r._2 == "click").head
-    assert(lastClick._7 == 1L, s"click must trip on the final prefix: $lastClick")
-    val lastError = mon.filter(r => r._1 == days.last && r._2 == "error").head
-    assert(lastError._7 == 0L, s"error is stable: $lastError")
-    val firstDay = mon.filter(_._1 == days.head)
-    assert(firstDay.forall(_._6 == 0.0), "pre-boundary prefixes read χ² = 0")
-  }
-
-  test("burstinessMonitorOf replays batch q350's Fano on every finalized prefix") {
-    import spark.implicits._
-    def at(day: Int, minute: Int): Timestamp =
-      Timestamp.valueOf(java.time.LocalDateTime.of(2024, 1, day, 9, minute))
-    // "tick" is uniform (one event per minute — Fano stays near/below 1
-    // on the dense grid); "burst" clumps its mass into a single minute
-    // per active day (Fano ≫ 1). Day 11 has no burst events at all —
-    // the grid must still report burst's unchanged cumulative row.
-    val fixture: Seq[(Timestamp, String)] =
-      (0 until 10).map(i => (at(10, i), "tick")) ++
-        Seq.fill(12)((at(10, 5), "burst")) ++
-        (0 until 10).map(i => (at(11, i), "tick")) ++
-        (0 until 5).map(i => (at(12, i), "tick")) ++
-        Seq.fill(15)((at(12, 2), "burst"))
-    val input = MemoryStream[(Timestamp, String)](spark)
-    val cells = StreamOps.minuteCells(
-      input.toDF().toDF("ts", "event_type"), "ts", "event_type",
-      watermarkDelay = "1 hour")
-    spark.sql("DROP TABLE IF EXISTS fano_sink")
-    val q = cells.writeStream.format("memory").queryName("fano_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // arrival-shuffled replay: finalized cells must not depend on order
-      input.addData(new scala.util.Random(29).shuffle(fixture): _*)
-      q.processAllAvailable()
-      input.addData((at(31, 0), "tick")) // watermark pusher
-      q.processAllAvailable()
-    } finally q.stop()
-    val mon = StreamOps.burstinessMonitorOf(spark.table("fano_sink"))
-      .as[(Timestamp, String, Long, Long, Long, Double, Double, Long)]
-      .collect().toSeq
-    // inline batch q350 replay over the prefix of whole days ≤ dayIncl —
-    // the IDENTICAL moment/span/Fano chain, so doubles are bit-equal
-    def batchAt(dayIncl: Timestamp): Map[String, (Long, Long, Long, Double, Double, Long)] = {
-      val pre = fixture.filter(!_._1.toLocalDateTime.toLocalDate
-        .isAfter(dayIncl.toLocalDateTime.toLocalDate))
-      val cellsB = pre.groupBy(identity).map { case ((ts, t), xs) =>
-        (ts, t, xs.size.toLong) }.toSeq
-      val mins = cellsB.map(_._1.getTime)
-      val m = (mins.max - mins.min) / 60000L + 1L
-      cellsB.groupBy(_._2).map { case (t, cs) =>
-        val sc = cs.map(_._3).sum
-        val scc = cs.map(c => c._3 * c._3).sum
-        val fano = (m.toDouble * scc.toDouble - sc.toDouble * sc.toDouble) /
-          (m.toDouble * sc.toDouble)
-        t -> (m, cs.size.toLong, sc, sc.toDouble / m.toDouble, fano,
-          if (fano > 1.5) 1L else 0L)
-      }
-    }
-    val days = mon.map(_._1).distinct.sorted(Ordering.by((t: Timestamp) => t.getTime))
-    assert(days.size == 3, s"three finalized event days: $days")
-    days.foreach { day =>
-      val got = mon.filter(_._1 == day)
-        .map(r => r._2 -> (r._3, r._4, r._5, r._6, r._7, r._8)).toMap
-      val exp = batchAt(day)
-      assert(got == exp, s"day $day:\n got  $got\n want $exp")
-    }
-    // the pager's verdict: burst trips, tick never does
-    val lastBurst = mon.filter(r => r._1 == days.last && r._2 == "burst").head
-    assert(lastBurst._8 == 1L, s"burst must page on the final prefix: $lastBurst")
-    assert(mon.filter(_._2 == "tick").forall(_._8 == 0L),
-      "uniform traffic must never page")
   }
 }
