@@ -2,7 +2,10 @@ package graft.api
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import graft.source.LocalCheckpointFileManager
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 /** Configuration parity with the reference's `kinesumer.Config`
@@ -13,7 +16,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   *                   `/root/reference/statemodel.go:17-57`)
   *   - `logRoot`   — sharded-stream log root (the Kinesis data plane)
   *   - `checkpointRoot` — offset store root (≈ the DynamoDB state store;
-  *                   here the Structured Streaming offset WAL)
+  *                   here the Structured Streaming offset WAL and commit
+  *                   log, written by [[graft.source.LocalCheckpointFileManager]]:
+  *                   `java.nio` on a local file system, Spark's stock manager
+  *                   elsewhere. A session that sets
+  *                   `spark.sql.streaming.checkpointFileManagerClass` itself
+  *                   keeps its own manager.)
   *   - `scanLimit` — at most this many records per shard per micro-batch,
   *                   gapped sequences too (≈ `Config.ScanLimit`, default 2000)
   *   - `scanIntervalMs` — trigger cadence (≈ `Config.ScanInterval`)
@@ -97,6 +105,13 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
   }
   spark.streams.addListener(listener)
 
+  // Spark's plug-in point for checkpoint storage: the WAL, the commit log
+  // and the manual-commit marks go through LocalCheckpointFileManager
+  // unless the session (or its Hadoop conf) already names a manager
+  if (spark.sessionState.newHadoopConf().get(LocalCheckpointFileManager.ConfKey) == null)
+    spark.conf.set(LocalCheckpointFileManager.ConfKey,
+      classOf[LocalCheckpointFileManager].getName)
+
   // covers the race where the query fails before/without the listener event
   private def harvest(): Unit = active.foreach { case (q, _, _) =>
     q.exception.foreach { e =>
@@ -164,9 +179,11 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     * over the last committed positions (the reference's per-shard
     * DynamoDB updates leave unmarked shards at their old checkpoint).
     * No-op when nothing was marked since the last call — the reference's
-    * `len(checkpoints) == 0` early return. Durability: versioned file +
-    * atomic rename (the WAL pattern), so a crash mid-commit leaves the
-    * previous commit intact.
+    * `len(checkpoints) == 0` early return. Durability: a versioned file
+    * published atomically by the checkpoint file manager (the WAL
+    * pattern), so a crash mid-commit leaves the previous commit intact; a
+    * version another writer published first fails the commit instead of
+    * being overwritten.
     */
   def commit(): Unit = synchronized {
     require(cfg.commit.nonEmpty,
@@ -194,30 +211,27 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     }
   }
 
-  private def manualDir =
-    new org.apache.hadoop.fs.Path(s"${cfg.checkpointRoot}/${cfg.app}/manual")
+  private def manualDir = new Path(s"${cfg.checkpointRoot}/${cfg.app}/manual")
 
-  private def manualFs =
-    manualDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private lazy val manualFm =
+    CheckpointFileManager.create(manualDir, spark.sessionState.newHadoopConf())
 
-  private def committedVersions(): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val fs = manualFs
-    if (!fs.exists(manualDir)) Seq.empty
-    else fs.listStatus(manualDir).toSeq.flatMap { st =>
+  private def committedVersions(): Seq[(Long, Path)] =
+    if (!manualFm.exists(manualDir)) Seq.empty
+    else manualFm.list(manualDir).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("offsets-") && n.endsWith(".json"))
         scala.util.Try(n.stripPrefix("offsets-").stripSuffix(".json").toLong)
           .toOption.map(_ -> st.getPath)
       else None
     }.sortBy(_._1)
-  }
 
   /** Last committed per-(stream, shard) positions; empty before the
     * first [[commit]].
     */
   private[api] def committedMarks(): Map[String, Map[String, Long]] =
     committedVersions().lastOption.map { case (_, p) =>
-      val in = manualFs.open(p)
+      val in = manualFm.open(p)
       val txt =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
@@ -225,19 +239,24 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     }.getOrElse(Map.empty)
 
   private def persistMarks(m: Map[String, Map[String, Long]]): Unit = {
-    val fs = manualFs
-    fs.mkdirs(manualDir)
+    manualFm.mkdirs(manualDir)
     val versions = committedVersions()
     val next = versions.lastOption.map(_._1 + 1).getOrElse(0L)
-    val tmp = new org.apache.hadoop.fs.Path(manualDir, s".offsets-$next.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(graft.source.ShardedStreamOffset(m).json()
-      .getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(manualDir, s"offsets-$next.json"))
+    // no overwrite: of two writers racing for one version, the second
+    // fails here rather than replacing the first one's commit
+    val out = manualFm.createAtomic(new Path(manualDir, s"offsets-$next.json"),
+      overwriteIfPossible = false)
+    try {
+      out.write(graft.source.ShardedStreamOffset(m).json().getBytes("UTF-8"))
+      out.close()
+    } catch {
+      case e: Throwable =>
+        out.cancel()
+        throw e
+    }
     // bounded history: the latest is the checkpoint, one older kept as
     // the crash-window fallback
-    versions.dropRight(1).foreach { case (_, p) => fs.delete(p, false) }
+    versions.dropRight(1).foreach { case (_, p) => manualFm.delete(p) }
   }
 
   /** Start consuming with a per-batch callback (≈ the application loop
@@ -306,7 +325,13 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
           t.setDaemon(true)
           t
         })
-      ex.scheduleAtFixedRate(() => commit(), cc.intervalMs, cc.intervalMs,
+      // a failed tick is reported, not thrown: a throwing task would
+      // silently cancel every later tick
+      ex.scheduleAtFixedRate(
+        () => try commit() catch {
+          case scala.util.control.NonFatal(e) => errorQueue.add(s"commit: ${e.getMessage}")
+        },
+        cc.intervalMs, cc.intervalMs,
         java.util.concurrent.TimeUnit.MILLISECONDS)
       ticker = Some(ex)
     }
@@ -438,7 +463,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
   private def dropEphemeralCk(): Unit = {
     ephemeralCk.foreach { loc =>
       try {
-        val p = new org.apache.hadoop.fs.Path(loc)
+        val p = new Path(loc)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       } catch { case scala.util.control.NonFatal(_) => () } // best-effort GC
     }
@@ -517,9 +542,9 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     // locations (file:/, hdfs://, s3a://), and a local-path-only read
     // here would silently miss the WAL and report the whole log as
     // backlog after every restart
-    val base = new org.apache.hadoop.fs.Path(s"${cfg.checkpointRoot}/${cfg.app}/main")
+    val base = new Path(s"${cfg.checkpointRoot}/${cfg.app}/main")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits = new org.apache.hadoop.fs.Path(base, "commits")
+    val commits = new Path(base, "commits")
     val json =
       if (!fs.exists(commits)) None
       else {
@@ -527,7 +552,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
           .map(_.getPath.getName)
           .flatMap(n => scala.util.Try(n.toLong).toOption)
         committedIds.sorted.lastOption.flatMap { id =>
-          val f = new org.apache.hadoop.fs.Path(base, s"offsets/$id")
+          val f = new Path(base, s"offsets/$id")
           if (!fs.isFile(f)) None
           else {
             val in = fs.open(f)

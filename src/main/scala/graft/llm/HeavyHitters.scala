@@ -67,15 +67,6 @@ object HeavyHitters {
       .distinct()
   }
 
-  /** Exact heavy hitters: every item with frequency strictly greater than
-    * N/k, with its exact count and share. Two scans of `items` (sketch +
-    * recount; under a shared shuffle barrier Spark reuses one exchange),
-    * but the only aggregation shuffle is over candidate-matching rows.
-    * The integer cross-multiplication `freq · k > N` keeps the threshold
-    * exact on both engines. Candidate volume is bounded by
-    * k × input partitions — size `k` to the heavy-hitter contract, not
-    * as a top-k knob.
-    */
   /** Default candidate-row ceiling for forcing the semi-join's build
     * side to broadcast. The candidate bound is k × input partitions: at
     * q86's k=20000 over a 32k-partition corpus that is 6.4e8 rows —
@@ -89,6 +80,15 @@ object HeavyHitters {
     */
   final val DefaultMaxBroadcastCandidates = 1000000L
 
+  /** Exact heavy hitters: every item with frequency strictly greater than
+    * N/k, with its exact count and share. Two scans of `items` (sketch +
+    * recount; under a shared shuffle barrier Spark reuses one exchange),
+    * but the only aggregation shuffle is over candidate-matching rows.
+    * The integer cross-multiplication `freq · k > N` keeps the threshold
+    * exact on both engines. Candidate volume is bounded by
+    * k × input partitions — size `k` to the heavy-hitter contract, not
+    * as a top-k knob.
+    */
   def exactOverThreshold(items: DataFrame, itemCol: String, k: Int,
       maxBroadcastCandidates: Long = DefaultMaxBroadcastCandidates): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")

@@ -19,4 +19,20 @@ trait SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` with the session conf `key` set to `value` (None: unset),
+    * then restores the session's own setting.
+    */
+  def withSessionConf[T](key: String, value: Option[String])(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    value match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

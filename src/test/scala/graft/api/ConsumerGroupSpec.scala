@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.SparkTestSession
-import graft.source.ShardedStreamLog
+import graft.source.{LocalCheckpointFileManager, ShardedStreamLog}
 import graft.source.ShardedStreamLog.LogRecord
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -424,6 +424,118 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
         case Some(v) => spark.conf.set(retainKey, v)
         case None => spark.conf.unset(retainKey)
       }
+    }
+  }
+
+  private val stockManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+
+  /** `manager` None: no manager named, so a new ConsumerGroup installs its own. */
+  private def withManager[T](manager: Option[String])(body: => T): T =
+    withSessionConf(LocalCheckpointFileManager.ConfKey, manager)(body)
+
+  private def drainInto(cg: ConsumerGroup, seen: ConcurrentLinkedQueue[Long]): DrainProgress =
+    cg.drain(Seq("events")) { (df, _) =>
+      df.select("sequence_number").collect()
+        .foreach(r => seen.add(r.getString(0).toLong))
+    }
+
+  private def crcFiles(ck: String): Seq[String] =
+    Seq("offsets", "commits").flatMap { sub =>
+      Option(new java.io.File(s"$ck/main", sub).list()).getOrElse(Array.empty[String])
+        .filter(_.endsWith(".crc"))
+    }
+
+  /** One checkpoint, written by `first` then resumed by `second`: every
+    * record is delivered exactly once. Returns the .crc files the first
+    * half left in the offset WAL and the commit log.
+    */
+  private def resumeAcross(first: Option[String], second: Option[String]): Seq[String] = {
+    val (root, ck) = newEnv()
+    val cfg = ConsumerConfig(app = "switch", logRoot = root, checkpointRoot = ck,
+      scanLimit = 4L)
+    val seen = new ConcurrentLinkedQueue[Long]()
+    ShardedStreamLog.append(root, "events", "shard-0", (0L to 9L).map(rec))
+    val crcs = withManager(first) {
+      val cg = new ConsumerGroup(spark, cfg)
+      try assert(drainInto(cg, seen).totalRecords == 10L) finally cg.close()
+      crcFiles(s"$ck/switch")
+    }
+    ShardedStreamLog.append(root, "events", "shard-0", (10L to 14L).map(rec))
+    withManager(second) {
+      val cg = new ConsumerGroup(spark, cfg)
+      try {
+        assert(spark.conf.get(LocalCheckpointFileManager.ConfKey) ==
+          second.getOrElse(classOf[LocalCheckpointFileManager].getName))
+        assert(drainInto(cg, seen).records == Map("events" -> 5L))
+        // and a tailing start on the same checkpoint sees only what is new
+        ShardedStreamLog.append(root, "events", "shard-0", (15L to 16L).map(rec))
+        cg.start(Seq("events")) { (df, _) =>
+          df.select("sequence_number").collect()
+            .foreach(r => seen.add(r.getString(0).toLong))
+        }
+        cg.processAllAvailable()
+      } finally cg.close()
+    }
+    assert(seen.asScala.toSeq.sorted == (0L to 16L), "no replay, no loss")
+    crcs
+  }
+
+  test("a checkpoint written by the stock manager resumes exactly-once under the local one") {
+    val crcs = resumeAcross(first = Some(stockManager), second = None)
+    assert(crcs.nonEmpty, "the stock manager's checksum files are in the checkpoint")
+  }
+
+  test("a checkpoint written by the local manager resumes exactly-once under the stock one") {
+    val crcs = resumeAcross(first = None, second = Some(stockManager))
+    assert(crcs.isEmpty, s"the local manager writes no checksum files: $crcs")
+  }
+
+  test("a drain starts no processes for its checkpoint") {
+    // counts the processes whose stack passes through a checkpoint file
+    // manager or ConsumerGroup; Spark's own clean-up of a query's artifact
+    // directory (rm -rf) passes through neither and is not counted
+    def processStarts(body: => Unit): Seq[String] = {
+      val recording = new jdk.jfr.Recording()
+      recording.enable("jdk.ProcessStart").withStackTrace()
+      recording.start()
+      try body finally recording.stop()
+      val file = Files.createTempFile("drain", ".jfr")
+      try {
+        recording.dump(file)
+        val events = jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+        events.flatMap { e =>
+          val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+            .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+          if (frames.exists(f => f.contains("CheckpointFileManager") || f.startsWith("graft.api.")))
+            Some(s"${e.getString("command")} at ${frames.take(12).mkString(" < ")}")
+          else None
+        }
+      } finally {
+        recording.close()
+        Files.deleteIfExists(file)
+      }
+    }
+    def drainTwoShards(app: String): Unit = {
+      val (root, ck) = newEnv()
+      Seq("shard-0", "shard-1").foreach { sh =>
+        ShardedStreamLog.append(root, "events", sh, (0L to 8L).map(rec))
+      }
+      val cg = new ConsumerGroup(spark, ConsumerConfig(app = app, logRoot = root,
+        checkpointRoot = ck, scanLimit = 3L))
+      try {
+        val p = cg.drain(Seq("events"))((df, _) => df.count())
+        assert(p.records == Map("events" -> 18L) && p.batches == 3L, s"progress: $p")
+      } finally cg.close()
+    }
+    val ours = withManager(None)(processStarts(drainTwoShards("no-procs")))
+    assert(ours.isEmpty, s"checkpoint writes started processes:\n${ours.mkString("\n")}")
+    // the recording does see them where they happen: without Hadoop's
+    // native library, the stock manager shells out for chmod and readlink
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) {
+      val stock = withManager(Some(stockManager))(processStarts(drainTwoShards("stock-procs")))
+      assert(stock.nonEmpty, "the stock manager's process starts are visible to the recording")
     }
   }
 }
