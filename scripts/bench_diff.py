@@ -10,12 +10,15 @@ Each input is either a one-line JSON artifact (BENCH_ROUND.json /
 BENCH_SELF.json) or a line index into the history journal. Reports every
 query whose time moved by more than --ratio (default 1.5x) AND --floor
 seconds (default 0.2 s absolute difference, to keep ms-noise out), plus
-the totals, error deltas, and any isolated re-run adjudications present
-in the newer artifact.
+the totals and error deltas, and warns when the two runs differ in
+`boot_id` or `cpus` (absolute seconds compare only within one host and
+boot).
 """
 import argparse
 import json
 import sys
+
+from scaling_report import host_warning
 
 
 def load_lines(path):
@@ -41,6 +44,9 @@ def main():
         a, b = hist[ia], hist[ib]
 
     qa, qb = a["queries"], b["queries"]
+    warning = host_warning(a, b)
+    if warning:
+        print(warning)
     print(f"old: total={a.get('value')}s n={len(qa)} errors={len(a.get('errors', {}))} sf={a.get('sf')}")
     print(f"new: total={b.get('value')}s n={len(qb)} errors={len(b.get('errors', {}))} sf={b.get('sf')}")
 
@@ -55,8 +61,7 @@ def main():
     for q in sorted(set(qa) & set(qb)):
         ta, tb = qa[q], qb[q]
         if ta <= 0 or tb <= 0:
-            if ta <= 0 or tb <= 0:
-                moves.append((float("inf"), q, ta, tb, "error-state change"))
+            moves.append((float("inf"), q, ta, tb, "error-state change"))
             continue
         r = tb / ta
         if (r >= args.ratio or r <= 1 / args.ratio) and abs(tb - ta) >= args.floor:
@@ -68,15 +73,6 @@ def main():
         print(f"\n{len(moves)} quer{'y' if len(moves) == 1 else 'ies'} moved >= {args.ratio}x (and {args.floor}s):")
         for _, q, ta, tb, tag in moves:
             print(f"  {q:45s} {ta:8.3f} -> {tb:8.3f}  ({tag})")
-
-    iso = b.get("isolated", {})
-    if iso:
-        print(f"\nisolated re-run adjudications in the new artifact ({len(iso)}):")
-        for q, t in sorted(iso.items()):
-            insuite = qb.get(q)
-            verdict = "burst (isolated recovered)" if insuite and t < 0.6 * insuite \
-                else "consistent (possible regression)"
-            print(f"  {q:45s} in-suite {insuite} / isolated {t:.3f}  -> {verdict}")
 
 
 if __name__ == "__main__":

@@ -6,15 +6,9 @@ better), ~1 linear, > 1 super-linear. Small absolute times are noise-
 dominated, so queries under --floor seconds at the LARGE sf are reported
 but not flagged.
 
-Drift correction (self-adjudicating since round 14): each artifact
-carries `probe_cal`, the steady-state minimum of its interleaved fixed
-health probe (q02). When the two runs straddle a host-speed change
-(reboot, load shift), absolute seconds are not comparable; the corrected
-column rescales the hi run onto the lo run's effective speed,
-    t_hi' = t_hi * (cal_lo / cal_hi),
-and recomputes the exponent — the same ±log(cal_hi/cal_lo)/log(ratio)
-shift rounds 12-13 derived by hand in SCALING.md prose. Both columns are
-printed; same-boot pairs show them (near-)identical.
+Absolute seconds compare only between runs on one host and boot: the
+report warns when the two artifacts' `boot_id` or `cpus` differ, and then
+the exponents carry the host difference too.
 
 Usage: scaling_report.py <bench_lo.json> <bench_hi.json> <ratio> [--floor 0.5]
 """
@@ -23,41 +17,22 @@ import math
 import sys
 
 
+def host_warning(lo, hi):
+    """A warning line when the two runs come from different boots or cpu
+    counts, else None."""
+    diffs = [f"{k} {lo.get(k)} vs {hi.get(k)}" for k in ("boot_id", "cpus")
+             if lo.get(k) != hi.get(k)]
+    return f"WARNING: runs differ in {'; '.join(diffs)}" if diffs else None
+
+
 def main() -> int:
     lo_path, hi_path, ratio = sys.argv[1], sys.argv[2], float(sys.argv[3])
     floor = float(sys.argv[sys.argv.index("--floor") + 1]) if "--floor" in sys.argv else 0.5
     lo = json.load(open(lo_path))
     hi = json.load(open(hi_path))
-    cal_lo = lo.get("probe_cal", -1.0)
-    cal_hi = hi.get("probe_cal", -1.0)
-    # probe_cal semantics changed in round 14 (full-series min, tagged
-    # probe_cal_kind="series_min") from the untagged 3-sample cold-start
-    # min. Mixing kinds would fabricate a JIT-warmup-sized drift on a
-    # same-speed pair, so the correction only applies when both artifacts
-    # carry the SAME kind; otherwise warn and report raw == corrected.
-    kind_lo = lo.get("probe_cal_kind", "startup3")
-    kind_hi = hi.get("probe_cal_kind", "startup3")
-    comparable = cal_lo > 0 and cal_hi > 0 and kind_lo == kind_hi
-    drift = cal_lo / cal_hi if comparable else 1.0
-    same_boot = lo.get("boot_id", "?") == hi.get("boot_id", "??")
-    corr_shift = math.log(drift) / math.log(ratio)
-    if not comparable:
-        print(f"WARNING: probe_cal kinds differ or are missing "
-              f"(lo {kind_lo}, hi {kind_hi}) — drift correction skipped, "
-              f"corrected column equals raw")
-    # COMPUTE-probe correction (round 15): the scan probe misses
-    # compute-side host drift (observed: equal scan probes while the
-    # graph/codec families ran 1.3-3x slower). When both artifacts carry
-    # probe_cpu_cal, a second corrected column rescales by the
-    # pure-codegen kernel's drift; a row is flagged only if super-linear
-    # under EVERY available correction — a flag should survive both
-    # drift hypotheses, and the printed columns let a reader judge rows
-    # where the two corrections disagree.
-    cpu_lo = lo.get("probe_cpu_cal", -1.0)
-    cpu_hi = hi.get("probe_cpu_cal", -1.0)
-    cpu_comparable = cpu_lo > 0 and cpu_hi > 0
-    cpu_shift = (math.log(cpu_lo / cpu_hi) / math.log(ratio)
-                 if cpu_comparable else None)
+    warning = host_warning(lo, hi)
+    if warning:
+        print(warning)
     rows = []
     for q in sorted(set(lo["queries"]) & set(hi["queries"])):
         t_lo, t_hi = lo["queries"][q], hi["queries"][q]
@@ -67,40 +42,19 @@ def main() -> int:
         rows.append((q, t_lo, t_hi, math.log(t_hi / t_lo) / math.log(ratio)))
     rows.sort(key=lambda r: -(r[3] if r[3] is not None else 99))
     flagged = 0
-    print(f"probe_cal: lo {cal_lo:.3f}s, hi {cal_hi:.3f}s "
-          f"({'same' if same_boot else 'CROSS'} boot; hi probe TIME "
-          f"{1 / drift:.2f}x of lo — above 1 means the hi run saw a slower "
-          f"host; corrected = raw {corr_shift:+.2f})")
-    if cpu_comparable:
-        print(f"probe_cpu_cal: lo {cpu_lo:.3f}s, hi {cpu_hi:.3f}s "
-              f"(hi compute-kernel TIME {cpu_hi / cpu_lo:.2f}x of lo; "
-              f"corrected_cpu = raw {cpu_shift:+.2f}; flags require "
-              f"super-linearity under BOTH corrections)")
     print()
-    cpu_col = " corrected_cpu |" if cpu_comparable else ""
-    print(f"| query | t@lo (s) | t@hi (s) | exponent | corrected |{cpu_col}")
-    print(f"|---|---|---|---|---|{'---|' if cpu_comparable else ''}")
+    print("| query | t@lo (s) | t@hi (s) | exponent |")
+    print("|---|---|---|---|")
     for q, t_lo, t_hi, e in rows:
         if e is None:
-            err_cpu = " ERROR |" if cpu_comparable else ""
-            print(f"| {q} | {t_lo:.2f} | {t_hi:.2f} | ERROR | ERROR |{err_cpu}")
+            print(f"| {q} | {t_lo:.2f} | {t_hi:.2f} | ERROR |")
             flagged += 1
             continue
-        ec = e + corr_shift
-        # flag on the CORRECTED exponent(s): a host-drift artifact must
-        # not flag a query, and drift must not hide a real
-        # super-linearity — with a cpu probe present, a flag must
-        # survive both drift hypotheses
-        is_flag = ec > 1.15 and t_hi >= floor
-        ecc = e + cpu_shift if cpu_comparable else None
-        if cpu_comparable:
-            is_flag = is_flag and ecc > 1.15
-        flag = " **super-linear**" if is_flag else ""
+        is_flag = e > 1.15 and t_hi >= floor
         if is_flag:
             flagged += 1
-        cpu_cell = f" {ecc:.2f} |" if cpu_comparable else ""
-        print(f"| {q} | {t_lo:.2f} | {t_hi:.2f} | {e:.2f} "
-              f"| {ec:.2f}{flag} |{cpu_cell}")
+        flag = " **super-linear**" if is_flag else ""
+        print(f"| {q} | {t_lo:.2f} | {t_hi:.2f} | {e:.2f}{flag} |")
     # totals over queries valid at BOTH scales only: a query that errored
     # at one scale would otherwise contribute seconds to one side of the
     # aggregate exponent and bias it sub-linear exactly when data is
@@ -108,11 +62,8 @@ def main() -> int:
     tot_lo = sum(t_lo for _, t_lo, _, e in rows if e is not None)
     tot_hi = sum(t_hi for _, _, t_hi, e in rows if e is not None)
     agg = math.log(tot_hi / tot_lo) / math.log(ratio)
-    cpu_agg = (f" / {agg + cpu_shift:.2f} cpu-corrected"
-               if cpu_comparable else "")
     print(f"\ntotal: {tot_lo:.1f}s -> {tot_hi:.1f}s on a {ratio:.0f}x corpus "
-          f"(aggregate exponent {agg:.2f} raw / {agg + corr_shift:.2f} "
-          f"drift-corrected{cpu_agg}); {flagged} queries flagged")
+          f"(aggregate exponent {agg:.2f}); {flagged} queries flagged")
     return 0
 
 

@@ -1,339 +1,114 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The driver-contract batch bench: every registered query at
+  * `SPARK_GRAFT_SF_DIR`, timed as the minimum of `SPARK_GRAFT_REPS` runs.
+  * It prints one JSON line, `{"metric":"total",...,"queries":{...}}`, as
+  * its last stdout line, writes the same line to `SPARK_GRAFT_BENCH_OUT`
+  * (default `BENCH_ROUND.json`) and appends it to the journal
+  * `SPARK_GRAFT_BENCH_HISTORY` (default `BENCH_HISTORY.jsonl`).
+  * `SPARK_GRAFT_ONLY=q01_...,q02_...` times a subset.
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     Checkpoints.requireFreezes("graft.Bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // default 100 entries thrashes on a 170-query session: the warmup
-      // pass alone compiles >170 plans, so timed queries were paying
-      // recompilation (q60 0.39->0.81s round over round, same plan).
-      // Size the cache to hold the whole surface's generated classes.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Optional comma-separated query-name filter and repeat count.
-    // Each query reports the MINIMUM over `reps` timed runs (default 2):
-    // the minimum estimates the true plan cost absent transient host
-    // interference — single-shot totals measured up to 35% slower under
-    // unrelated background load on an otherwise identical run.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val cpus = Session.defaultCpus
+    val spark = Session.local("graft-bench", cpus)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Warmup (untimed): run every query once at the smallest scale factor
-    // so classloading, whole-stage codegen compilation, and JIT profiles
-    // are hot before the timed pass — the timed numbers then measure the
-    // plans, not first-run JVM costs. Warmup failures are ignored here;
-    // the timed pass records them.
-    if (new java.io.File(warmDir).isDirectory) names.foreach { case (_, fn) =>
-      try {
-        val df = fn(spark, warmDir)
-        try df.write.format("noop").mode("overwrite").save()
-        finally Checkpoints.release(df)
-      }
-      catch { case _: Throwable => () }
-    }
-    // minimal JVM/codegen/session warmup even without a warmup dataset,
-    // so the first timed query never absorbs session-init cost
+    // Warm-up (untimed, failures ignored): every query once at the
+    // smallest scale factor, so classloading, codegen and JIT are hot
+    // before the timed pass and the timed numbers measure the plans.
+    if (new java.io.File(warmDir).isDirectory)
+      names.foreach { case (_, fn) => scala.util.Try(run(spark, fn, warmDir)) }
     else spark.range(1000).selectExpr("sum(id)").collect()
-    var errors = Map.empty[String, String]
-    // Interleaved health probe: re-run one cheap fixed query (q02) every
-    // ~25 timed queries and record the series. A multi-minute host stall
-    // mid-run (observed r8: one contiguous 4-query window read 8-20×
-    // slower than the committed same-code pair) is invisible to
-    // min-of-2 back-to-back reps and to a single probe at the start;
-    // the series bounds WHICH span of the run was degraded, so
-    // per-query numbers can be confidence-banded post hoc.
-    val probeFn = SparkEntry.queries.get("q02_filter_project")
-    val probes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val probesCpu = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val probeOffsets = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val runStart = System.nanoTime()
-    def probe(): Unit = probeFn.foreach { fn =>
-      probeOffsets += (System.nanoTime() - runStart) / 1e9
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        try df.write.format("noop").mode("overwrite").save()
-        finally Checkpoints.release(df)
-      }
-      catch { case _: Throwable => () }
-      probes += (System.nanoTime() - t0) / 1e9
-      // COMPUTE probe companion (round 15): the scan probe measures I/O
-      // + light predicate speed, and a compute-contended host window
-      // (CPU throttling, a sibling tenant) can leave it unchanged while
-      // shuffle/codegen-heavy queries run 1.3-3x slower — observed on
-      // the round-15 pair's hi half, where the scan probes matched
-      // round 14 but the graph/codec families did not. A fixed pure-
-      // codegen kernel (no I/O, no shuffle, SF-independent, fixed task
-      // count) makes that drift machine-readable for the next
-      // adjudication.
-      // Round-17 fix: the round-15 kernel summed RAW xxhash64 values —
-      // 64M uniform int64 addends overflow a long partial sum with
-      // near-certainty, and under ANSI mode (Spark 4 default) sum()
-      // THROWS, so with the exception swallowed below the "cpu probe"
-      // measured job-ABORT latency (~15 ms, 288 ARITHMETIC_OVERFLOW
-      // stacks per bench log) for two rounds, not compute speed.
-      // shiftright(·, 32) bounds each addend to ±2^31 (|sum| ≤ 2^57 —
-      // 64x inside int64) while the per-row cost stays hash-dominated.
-      // probe_cpu_kind tags the artifact so cross-round cpu-probe
-      // comparisons refuse to mix the broken constant with this one.
-      val t1 = System.nanoTime()
-      try spark.range(0L, 64000000L, 1L, 8)
-        .selectExpr("sum(shiftright(xxhash64(id), 32))").collect()
-      catch { case _: Throwable => () }
-      probesCpu += (System.nanoTime() - t1) / 1e9
-    }
-    // Boot fingerprint + probe calibration (round-12 verdict: the final
-    // pair straddled a host reboot and boots differ 2.5-3× on
-    // shuffle-heavy sf1 queries; the adjudication lived in prose).
-    // Recording the boot id and a 3-sample calibration constant makes
-    // cross-boot comparisons machine-detectable: same boot_id → absolute
-    // seconds comparable; different → compare only via probe_cal ratio.
-    def procLine(path: String): String =
-      try {
-        val src = scala.io.Source.fromFile(path)
-        try src.getLines().next().trim finally src.close()
-      } catch { case _: Throwable => "" }
-    val bootId = procLine("/proc/sys/kernel/random/boot_id")
-    val uptimeSec = procLine("/proc/uptime").split(" ").headOption
-      .filter(_.nonEmpty).getOrElse("-1")
-    probe(); probe(); probe()
-    var sinceProbe = 0
-    // run-order host-burst forensics (round 11: the round-10 driver-vs-
-    // pair swings were contiguous execution windows hit by multi-minute
-    // host bursts — see SCALING.md): queries whose reps disagree by >2×
-    // are re-measured once more and recorded with their run offset, so a
-    // reader can align them against the probe series post hoc.
-    val suspects = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val results = names.map { case (name, fn) =>
-      sinceProbe += 1
-      if (sinceProbe >= 12) { sinceProbe = 0; probe() }
-      val qOffset = (System.nanoTime() - runStart) / 1e9
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        // noop sink: executes the complete plan (final sorts and projections
-        // included) — a bare count() would let Catalyst prune them.
-        // Checkpoints.release after the write: without it, every rep of a
-        // two-pass-operator query pins a fresh frozen snapshot in executor
-        // storage for the rest of the session — accumulated storage
-        // pressure perturbs later timings at sf1+. The release (an async
-        // driver-side unpersist of every snapshot the query's build made)
-        // is inside the timed region; its cost is sub-ms.
-        val ok =
-          try {
-            val df = fn(spark, sfDir)
-            try { df.write.format("noop").mode("overwrite").save(); true }
-            finally Checkpoints.release(df)
-          }
-          catch {
-            case e: Throwable =>
-              // strip quotes, backslashes and ALL control chars: any of
-              // them inside the bare-concatenated JSON string breaks it
-              errors += name -> e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
-              false
-          }
-        // failed queries record -1, not their elapsed time: a failure must
-        // never be indistinguishable from a fast success in BENCH output
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      var times = (1 to reps).map(_ => once())
-      // adaptive extra rep: >2× rep disagreement means at least one rep
-      // ran inside a host burst — one more sample rescues queries at a
-      // burst BOUNDARY (a query fully inside a burst stays slow and is
-      // named in `suspect` for post-hoc confidence banding)
-      if (reps > 1 && !times.contains(-1.0) && times.max > 2.0 * times.min) {
-        suspects += name -> qOffset
-        val errsBefore = errors
-        val extra = once()
-        // the rescue sample must only ever IMPROVE the row: if just the
-        // extra rep fails (-1), keep the base reps' min and drop its
-        // error entry — all measured reps succeeded
-        if (extra >= 0) times = times :+ extra else errors = errsBefore
-      }
-      name -> (if (times.contains(-1.0)) -1.0 else times.min)
+      name -> minOfReps(reps)(run(spark, fn, sfDir))
     }.toMap
-    // End-of-suite isolated adjudication (closes the probe blind spot: the
-    // ~12-query probe cadence missed q229/q230/q233 in r11): any query
-    // whose min-of-reps exceeds 1.8× its committed scaling-pair time
-    // (BENCH_SELF.json, same sf) is re-run ONCE here, far from its
-    // original execution window. Both numbers land in the artifact —
-    // isolated ≈ pair reads as a host burst; isolated still high reads as
-    // a genuine regression to root-cause. The 0.25 s absolute-excess floor
-    // keeps ms-scale noise from triggering re-runs of trivial queries.
-    var pairBootId = ""
-    val pair: (String, Map[String, Double]) = {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_PAIR", "BENCH_SELF.json"))
-      if (!java.nio.file.Files.isReadable(p)) ("", Map.empty)
-      else try {
-        val txt = java.nio.file.Files.readString(p)
-        pairBootId = "\"boot_id\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse("")
-        val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse("")
-        val qStart = txt.indexOf("\"queries\":{")
-        val qs =
-          if (qStart < 0) Map.empty[String, Double]
-          else {
-            val body = txt.substring(qStart + "\"queries\":{".length,
-              txt.indexOf("}", qStart)) // flat numeric object: first } ends it
-            "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-        (sf, qs)
-      } catch { case scala.util.control.NonFatal(_) => ("", Map.empty) }
-    }
-    val isolated: Map[String, Double] =
-      if (pair._1 != sfDir) Map.empty
-      else names.flatMap { case (name, fn) =>
-        val t = results(name)
-        val base = pair._2.getOrElse(name, -1.0)
-        // 1.5x (was 1.8): the round-15 pair's q49 read 1.77x of its pair
-        // baseline — a genuine adjudication candidate that sat just
-        // under the old trigger; the isolated re-run is cheap relative
-        // to the forensic value of a far-from-window second sample
-        if (t > 0 && base > 0 && t > 1.5 * base && t - base > 0.25) {
-          val t0 = System.nanoTime()
-          val ok = try {
-            val df = fn(spark, sfDir)
-            try { df.write.format("noop").mode("overwrite").save(); true }
-            finally Checkpoints.release(df)
-          } catch { case _: Throwable => false }
-          if (ok) Some(name -> (System.nanoTime() - t0) / 1e9) else None
-        } else None
-      }.toMap
-    // Adjudicated per-query values (round-15 verdict): when the
-    // end-of-suite isolated re-run measured a SMALLER time than the
-    // in-suite min-of-reps, the `queries` map carries the adjudicated
-    // (isolated) value and the total sums the same numbers — downstream
-    // consumers (scaling_report, bench_diff, round-over-round judging)
-    // otherwise start from numbers this harness itself has already
-    // shown to be host bursts (r15: q196 read 9.8 s in-suite, 2.07 s
-    // isolated, and BENCH_ROUND carried the 9.8). The raw in-suite min
-    // survives per substituted query in the sibling `insuite` map;
-    // `isolated` keeps every re-run measurement, substituted or not.
-    val substituted = isolated.filter { case (n, t) =>
-      results.getOrElse(n, -1.0) > 0 && t > 0 && t < results(n)
-    }
-    val insuite = substituted.keys.map(n => n -> results(n)).toMap
-    val adjudicated = results ++ substituted
-    // probe_cal = the FULL probe series' minimum, not the 3 startup
-    // samples': the startup probes run on a cold JVM (no JIT profiles for
-    // the probe plan yet), which biased the calibration constant high on
-    // exactly the cross-boot ratio comparisons it exists to stabilize.
-    // The min over the whole run (startup + every ~12-query interleave)
-    // is the steady-state floor of this boot's effective speed.
-    val probeCal = if (probes.isEmpty) -1.0 else probes.min
-    val probeCpuCal = if (probesCpu.isEmpty) -1.0 else probesCpu.min
-    // 3-decimal (ms-resolution) values: full-precision doubles made the
-    // 170-query line ~6.3 KB and overflowed the driver's log-tail JSON
-    // capture (BENCH_r07 recorded parsed:null). -1 failure markers kept.
-    def f3(v: Double): String =
-      if (v < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = adjudicated.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val ins = insuite.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val total = adjudicated.values.filter(_ >= 0).sum
-    // per-query values are the MINIMUM over `reps` timed runs; recording
-    // reps makes round-over-round comparisons self-describing (a min-of-5
-    // artifact is not comparable to a single-shot one under host load)
-    val ps = probes.map(f3).mkString("[", ",", "]")
-    val psCpu = probesCpu.map(f3).mkString("[", ",", "]")
-    val po = probeOffsets.map(f3).mkString("[", ",", "]")
-    val su = suspects.map { case (k, off) => s"\"" + k + "\":" + f3(off) }
-      .mkString("{", ",", "}")
-    val iso = isolated.map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    // "same"/"cross" labels whether the adjudication baseline (the pair
-    // artifact) was measured on THIS boot — a cross-boot baseline makes
-    // absolute-seconds comparisons unreliable (compare probe_cal ratios
-    // instead); "unknown" = no readable pair or no boot id on either side
-    val pairBoot =
-      if (bootId.isEmpty || pairBootId.isEmpty) "unknown"
-      else if (bootId == pairBootId) "same" else "cross"
-    // the journal/file line is "total_detail", NOT "total": a consumer
-    // matching "metric":"total" in the program output must find exactly
-    // ONE line — the full contract line printed LAST below
-    // probe_cal_kind versions the calibration semantics (round 14 moved
-    // from an untagged 3-sample cold-start min to the full-series min);
-    // scaling_report refuses to cross-correct artifacts of different kinds
-    val line =
-      s"""{"metric":"total_detail","value":${f3(total)},"unit":"sec","timing":"min_of_reps","reps":$reps,"ts":${System.currentTimeMillis()},"boot_id":"$bootId","uptime_sec":$uptimeSec,"probe_cal":${f3(probeCal)},"probe_cal_kind":"series_min","probe_cpu_cal":${f3(probeCpuCal)},"probe_cpu_kind":"xxsum_shift32","pair_boot":"$pairBoot","queries":$qs,"insuite":$ins,"errors":$es,"probe_series":$ps,"probe_cpu_series":$psCpu,"probe_offsets":$po,"suspect":$su,"isolated":$iso,"sf":"$sfDir"}"""
-    println(line)
-    // Round 17 — the driver-contract emit, root-caused from the artifacts:
-    // PERF_r16 compared zero queries because NO round's BENCH artifact ever
-    // parsed, including round 1 whose saved tail holds the COMPLETE
-    // 45-query line — intact but "[info] "-PREFIXED by sbt's forked-run
-    // logger, so a parser scanning for lines that START with '{' matched
-    // nothing in 16 rounds. build.sbt now forks with StdoutOutput
-    // (verbatim stdout), and the LAST program line below is the full
-    // contract object {"metric":"total",...,"queries":{...},"sf":...} —
-    // the ONLY line carrying "metric":"total", so first-match, last-match
-    // and queries-seeking parsers all land on the complete per-query map.
-    // The small diagnostic summary keeps its fields under "total_brief".
-    // Timed region, adjudication, env-var semantics: unchanged.
-    println(
-      s"""{"metric":"total_brief","value":${f3(total)},"unit":"sec","timing":"min_of_reps","reps":$reps,"n_queries":${results.size},"n_errors":${errors.size},"n_suspect":${suspects.size},"n_isolated":${isolated.size},"boot_id":"$bootId","probe_cal":${f3(probeCal)},"probe_cal_kind":"series_min","probe_cpu_cal":${f3(probeCpuCal)},"probe_cpu_kind":"xxsum_shift32","pair_boot":"$pairBoot","probe_series":$ps,"sf":"$sfDir"}""")
-    println(
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","timing":"min_of_reps","reps":$reps,"n_queries":${results.size},"n_errors":${errors.size},"boot_id":"$bootId","probe_cal":${f3(probeCal)},"probe_cpu_cal":${f3(probeCpuCal)},"probe_cpu_kind":"xxsum_shift32","pair_boot":"$pairBoot","queries":$qs,"insuite":$ins,"errors":$es,"isolated":$iso,"sf":"$sfDir"}""")
-    // also persist the line as a file artifact: the driver keeps only a
-    // log TAIL, which has truncated past benches (r3 lost the total and
-    // 11 per-query entries) — the file survives regardless of log size.
-    // Default output is BENCH_ROUND.json, deliberately DECOUPLED from the
-    // committed scaling-pair artifacts (BENCH_SELF.json / BENCH_SELF_SF1
-    // .json): pair artifacts are immutable once cited by SCALING.md's
-    // exponent table, so an un-parameterized round-end run must never
-    // overwrite them (observed r9: the driver's round-end refresh clobbered
-    // the working-tree BENCH_SELF.json). Pair runs pass
-    // SPARK_GRAFT_BENCH_OUT explicitly.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_ROUND.json")), line + "\n")
+    val bootId = scala.util.Try(Files.readString(
+      Paths.get("/proc/sys/kernel/random/boot_id")).trim).getOrElse("")
+    val line = contractLine(results, reps, cpus, bootId, sfDir, System.currentTimeMillis())
+    // the file survives a driver log tail that truncates the line
+    val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_ROUND.json"))
+    val history = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl"))
+    try Files.writeString(out, line + "\n")
     catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not write bench artifact: $e") }
-    // per-round history: BENCH_ROUND.json is OVERWRITTEN every round, which
-    // made round-over-round per-query diffs impossible once a driver log
-    // tail truncated (r10). Appending each full-detail line (ts-stamped) to
-    // a committed journal keeps every round's per-query numbers diffable.
-    // Local-iteration runs that redirect the artifact OUT of the repo
-    // (SPARK_GRAFT_BENCH_OUT=/tmp/...) skip the journal: the committed
-    // history holds what landed in the repo (driver-round and pair
-    // runs), not sf0.001 smoke loops. The test is the resolved artifact
-    // PATH, not a separator heuristic — './BENCH_SELF.json' must still
-    // journal and '/tmp/x.json' must still skip.
-    // anchored to the resolved JOURNAL's parent directory, not the JVM
-    // cwd: a driver/pair run launched from outside the repo with
-    // SPARK_GRAFT_BENCH_OUT pointing at an in-repo artifact must still
-    // journal — the journal's own repo is the containment that matters
-    val historyPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_HISTORY.jsonl"))
-      .toAbsolutePath.normalize
-    val localIteration = {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_ROUND.json"))
-        .toAbsolutePath.normalize
-      val repo = Option(historyPath.getParent)
-        .getOrElse(historyPath.getRoot)
-      !out.startsWith(repo)
-    }
-    if (!localIteration)
-    try java.nio.file.Files.writeString(
-      historyPath,
-      line + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: java.io.IOException =>
-      System.err.println(s"[bench] could not append bench history: $e") }
+    if (journaled(out, history))
+      try Files.writeString(history, line + "\n",
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      catch { case e: java.io.IOException =>
+        System.err.println(s"[bench] could not append bench history: $e") }
+    println(line)
     spark.stop()
+  }
+
+  /** One timed run as every harness runs a query: build, write to the noop
+    * sink (the complete plan executes; a bare count() would let Catalyst
+    * prune final sorts and projections), then release the query's
+    * snapshots, so no rep pins storage that perturbs later timings.
+    */
+  private def run(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      dir: String): Unit = {
+    val df = fn(spark, dir)
+    try df.write.format("noop").mode("overwrite").save()
+    finally Checkpoints.release(df)
+  }
+
+  /** Seconds of the fastest of `reps` runs of `body`, or the first
+    * failure: the minimum estimates the plan's cost without transient
+    * host interference.
+    */
+  def minOfReps(reps: Int)(body: => Unit): Either[Throwable, Double] = {
+    require(reps > 0, s"SPARK_GRAFT_REPS must be positive: $reps")
+    try Right((1 to reps).map { _ =>
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
+    }.min)
+    catch { case e: Throwable => Left(e) }
+  }
+
+  /** The contract line. A failed query reads -1, never a time, and its
+    * message lands in `errors`; `total` sums the successful queries.
+    */
+  def contractLine(results: Map[String, Either[Throwable, Double]], reps: Int,
+      cpus: Int, bootId: String, sf: String, ts: Long): String = {
+    val times = results.map { case (k, r) => k -> r.getOrElse(-1.0) }
+    // quotes, backslashes and control characters cannot break the JSON
+    val errors = results.collect { case (k, Left(e)) =>
+      k -> e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200) }
+    def obj(m: Map[String, String]): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val total = times.values.filter(_ >= 0).sum
+    s"""{"metric":"total","value":${f3(total)},"unit":"sec","timing":"min_of_reps",""" +
+      s""""reps":$reps,"n_queries":${results.size},"n_errors":${errors.size},""" +
+      s""""cpus":$cpus,"boot_id":"$bootId","ts":$ts,""" +
+      s""""queries":${obj(times.map { case (k, v) => k -> f3(v) })},""" +
+      s""""errors":${obj(errors.map { case (k, v) => k -> s""""$v"""" })},"sf":"$sf"}"""
+  }
+
+  /** Three decimals under any default locale (a comma decimal separator
+    * would break the JSON); ms resolution keeps the 351-query line short
+    * enough for the driver's log-tail capture. Failures stay -1.
+    */
+  def f3(v: Double): String =
+    if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Whether a run that writes its artifact to `out` belongs in the
+    * journal at `history`: only when the artifact lies in the journal's
+    * own directory tree. Local iterations that send the artifact out of
+    * the repo (`/tmp/x.json`) stay out; `./BENCH_SELF.json` goes in.
+    */
+  def journaled(out: Path, history: Path): Boolean = {
+    val h = history.toAbsolutePath.normalize
+    out.toAbsolutePath.normalize.startsWith(Option(h.getParent).getOrElse(h.getRoot))
   }
 }

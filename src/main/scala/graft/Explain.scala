@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: print the formatted physical plan of one or more
   * registered queries (and optionally execute them with per-query wall
   * timing). The local twin of reading the Spark UI's SQL tab — used when
@@ -14,14 +12,7 @@ object Explain {
     require(args.length >= 2, "usage: Explain <sfDir> <q1,q2,...> [--run]")
     val (sfDir, names) = (args(0), args(1).split(",").toSet)
     val run = args.contains("--run")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-explain")
     SparkEntry.queries.filter { case (n, _) => names.contains(n) }
       .foreach { case (name, fn) =>
         println(s"\n===== $name =====")

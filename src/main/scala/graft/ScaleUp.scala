@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Derive a larger benchmark corpus from a driver fixture by replicating it
@@ -103,13 +103,7 @@ object ScaleUp {
     val factor = if (args.length > 2) args(2).toInt else 10
     require(!dst.startsWith("/root/testdata") && !dst.startsWith("/root/reference"),
       "ScaleUp must not write into the read-only fixture trees")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-scaleup")
     Files.createDirectories(Paths.get(dst))
     Tables.names.foreach { t =>
       val base = Tables(spark, src, t)

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1 smoke twin: runs the flagship `SparkEntry.entry` and prints its row
   * count (driver checks rows > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-smoke")
     val df = SparkEntry.entry(spark)
     df.show(5, truncate = false)
     println(s"entry rows: ${df.count()}")

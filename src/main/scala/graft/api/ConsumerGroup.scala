@@ -2,10 +2,10 @@ package graft.api
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import graft.source.LocalCheckpointFileManager
+import graft.source.{LocalCheckpointFileManager, ShardedStreamOffset}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, CommitLog, OffsetSeqLog}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 /** Configuration parity with the reference's `kinesumer.Config`
@@ -235,7 +235,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       val txt =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      graft.source.ShardedStreamOffset.fromJson(txt).positions
+      ShardedStreamOffset.fromJson(txt).positions
     }.getOrElse(Map.empty)
 
   private def persistMarks(m: Map[String, Map[String, Long]]): Unit = {
@@ -247,7 +247,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     val out = manualFm.createAtomic(new Path(manualDir, s"offsets-$next.json"),
       overwriteIfPossible = false)
     try {
-      out.write(graft.source.ShardedStreamOffset(m).json().getBytes("UTF-8"))
+      out.write(ShardedStreamOffset(m).json().getBytes("UTF-8"))
       out.close()
     } catch {
       case e: Throwable =>
@@ -292,7 +292,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
         }.toMap
         val pos =
           if (base.nonEmpty)
-            "at_sequence:" + graft.source.ShardedStreamOffset(base).json()
+            "at_sequence:" + ShardedStreamOffset(base).json()
           else if (cfg.startFromLatest) "latest"
           else "trim_horizon"
         (s"${cfg.checkpointRoot}/${cfg.app}/manual/spark-${java.util.UUID.randomUUID()}",
@@ -436,11 +436,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     // stop() re-runs (at-least-once, as everywhere in this mode).
     refreshCarry =
       if (cfg.commit.isEmpty) Map.empty
-      else Option(q.lastProgress)
-        .flatMap(p => p.sources.headOption)
-        .flatMap(s => Option(s.endOffset))
-        .map(graft.source.ShardedStreamOffset.fromJson(_).positions)
-        .getOrElse(Map.empty)
+      else lastEndPositions(q).getOrElse(Map.empty)
     q.stop()
     awaitQuietly(q)
     stopTicker()
@@ -502,15 +498,11 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
   def lag(): Map[(String, String), Long] = active match {
     case None => Map.empty
     case Some((q, streams, _)) =>
-      val progress = Option(q.lastProgress)
       // in manual-commit mode the engine WAL lives in a fresh per-start
       // directory and does NOT define the durable resume point — the
       // app's committed marks do, so the pre-first-trigger fallback
       // reads those instead of the (absent) main WAL
-      val committed: Map[String, Map[String, Long]] = progress
-        .flatMap(p => p.sources.headOption)
-        .flatMap(s => Option(s.endOffset))
-        .map(graft.source.ShardedStreamOffset.fromJson(_).positions)
+      val committed: Map[String, Map[String, Long]] = lastEndPositions(q)
         .getOrElse {
           if (cfg.commit.nonEmpty) committedMarks()
           else try walCommittedPositions()
@@ -529,41 +521,34 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       }.toMap
   }
 
+  /** End offsets of the running query's last completed batch, per
+    * (stream, shard); None before its first trigger completes.
+    */
+  private def lastEndPositions(q: StreamingQuery): Option[Map[String, Map[String, Long]]] =
+    Option(q.lastProgress)
+      .flatMap(_.sources.headOption)
+      .flatMap(s => Option(s.endOffset))
+      .map(ShardedStreamOffset.fromJson(_).positions)
+
   /** End offsets of the latest batch in the commit log, per (stream,
     * shard); empty before the first commit. This is the durable committed
     * progress: [[drain]] counts what it moved from it, and [[lag]] reads it
     * before the first trigger of a (re)started query populates
-    * `lastProgress`. Offset-log file layout (Spark's OffsetSeqLog):
-    * version line, metadata line, then one offset JSON per source ("-"
-    * for a source with no offset); this query has exactly one source.
+    * `lastProgress`. Spark's own `CommitLog` and `OffsetSeqLog` read the
+    * files, through Hadoop paths, so URI-style checkpoint locations
+    * (file:/, hdfs://, s3a://) work too; this query has exactly one source.
     */
   private def walCommittedPositions(): Map[String, Map[String, Long]] = {
-    // Hadoop FS, not java.io.File: Spark accepts URI-style checkpoint
-    // locations (file:/, hdfs://, s3a://), and a local-path-only read
-    // here would silently miss the WAL and report the whole log as
-    // backlog after every restart
     val base = new Path(s"${cfg.checkpointRoot}/${cfg.app}/main")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val commits = new Path(base, "commits")
-    val json =
-      if (!fs.exists(commits)) None
-      else {
-        val committedIds = fs.listStatus(commits).toSeq
-          .map(_.getPath.getName)
-          .flatMap(n => scala.util.Try(n.toLong).toOption)
-        committedIds.sorted.lastOption.flatMap { id =>
-          val f = new Path(base, s"offsets/$id")
-          if (!fs.isFile(f)) None
-          else {
-            val in = fs.open(f)
-            val txt =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            txt.split("\n", -1).drop(2).find(l => l.nonEmpty && l != "-")
-          }
-        }
-      }
-    json.map(graft.source.ShardedStreamOffset.fromJson(_).positions).getOrElse(Map.empty)
+    // a metadata log's constructor creates its directory: a consumer with
+    // no checkpoint yet must leave none behind
+    if (!commits.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(commits)) Map.empty
+    else new CommitLog(spark, commits.toString).getLatestBatchId()
+      .flatMap(new OffsetSeqLog(spark, new Path(base, "offsets").toString).get(_))
+      .flatMap(_.offsets.flatten.headOption)
+      .map(o => ShardedStreamOffset.fromJson(o.json).positions)
+      .getOrElse(Map.empty)
   }
 
   /** `Close` (`kinesumer.go:846-869`): stop the query; offsets are already

@@ -170,19 +170,12 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
     options.getLong("maxrecordspershardperbatch", 2000L)
   require(maxPerShard > 0, s"option 'maxRecordsPerShardPerBatch' must be positive: $maxPerShard")
 
-  /** Parallel head-probe of a stream's shards — see
-    * [[ShardedStreamLog.maxSequences]]: offset planning stays flat in
-    * shard count.
-    */
-  private def probeHeads(stream: String, shards: Iterable[String]): Map[String, Long] =
-    ShardedStreamLog.maxSequences(root, stream, shards)
-
   override def initialOffset(): Offset = ShardedStreamOffset(
     streams.map { s =>
       val shards = ShardedStreamLog.listShards(root, s).map(_._1)
       s -> (startPosition match {
         case StartPosition.TrimHorizon => shards.map(_ -> -1L).toMap
-        case StartPosition.Latest => probeHeads(s, shards)
+        case StartPosition.Latest => ShardedStreamLog.maxSequences(root, s, shards)
         case StartPosition.AtSequence(after) =>
           val m = after.getOrElse(s, Map.empty[String, Long])
           shards.map(sh => sh -> m.getOrElse(sh, -1L)).toMap
@@ -213,7 +206,7 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
     */
   override def prepareForTriggerAvailableNow(): Unit = {
     availableNowCap = Some(streams.map { s =>
-      s -> probeHeads(s, ShardedStreamLog.listShards(root, s).map(_._1))
+      s -> ShardedStreamLog.maxSequences(root, s, ShardedStreamLog.listShards(root, s).map(_._1))
     }.toMap)
   }
 
@@ -244,7 +237,7 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
     val planned = ShardedStreamOffset(streams.map { s =>
       val known = startPos.getOrElse(s, Map.empty[String, Long])
       val discovered = ShardedStreamLog.listShards(root, s)
-      val maxSeqs = probeHeads(s, discovered.map(_._1))
+      val maxSeqs = ShardedStreamLog.maxSequences(root, s, discovered.map(_._1))
       // AvailableNow clamp: a shard may not advance past its snapshotted
       // head; a shard with no snapshot entry (created after prepare) may
       // not advance at all this run

@@ -2,23 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all specs. */
+/** One shared local session for all specs: 4 cpus on every host, so the
+  * specs' partitioning does not follow the machine.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("graft-test", cpus = 4)
 }
 
 trait SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkTestSession.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkTestSession.spark
 
   /** Runs `body` with the session conf `key` set to `value` (None: unset),
     * then restores the session's own setting.
