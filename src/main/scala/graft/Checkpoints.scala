@@ -129,13 +129,31 @@ object Checkpoints {
 
   /** Wrap a query builder so the frame it returns owns every snapshot
     * its build created: [[release]] of that exact frame frees them all.
+    * A build that registers more than [[HighWater]] snapshots logs one
+    * WARN naming `query`.
     */
-  def owning(run: (SparkSession, String) => DataFrame)
+  def owning(query: String)(run: (SparkSession, String) => DataFrame)
       : (SparkSession, String) => DataFrame = (s, d) => {
     val (df, built) = collecting(nested = true)(run(s, d))
     if (built.nonEmpty) builtBy.put(df, built)
+    if (built.size > HighWater)
+      log.warn(s"$query registered ${built.size} snapshots in one build (high-water " +
+        s"$HighWater); each stays in executor storage until its release")
     df
   }
+
+  /** The most snapshots one registered query's build registers in the
+    * whole-registry leak test (`CheckpointsSpec`, sf0.001: q156's k-core
+    * peel). A build over it is logged, not refused: iteration counts
+    * grow with the input.
+    */
+  val HighWater = 5
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.Checkpoints")
+
+  /** How many snapshots the build that returned `df` registered. */
+  private[graft] def registeredBy(df: Dataset[_]): Int =
+    Option(builtBy.get(df)).fold(0)(_.size)
 
   /** Build a shared build-once relation (a memo served to many queries)
     * under its own owner: its snapshots never join an enclosing query's

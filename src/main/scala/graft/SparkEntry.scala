@@ -40,7 +40,7 @@ object SparkEntry {
     * frame frees them all (see [[Checkpoints.owning]]).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> Checkpoints.owning(q.run)).toMap
+    all.map(q => q.name -> Checkpoints.owning(q.name)(q.run)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
@@ -58,7 +60,7 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
     // consumer plan's leaves, and not through the consumer query's own
     // snapshot set when the memo is first built inside that query
     var memo: org.apache.spark.sql.DataFrame = null
-    val consumerQuery = Checkpoints.owning { (_, _) =>
+    val consumerQuery = Checkpoints.owning("consumer") { (_, _) =>
       memo = Checkpoints.shared(Checkpoints.checkpoint(Seq(7, 8).toDF("x")))
       memo.select(org.apache.spark.sql.functions.col("x") * 2)
     }
@@ -108,10 +110,10 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
 
   test("a nested build's snapshots join the enclosing query's set") {
     import spark.implicits._
-    val inner = Checkpoints.owning { (s, _) =>
+    val inner = Checkpoints.owning("inner") { (s, _) =>
       Checkpoints.checkpointLazy(s.range(3).toDF("x")).select(($"x" + 1).as("y"))
     }
-    val outer = Checkpoints.owning { (s, d) =>
+    val outer = Checkpoints.owning("outer") { (s, d) =>
       // a later freeze hides the inner snapshot from the returned plan
       Checkpoints.checkpointLazy(inner(s, d)).select(($"y" * 2).as("z"))
     }
@@ -131,7 +133,7 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
     // both builds collect at once: each registers a snapshot, waits for
     // the other to register one, then freezes again
     val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val build = Checkpoints.owning { (s, _) =>
+    val build = Checkpoints.owning("concurrent") { (s, _) =>
       val a = Checkpoints.checkpointLazy(s.range(10).toDF("x"))
       barrier.await()
       val b = Checkpoints.checkpointLazy(a.select(($"x" + 1).as("x")))
@@ -176,9 +178,11 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
     // ids held by shared memos (LPA labels, the ANN index) are exempt
     def named[T](name: String)(body: => T): T =
       try body catch { case e: Exception => fail(s"$name failed", e) }
+    val registered = scala.collection.mutable.Map.empty[String, Int]
     val leaks = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val before = Checkpoints.ownedIds
       val df = named(name)(fn(spark, d))
+      registered(name) = Checkpoints.registeredBy(df)
       val created = Checkpoints.ownedIds -- before
       if (created.isEmpty) None
       else {
@@ -193,5 +197,37 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
     graft.ops.Graph.lpaEvict(spark, d)
     graft.llm.Similarity.annSharedEvict(spark, d)
     assert(leaks.isEmpty, s"snapshots left after release: ${leaks.mkString(", ")}")
+    // the snapshot high-water guard: no registered build goes over it
+    val over = registered.filter(_._2 > Checkpoints.HighWater)
+    assert(over.isEmpty, s"builds over the high-water ${Checkpoints.HighWater}: " +
+      over.toSeq.sortBy(-_._2).mkString(", "))
+  }
+
+  test("a build over the snapshot high-water logs one WARN naming its query") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val capture = new AbstractAppender("high-water", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft.Checkpoints").asInstanceOf[Logger]
+    logger.addAppender(capture)
+    def build(n: Int) = Checkpoints.owning(s"q_build_of_$n") { (s, _) =>
+      (1 to n).foldLeft(s.range(4).toDF("x"))((df, _) => Checkpoints.checkpointLazy(df))
+    }
+    val (atBound, over) =
+      try (build(Checkpoints.HighWater)(spark, ""), build(Checkpoints.HighWater + 1)(spark, ""))
+      finally logger.removeAppender(capture)
+    assert(Checkpoints.registeredBy(atBound) == Checkpoints.HighWater)
+    assert(Checkpoints.registeredBy(over) == Checkpoints.HighWater + 1)
+    val warned = seen.asScala.toSeq
+    assert(warned.size == 1 && warned.head.startsWith("WARN") &&
+      warned.head.contains(s"q_build_of_${Checkpoints.HighWater + 1}"), warned.toString)
+    Checkpoints.release(atBound)
+    Checkpoints.release(over)
   }
 }
