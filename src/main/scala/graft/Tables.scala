@@ -9,10 +9,13 @@ import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
-  * `events.ts` is written as parquet TIMESTAMP(NANOS) which Spark 4 refuses
-  * to read as a timestamp; we read it as raw nanos
-  * (`spark.sql.legacy.parquet.nanosAsLong`) and truncate to microseconds —
-  * exactly what DuckDB does on read, so oracle comparisons line up.
+  * `events.ts` comes in two physical types. The corpus fixtures are
+  * parquet TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+  * TIMESTAMP_NTZ and which passes through. A TIMESTAMP(NANOS) file,
+  * which Spark 4 refuses to read as a timestamp, is read as raw nanos
+  * (`spark.sql.legacy.parquet.nanosAsLong`) and truncated to microseconds —
+  * exactly what DuckDB does on read, so oracle comparisons line up — and
+  * comes back as TIMESTAMP.
   *
   * Schema cache: a bare `spark.read.parquet` infers the schema from the
   * file footers, and that inference runs one Spark job per call, even for
@@ -36,9 +39,9 @@ object Tables {
     case "events" =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = read(spark, s"$dir/events.parquet")
-      // driver fixtures carry TIMESTAMP(NANOS) (read here as raw longs);
-      // derived corpora written by Spark itself (e.g. ScaleUp's sf1) are
-      // already micros timestamps and pass through
+      // a TIMESTAMP(NANOS) file is read here as raw longs; micros files
+      // (the fixtures, and corpora Spark writes itself, e.g. ScaleUp's
+      // sf1) are already timestamps and pass through
       raw.schema("ts").dataType match {
         case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
         case _ => raw

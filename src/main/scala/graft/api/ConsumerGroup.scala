@@ -2,10 +2,12 @@ package graft.api
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.util.control.NonFatal
+
 import graft.source.{LocalCheckpointFileManager, ShardedStreamOffset}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, CommitLog, OffsetSeqLog}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CommitLog, OffsetSeq, OffsetSeqLog}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 /** Configuration parity with the reference's `kinesumer.Config`
@@ -79,12 +81,30 @@ final case class ConsumerConfig(
 
 /** The kinesumer client surface on Spark (SURVEY.md §3): `consume` is the
   * record channel, `refresh` the runtime stream swap, `close` the shutdown.
+  *
+  * Spark's offset logs are the only place a group keeps positions. Under
+  * `<checkpointRoot>/<app>/`:
+  *
+  *   - `main/` — the default mode's checkpoint, shared by [[start]],
+  *     [[refresh]] and [[drain]]: the offset WAL (`offsets/`) and the
+  *     commit log (`commits/`). Each batch records every stream the group
+  *     has consumed, so a stream dropped by a refresh or a drain keeps its
+  *     position.
+  *   - `manual/spark-<uuid>/` — manual-commit mode: the checkpoint of one
+  *     [[start]], kept across its refreshes and deleted by [[close]].
+  *   - `manual/marks/` — manual-commit mode: the committed marks, one
+  *     batch of a Spark `OffsetSeqLog` per [[commit]] (version N is file
+  *     `N`); the latest version and one older are kept.
   */
 class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
 
-  @volatile private var active: Option[(StreamingQuery, Seq[String], BatchFn)] = None
-
   type BatchFn = (DataFrame, Long) => Unit
+
+  /** The running query, its stream set, its callback and its checkpoint. */
+  private final class Running(val query: StreamingQuery, val streams: Seq[String],
+      val onBatch: BatchFn, val checkpoint: String)
+
+  @volatile private var active: Option[Running] = None
 
   // ≈ the reference's lossy 1-slot error channel (`kinesumer.go:833-844`,
   // K2 in SURVEY §2) — except nothing is dropped: failures of this app's
@@ -113,9 +133,9 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       classOf[LocalCheckpointFileManager].getName)
 
   // covers the race where the query fails before/without the listener event
-  private def harvest(): Unit = active.foreach { case (q, _, _) =>
-    q.exception.foreach { e =>
-      if (reported.add(q.runId)) errorQueue.add(e.getMessage)
+  private def harvest(): Unit = active.foreach { cur =>
+    cur.query.exception.foreach { e =>
+      if (reported.add(cur.query.runId)) errorQueue.add(e.getMessage)
     }
   }
 
@@ -133,9 +153,9 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     * record channel returned by `Consume` (`kinesumer.go:346-370`); attach
     * any sink/transformation.
     */
-  def consume(streams: Seq[String]): DataFrame =
-    consumeFrom(streams,
-      if (cfg.startFromLatest) "latest" else "trim_horizon")
+  def consume(streams: Seq[String]): DataFrame = consumeFrom(streams, startPosition)
+
+  private def startPosition = if (cfg.startFromLatest) "latest" else "trim_horizon"
 
   private def consumeFrom(streams: Seq[String], startingPosition: String): DataFrame = {
     require(streams.nonEmpty, "at least one stream")
@@ -170,7 +190,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
   def markRecord(stream: String, shardId: String, sequenceNumber: Long): Unit = {
     require(cfg.commit.nonEmpty,
       "markRecord requires the manual-commit mode (ConsumerConfig.commit)")
-    if (!active.exists(_._2.contains(stream)))
+    if (!active.exists(_.streams.contains(stream)))
       errorQueue.add(s"markRecord: not consuming stream '$stream'")
     else marks.put((stream, shardId), sequenceNumber)
   }
@@ -179,11 +199,12 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     * over the last committed positions (the reference's per-shard
     * DynamoDB updates leave unmarked shards at their old checkpoint).
     * No-op when nothing was marked since the last call — the reference's
-    * `len(checkpoints) == 0` early return. Durability: a versioned file
-    * published atomically by the checkpoint file manager (the WAL
-    * pattern), so a crash mid-commit leaves the previous commit intact; a
-    * version another writer published first fails the commit instead of
-    * being overwritten.
+    * `len(checkpoints) == 0` early return. Durability: each commit is the
+    * next batch of the mark store, a Spark offset log (the WAL's own
+    * format and atomic publish), so a crash mid-commit leaves the
+    * previous commit intact; a version another writer published since
+    * this commit read the store fails the commit instead of being
+    * overwritten.
     */
   def commit(): Unit = synchronized {
     require(cfg.commit.nonEmpty,
@@ -194,12 +215,20 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       val fresh = snapshot.groupBy(_._1._1).map { case (stream, m) =>
         stream -> m.map { case ((_, shard), seq) => shard -> seq }.toMap
       }
-      val prev = committedMarks()
+      val log = new OffsetSeqLog(spark, marksDir)
+      val version = log.getLatestBatchId()
+      val prev = positionsAt(marksDir, version)
       val merged = (prev.keySet ++ fresh.keySet).map { stream =>
         stream -> (prev.getOrElse(stream, Map.empty) ++
           fresh.getOrElse(stream, Map.empty))
       }.toMap
-      persistMarks(merged)
+      val next = version.fold(0L)(_ + 1)
+      if (!log.add(next, OffsetSeq.fill(ShardedStreamOffset(merged))))
+        throw new IllegalStateException(
+          s"commit: version $next of the mark store $marksDir was written by another committer")
+      // bounded history: the latest is the checkpoint, one older kept as
+      // the crash-window fallback
+      log.purge(next - 1)
       // remove ONLY what this commit persisted (value-conditional remove):
       // a markRecord landing between the snapshot and here — the app's
       // foreachBatch thread racing the auto-commit ticker — replaces the
@@ -211,53 +240,50 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     }
   }
 
-  private def manualDir = new Path(s"${cfg.checkpointRoot}/${cfg.app}/manual")
+  private def mainCk = s"${cfg.checkpointRoot}/${cfg.app}/main"
+  private def manualDir = s"${cfg.checkpointRoot}/${cfg.app}/manual"
+  private def marksDir = s"$manualDir/marks"
 
-  private lazy val manualFm =
-    CheckpointFileManager.create(manualDir, spark.sessionState.newHadoopConf())
-
-  private def committedVersions(): Seq[(Long, Path)] =
-    if (!manualFm.exists(manualDir)) Seq.empty
-    else manualFm.list(manualDir).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("offsets-") && n.endsWith(".json"))
-        scala.util.Try(n.stripPrefix("offsets-").stripSuffix(".json").toLong)
-          .toOption.map(_ -> st.getPath)
-      else None
-    }.sortBy(_._1)
+  private def exists(dir: String): Boolean = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** Last committed per-(stream, shard) positions; empty before the
-    * first [[commit]].
+    * first [[commit]]. A metadata log's constructor creates its
+    * directory, so this read of the mark store opens it only once it
+    * exists, and so does [[committedPositions]] for a commit log.
     */
   private[api] def committedMarks(): Map[String, Map[String, Long]] =
-    committedVersions().lastOption.map { case (_, p) =>
-      val in = manualFm.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      ShardedStreamOffset.fromJson(txt).positions
-    }.getOrElse(Map.empty)
+    positionsAt(marksDir,
+      if (exists(marksDir)) new OffsetSeqLog(spark, marksDir).getLatestBatchId() else None)
 
-  private def persistMarks(m: Map[String, Map[String, Long]]): Unit = {
-    manualFm.mkdirs(manualDir)
-    val versions = committedVersions()
-    val next = versions.lastOption.map(_._1 + 1).getOrElse(0L)
-    // no overwrite: of two writers racing for one version, the second
-    // fails here rather than replacing the first one's commit
-    val out = manualFm.createAtomic(new Path(manualDir, s"offsets-$next.json"),
-      overwriteIfPossible = false)
-    try {
-      out.write(ShardedStreamOffset(m).json().getBytes("UTF-8"))
-      out.close()
-    } catch {
-      case e: Throwable =>
-        out.cancel()
-        throw e
-    }
-    // bounded history: the latest is the checkpoint, one older kept as
-    // the crash-window fallback
-    versions.dropRight(1).foreach { case (_, p) => manualFm.delete(p) }
+  /** End positions of the latest batch in the commit log of the checkpoint
+    * at `ck`, per (stream, shard); empty before its first commit. This is
+    * the durable committed progress: [[drain]] counts what it moved from
+    * it, and [[lag]] measures from it.
+    */
+  private def committedPositions(ck: String): Map[String, Map[String, Long]] = {
+    val commits = s"$ck/commits"
+    positionsAt(s"$ck/offsets",
+      if (exists(commits)) new CommitLog(spark, commits).getLatestBatchId() else None)
   }
+
+  /** The positions that batch `batch` of the offset log at `dir` records
+    * (the query's one source); empty for no batch. Spark's own
+    * `OffsetSeqLog` reads the file through Hadoop paths, so URI-style
+    * checkpoint locations (file:/, hdfs://, s3a://) work too. A batch that
+    * cannot be read throws, naming the log.
+    */
+  private def positionsAt(dir: String, batch: Option[Long]): Map[String, Map[String, Long]] =
+    batch.fold(Map.empty[String, Map[String, Long]]) { n =>
+      try new OffsetSeqLog(spark, dir).get(n).flatMap(_.offsets.flatten.headOption)
+        .fold(Map.empty[String, Map[String, Long]])(o => ShardedStreamOffset.fromJson(o.json).positions)
+      catch {
+        case NonFatal(e) => throw new IllegalStateException(
+          s"cannot read batch $n of the offset log $dir: ${e.getMessage}", e)
+      }
+    }
 
   /** Start consuming with a per-batch callback (≈ the application loop
     * draining the record channel). Offsets are committed per batch under
@@ -278,43 +304,10 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     // Spark checkpoint and begins AFTER the last committed mark
     // (`AFTER_SEQUENCE_NUMBER`, `kinesumer.go:716-718`); everything
     // since the last Commit re-delivers — the reference's replay window.
-    val (ckLoc, src) = cfg.commit match {
-      case None =>
-        (s"${cfg.checkpointRoot}/${cfg.app}/main", consume(streams))
-      case Some(_) =>
-        val committed = committedMarks()
-        // a refresh carries the old query's processed offsets on top of
-        // the committed marks (per shard, the carry is always ≥ the
-        // committed mark — it reflects completed batches)
-        val base = (committed.keySet ++ refreshCarry.keySet).map { st =>
-          st -> (committed.getOrElse(st, Map.empty) ++
-            refreshCarry.getOrElse(st, Map.empty))
-        }.toMap
-        val pos =
-          if (base.nonEmpty)
-            "at_sequence:" + ShardedStreamOffset(base).json()
-          else if (cfg.startFromLatest) "latest"
-          else "trim_horizon"
-        (s"${cfg.checkpointRoot}/${cfg.app}/manual/spark-${java.util.UUID.randomUUID()}",
-          consumeFrom(streams, pos))
-    }
-    val q = src.writeStream
-      .queryName(s"${cfg.app}-consumer")
-      .option("checkpointLocation", ckLoc)
-      .trigger(Trigger.ProcessingTime(cfg.scanIntervalMs))
-      .foreachBatch { (df: DataFrame, batchId: Long) => onBatch(df, batchId) }
-      .start()
-    // manual mode gets a FRESH ephemeral Spark checkpoint per start (the
-    // app's committed marks are the durable state, not the engine WAL) —
-    // once the replacement query is running, the superseded directory is
-    // dead weight; without this delete a periodically-refreshing consumer
-    // accumulates spark-<UUID> dirs under checkpointRoot without bound
-    if (cfg.commit.nonEmpty) {
-      dropEphemeralCk()
-      ephemeralCk = Some(ckLoc)
-    }
-    owned.add(q.runId)
-    active = Some((q, streams, onBatch))
+    val ck =
+      if (cfg.commit.isEmpty) mainCk
+      else s"$manualDir/spark-${java.util.UUID.randomUUID()}"
+    val q = run(streams, ck, onBatch)
     // ≈ commitPeriodically (`kinesumer.go:731-744`): CommitConfig.auto
     // commits the marks on a ticker; manual (`auto = false`) leaves
     // Commit to the app
@@ -329,7 +322,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       // silently cancel every later tick
       ex.scheduleAtFixedRate(
         () => try commit() catch {
-          case scala.util.control.NonFatal(e) => errorQueue.add(s"commit: ${e.getMessage}")
+          case NonFatal(e) => errorQueue.add(s"commit: ${e.getMessage}")
         },
         cc.intervalMs, cc.intervalMs,
         java.util.concurrent.TimeUnit.MILLISECONDS)
@@ -338,12 +331,35 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     q
   }
 
+  /** Start the consuming query of `streams` on the checkpoint at `ck` and
+    * make it the active one. The start position applies only while the
+    * checkpoint holds no batch: Spark asks a source for its initial offset
+    * once per checkpoint.
+    */
+  private def run(streams: Seq[String], ck: String, onBatch: BatchFn): StreamingQuery = {
+    val committed = if (cfg.commit.isEmpty) Map.empty[String, Map[String, Long]] else committedMarks()
+    val pos =
+      if (committed.nonEmpty) "at_sequence:" + ShardedStreamOffset(committed).json()
+      else startPosition
+    val q = consumeFrom(streams, pos).writeStream
+      .queryName(s"${cfg.app}-consumer")
+      .option("checkpointLocation", ck)
+      .trigger(Trigger.ProcessingTime(cfg.scanIntervalMs))
+      .foreachBatch { (df: DataFrame, batchId: Long) => onBatch(df, batchId) }
+      .start()
+    owned.add(q.runId)
+    active = Some(new Running(q, streams, onBatch, ck))
+    q
+  }
+
   /** Backfill-then-stop: consume everything available RIGHT NOW in
     * capped batches, invoke `onBatch` per micro-batch, and return when
     * the backlog is drained — `Trigger.AvailableNow` over the SAME
     * exactly-once checkpoint namespace [[start]] uses, so a subsequent
     * `start` tails exactly after the drained records (the
-    * backfill-then-tail deployment). Records appended after the drain
+    * backfill-then-tail deployment). Streams outside `streams` keep their
+    * positions in that checkpoint, so a later drain or start that names
+    * one again resumes where it stopped. Records appended after the drain
     * begins — including shards created by a mid-drain reshard — are
     * left for the next run, with the parent→child lineage gate intact
     * (see `ShardedStreamSource.prepareForTriggerAvailableNow`). Blocks
@@ -379,11 +395,11 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     // fresh checkpoint at the live heads, drain zero records, and
     // permanently mark the backlog consumed — the opposite of this
     // method's contract). Once a checkpoint exists it wins, as always.
-    val before = walCommittedPositions()
+    val before = committedPositions(mainCk)
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     val q = consumeFrom(streams, "trim_horizon").writeStream
       .queryName(s"${cfg.app}-drain")
-      .option("checkpointLocation", s"${cfg.checkpointRoot}/${cfg.app}/main")
+      .option("checkpointLocation", mainCk)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         batches.incrementAndGet()
@@ -407,7 +423,7 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
     // each shard's (committed before, committed after] range, counted by
     // the log's index, shards in parallel like the head probes
     import scala.collection.parallel.CollectionConverters._
-    val after = walCommittedPositions()
+    val after = committedPositions(mainCk)
     val counts = streams.map { st =>
       val from = before.getOrElse(st, Map.empty[String, Long])
       st -> after.getOrElse(st, Map.empty[String, Long]).toSeq.par.map {
@@ -422,48 +438,23 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
   }
 
   /** Swap the consumed stream set at runtime — `Refresh`
-    * (`kinesumer.go:817-831`): pause-the-world, swap, restart. The shared
-    * checkpoint namespace preserves per-stream offsets across the swap.
+    * (`kinesumer.go:817-831`): pause-the-world, swap, restart on the SAME
+    * checkpoint, in both commit modes. The offset log keeps every stream's
+    * position: a stream in both sets goes on where it was, a dropped
+    * stream keeps its position, and a stream added back resumes there. A
+    * stream the checkpoint has never held reads from its shards' origin.
+    * In manual-commit mode a refresh therefore does not rewind, as the
+    * reference's Refresh keeps its in-memory shard iterators (only a
+    * PROCESS restart replays since the last commit); a stream whose
+    * committed marks were in the store when [[start]] ran resumes after
+    * its mark. A batch in flight at the swap re-runs (at-least-once, the
+    * foreachBatch contract). The auto-commit ticker keeps running.
     */
   def refresh(streams: Seq[String]): StreamingQuery = synchronized {
-    val (q, _, onBatch) = active.getOrElse(
-      throw new IllegalStateException("consumer not started"))
-    // Manual-commit mode: the reference's Refresh keeps its in-memory
-    // shard iterators, so a stream-set swap does NOT rewind consumption
-    // (`kinesumer.go:817-831` — only a PROCESS restart replays since the
-    // last commit). Capture the running query's last completed end
-    // offsets and carry them into the restart; a batch in flight at
-    // stop() re-runs (at-least-once, as everywhere in this mode).
-    refreshCarry =
-      if (cfg.commit.isEmpty) Map.empty
-      else lastEndPositions(q).getOrElse(Map.empty)
-    q.stop()
-    awaitQuietly(q)
-    stopTicker()
-    active = None
-    try start(streams)(onBatch)
-    finally refreshCarry = Map.empty
-  }
-
-  /** Within-process processed offsets carried across a manual-mode
-    * [[refresh]] (set only for the duration of the restart).
-    */
-  private var refreshCarry: Map[String, Map[String, Long]] = Map.empty
-
-  /** The manual-mode ephemeral Spark checkpoint dir of the CURRENT query;
-    * deleted when superseded by a refresh's replacement query or on close
-    * (it is never resumed — each start mints a fresh one).
-    */
-  private var ephemeralCk: Option[String] = None
-
-  private def dropEphemeralCk(): Unit = {
-    ephemeralCk.foreach { loc =>
-      try {
-        val p = new Path(loc)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      } catch { case scala.util.control.NonFatal(_) => () } // best-effort GC
-    }
-    ephemeralCk = None
+    val cur = active.getOrElse(throw new IllegalStateException("consumer not started"))
+    cur.query.stop()
+    awaitQuietly(cur.query)
+    run(streams, cur.checkpoint, cur.onBatch)
   }
 
   private def stopTicker(): Unit = {
@@ -474,42 +465,29 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
   /** Block until all currently-available records are processed (test aid —
     * the reference's tests poll with timeouts instead).
     */
-  def processAllAvailable(): Unit = active.foreach(_._1.processAllAvailable())
+  def processAllAvailable(): Unit = active.foreach(_.query.processAllAvailable())
 
   /** Consumer lag per (stream, shard): the number of records after the
     * last COMMITTED batch's end offset — the monitoring metric the
     * reference left as an open TODO (`kinesumer.go:128`; Kinesis exposes
-    * the analogous MillisBehindLatest). Reads the running query's
-    * committed end offset (the offset-WAL JSON surfaced through
-    * `lastProgress`) and counts the records above it from the log's
-    * incremental index (`ShardedStreamLog.countRange`) — O(new bytes plus
-    * one index interval), driver-side only. Sequences need not be dense,
-    * so this is a record count, not a sequence distance; shards never
-    * read yet report every record. Committed-but-empty logs and a
-    * not-yet-started consumer report 0 / an empty map respectively.
-    *
-    * `lastProgress` is null until the running query's FIRST trigger
-    * completes — in particular right after `start()`/`refresh()` on an
-    * existing checkpoint — so the committed end offset falls back to the
-    * offset WAL on disk (latest batch present in the commit log); without
-    * the fallback a freshly restarted, fully caught-up consumer would
-    * report the entire log as backlog.
+    * the analogous MillisBehindLatest). Reads the committed end offset
+    * from the running query's offset log on disk and counts the records
+    * above it from the log's incremental index
+    * (`ShardedStreamLog.countRange`) — O(new bytes plus one index
+    * interval), driver-side only. Sequences need not be dense, so this is
+    * a record count, not a sequence distance; shards never read yet
+    * report every record, and a not-yet-started consumer reports an empty
+    * map. Before the query's first commit a manual-mode consumer measures
+    * from the app's committed marks, where it resumes. An offset log that
+    * cannot be read throws, naming it: it is not reported as backlog.
     */
   def lag(): Map[(String, String), Long] = active match {
     case None => Map.empty
-    case Some((q, streams, _)) =>
-      // in manual-commit mode the engine WAL lives in a fresh per-start
-      // directory and does NOT define the durable resume point — the
-      // app's committed marks do, so the pre-first-trigger fallback
-      // reads those instead of the (absent) main WAL
-      val committed: Map[String, Map[String, Long]] = lastEndPositions(q)
-        .getOrElse {
-          if (cfg.commit.nonEmpty) committedMarks()
-          else try walCommittedPositions()
-          catch { case scala.util.control.NonFatal(_) => Map.empty }
-        }
+    case Some(cur) =>
+      val wal = committedPositions(cur.checkpoint)
+      val committed = if (wal.isEmpty && cfg.commit.nonEmpty) committedMarks() else wal
       import scala.collection.parallel.CollectionConverters._
-      streams.flatMap { stream =>
+      cur.streams.flatMap { stream =>
         val shards = graft.source.ShardedStreamLog.listShards(cfg.logRoot, stream).keys
         val done = committed.getOrElse(stream, Map.empty)
         // parallel per-shard count: a sequential loop would make this
@@ -521,47 +499,23 @@ class ConsumerGroup(spark: SparkSession, cfg: ConsumerConfig) {
       }.toMap
   }
 
-  /** End offsets of the running query's last completed batch, per
-    * (stream, shard); None before its first trigger completes.
-    */
-  private def lastEndPositions(q: StreamingQuery): Option[Map[String, Map[String, Long]]] =
-    Option(q.lastProgress)
-      .flatMap(_.sources.headOption)
-      .flatMap(s => Option(s.endOffset))
-      .map(ShardedStreamOffset.fromJson(_).positions)
-
-  /** End offsets of the latest batch in the commit log, per (stream,
-    * shard); empty before the first commit. This is the durable committed
-    * progress: [[drain]] counts what it moved from it, and [[lag]] reads it
-    * before the first trigger of a (re)started query populates
-    * `lastProgress`. Spark's own `CommitLog` and `OffsetSeqLog` read the
-    * files, through Hadoop paths, so URI-style checkpoint locations
-    * (file:/, hdfs://, s3a://) work too; this query has exactly one source.
-    */
-  private def walCommittedPositions(): Map[String, Map[String, Long]] = {
-    val base = new Path(s"${cfg.checkpointRoot}/${cfg.app}/main")
-    val commits = new Path(base, "commits")
-    // a metadata log's constructor creates its directory: a consumer with
-    // no checkpoint yet must leave none behind
-    if (!commits.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(commits)) Map.empty
-    else new CommitLog(spark, commits.toString).getLatestBatchId()
-      .flatMap(new OffsetSeqLog(spark, new Path(base, "offsets").toString).get(_))
-      .flatMap(_.offsets.flatten.headOption)
-      .map(o => ShardedStreamOffset.fromJson(o.json).positions)
-      .getOrElse(Map.empty)
-  }
-
   /** `Close` (`kinesumer.go:846-869`): stop the query; offsets are already
     * durable, so shutdown needs no drain/sleep dance.
     */
   def close(): Unit = synchronized {
-    active.foreach { case (q, _, _) => q.stop(); awaitQuietly(q) }
+    active.foreach { cur => cur.query.stop(); awaitQuietly(cur.query) }
     harvest()
     stopTicker()
     // ≈ the reference's Close waiting out the last sync job
     // (`kinesumer.go:866-867`): marks made before shutdown are committed
     if (cfg.commit.nonEmpty && !marks.isEmpty) commit()
-    dropEphemeralCk() // the stopped query's checkpoint is never resumed
+    // a manual-mode checkpoint is never resumed (each start makes a fresh
+    // one), so it goes with its query
+    if (cfg.commit.nonEmpty) active.foreach { cur =>
+      val p = new Path(cur.checkpoint)
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      catch { case NonFatal(_) => () } // best-effort GC
+    }
     active = None
     spark.streams.removeListener(listener)
   }

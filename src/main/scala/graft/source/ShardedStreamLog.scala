@@ -81,9 +81,6 @@ object ShardedStreamLog {
       StandardOpenOption.CREATE)
   }
 
-  def isClosed(root: String, stream: String, shard: String): Boolean =
-    Files.exists(shardDir(root, stream, shard).resolve("_CLOSED"))
-
   // -------------------------------------------------------------------
   // Shard lineage. Kinesis shards carry ParentShardId/AdjacentParentShardId
   // set at creation and immutable for the shard's lifetime; a consumer

@@ -133,11 +133,9 @@ private[source] object StartPosition {
     val lower = v.toLowerCase(java.util.Locale.ROOT)
     if (lower == "trim_horizon") TrimHorizon
     else if (lower == "latest") Latest
-    else if (lower.startsWith("at_sequence:")) {
-      implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
-      AtSequence(org.json4s.jackson.Serialization
-        .read[Map[String, Map[String, Long]]](v.substring("at_sequence:".length)))
-    } else if (lower.startsWith("at_timestamp:")) {
+    else if (lower.startsWith("at_sequence:"))
+      AtSequence(ShardedStreamOffset.fromJson(v.substring("at_sequence:".length)).positions)
+    else if (lower.startsWith("at_timestamp:")) {
       val ts = v.substring("at_timestamp:".length).trim
       val ms =
         if (ts.nonEmpty && ts.forall(_.isDigit)) ts.toLong
@@ -170,19 +168,26 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
     options.getLong("maxrecordspershardperbatch", 2000L)
   require(maxPerShard > 0, s"option 'maxRecordsPerShardPerBatch' must be positive: $maxPerShard")
 
-  override def initialOffset(): Offset = ShardedStreamOffset(
-    streams.map { s =>
+  override def initialOffset(): Offset = {
+    // an at_sequence map keeps the streams outside this query's set too,
+    // so a later refresh that adds one resumes at its position
+    val after = startPosition match {
+      case StartPosition.AtSequence(m) => m
+      case _ => Map.empty[String, Map[String, Long]]
+    }
+    ShardedStreamOffset(after ++ streams.map { s =>
       val shards = ShardedStreamLog.listShards(root, s).map(_._1)
       s -> (startPosition match {
         case StartPosition.TrimHorizon => shards.map(_ -> -1L).toMap
         case StartPosition.Latest => ShardedStreamLog.maxSequences(root, s, shards)
-        case StartPosition.AtSequence(after) =>
+        case StartPosition.AtSequence(_) =>
           val m = after.getOrElse(s, Map.empty[String, Long])
           shards.map(sh => sh -> m.getOrElse(sh, -1L)).toMap
         case StartPosition.AtTimestamp(ms) =>
           ShardedStreamLog.seqsBeforeTimestamp(root, s, shards.toSeq, ms)
       })
-    }.toMap)
+    })
+  }
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
@@ -234,7 +239,10 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[ShardedStreamOffset].positions
-    val planned = ShardedStreamOffset(streams.map { s =>
+    // streams outside this query's set keep their positions unchanged: the
+    // offset log is the one record of a stream dropped by a refresh or a
+    // drain, and a query that adds it back resumes there
+    val planned = ShardedStreamOffset(startPos ++ streams.map { s =>
       val known = startPos.getOrElse(s, Map.empty[String, Long])
       val discovered = ShardedStreamLog.listShards(root, s)
       val maxSeqs = ShardedStreamLog.maxSequences(root, s, discovered.map(_._1))
@@ -278,7 +286,7 @@ class ShardedStreamMicroBatch(options: CaseInsensitiveStringMap)
       }.toMap
       // shards that vanished from disk keep their checkpoint entry
       s -> (known ++ next)
-    }.toMap)
+    })
     lastPlanned = Some(planned)
     planned
   }

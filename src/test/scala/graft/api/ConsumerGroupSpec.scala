@@ -6,6 +6,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import graft.SparkTestSession
 import graft.source.{LocalCheckpointFileManager, ShardedStreamLog}
 import graft.source.ShardedStreamLog.LogRecord
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -205,6 +206,73 @@ class ConsumerGroupSpec extends AnyFunSuite with SparkTestSession {
     val byStream = seen.asScala.toSeq.groupBy(_._1)
     assert(byStream("s1").map(_._2).sorted == (0L to 2L))
     assert(byStream("s2").map(_._2).sorted == (100L to 102L))
+  }
+
+  private def collectInto(seen: ConcurrentLinkedQueue[(String, Long)]): (DataFrame, Long) => Unit =
+    (df, _) => df.select("stream", "sequence_number").collect()
+      .foreach(r => seen.add((r.getString(0), r.getString(1).toLong)))
+
+  private def byStream(seen: ConcurrentLinkedQueue[(String, Long)]): Map[String, Seq[Long]] =
+    seen.asScala.toSeq.groupBy(_._1).map { case (st, rs) => st -> rs.map(_._2).sorted }
+
+  test("a stream dropped by refresh and added back resumes at its position (s1, s2, then s1 and s2)") {
+    val (root, ck) = newEnv()
+    ShardedStreamLog.append(root, "s1", "shard-0", (0L to 2L).map(rec))
+    ShardedStreamLog.append(root, "s2", "shard-0", (100L to 102L).map(rec))
+    val seen = new ConcurrentLinkedQueue[(String, Long)]()
+    val cg = new ConsumerGroup(spark,
+      ConsumerConfig(app = "readd-refresh", logRoot = root, checkpointRoot = ck))
+    try {
+      cg.start(Seq("s1"))(collectInto(seen))
+      cg.processAllAvailable()
+      cg.refresh(Seq("s2"))
+      cg.processAllAvailable()
+      // s1 grows while it is out of the set
+      ShardedStreamLog.append(root, "s1", "shard-0", (3L to 4L).map(rec))
+      cg.refresh(Seq("s1", "s2"))
+      cg.processAllAvailable()
+    } finally cg.close()
+    val got = byStream(seen)
+    assert(got("s1") == (0L to 4L), s"s1 must be delivered exactly once: ${got("s1")}")
+    assert(got("s2") == (100L to 102L), s"s2: ${got("s2")}")
+  }
+
+  test("a stream left out of a drain keeps its position (drain s1, s2, then s1)") {
+    val (root, ck) = newEnv()
+    ShardedStreamLog.append(root, "s1", "shard-0", (0L to 2L).map(rec))
+    ShardedStreamLog.append(root, "s2", "shard-0", (100L to 102L).map(rec))
+    val seen = new ConcurrentLinkedQueue[(String, Long)]()
+    val cg = new ConsumerGroup(spark,
+      ConsumerConfig(app = "readd-drain", logRoot = root, checkpointRoot = ck))
+    try {
+      assert(cg.drain(Seq("s1"))(collectInto(seen)).records == Map("s1" -> 3L))
+      assert(cg.drain(Seq("s2"))(collectInto(seen)).records == Map("s2" -> 3L))
+      ShardedStreamLog.append(root, "s1", "shard-0", (3L to 4L).map(rec))
+      val p3 = cg.drain(Seq("s1"))(collectInto(seen))
+      assert(p3.records == Map("s1" -> 2L), s"the third drain moves s1's new tail only: $p3")
+    } finally cg.close()
+    val got = byStream(seen)
+    assert(got("s1") == (0L to 4L), s"s1 must be delivered exactly once: ${got("s1")}")
+    assert(got("s2") == (100L to 102L), s"s2: ${got("s2")}")
+  }
+
+  test("lag() throws, naming the checkpoint, when the offset WAL cannot be read") {
+    val (root, ck) = newEnv()
+    ShardedStreamLog.append(root, "events", "shard-0", (0L to 4L).map(rec))
+    val cg = new ConsumerGroup(spark,
+      ConsumerConfig(app = "lag-corrupt", logRoot = root, checkpointRoot = ck))
+    try {
+      cg.start(Seq("events")) { (df, _) => df.count(); () }
+      cg.processAllAvailable()
+      assert(cg.lag() == Map(("events", "shard-0") -> 0L))
+      // the latest committed batch's offsets file, next to its commit
+      val main = s"$ck/lag-corrupt/main"
+      val last = new java.io.File(s"$main/commits").list()
+        .flatMap(n => scala.util.Try(n.toLong).toOption).max
+      Files.write(java.nio.file.Paths.get(s"$main/offsets/$last"), "not a wal entry".getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](cg.lag())
+      assert(e.getMessage.contains(s"$main/offsets"), e.getMessage)
+    } finally cg.close()
   }
 
   test("start twice without refresh fails; refresh before start fails") {

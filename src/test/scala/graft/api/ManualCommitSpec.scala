@@ -100,9 +100,15 @@ class ManualCommitSpec extends AnyFunSuite with SparkTestSession {
     // (the reference's per-shard DynamoDB updates never clear siblings)
     cg.markRecord("events", "shard-1", 103L)
     cg.commit()
+    cg.markRecord("events", "shard-0", 3L)
+    cg.commit()
     cg.close()
     assert(cg.committedMarks() ==
       Map("events" -> Map("shard-0" -> 3L, "shard-1" -> 103L)))
+    // the mark store keeps the latest version and one older
+    val versions = new java.io.File(s"$ck/mc3/manual/marks").list().toSeq
+      .flatMap(n => scala.util.Try(n.toLong).toOption).sorted
+    assert(versions == Seq(1L, 2L), s"versions after three commits: $versions")
   }
 
   test("commit with nothing marked is a no-op (len(checkpoints)==0 parity)") {
@@ -206,6 +212,38 @@ class ManualCommitSpec extends AnyFunSuite with SparkTestSession {
     cg.close()
     assert(seen.asScala.toSeq.sorted == (0L to 6L),
       s"refresh must neither replay nor lose records: ${seen.asScala.toSeq.sorted}")
+  }
+
+  test("a refresh that adds a stream holding a committed mark resumes after that mark") {
+    val (root, ck) = newEnv()
+    ShardedStreamLog.append(root, "events", "shard-0", (0L to 4L).map(rec))
+    ShardedStreamLog.append(root, "clicks", "shard-0", (100L to 104L).map(rec))
+    val cfg = ConsumerConfig(app = "mc10", logRoot = root, checkpointRoot = ck,
+      commit = Some(CommitConfig(auto = false)))
+    // a first run consumes both streams and commits a mark on each
+    val cg1 = new ConsumerGroup(spark, cfg)
+    cg1.start(Seq("events", "clicks")) { (_, _) => () }
+    cg1.processAllAvailable()
+    cg1.markRecord("events", "shard-0", 4L)
+    cg1.markRecord("clicks", "shard-0", 101L)
+    cg1.commit()
+    cg1.close()
+    // the next run starts on events alone, then a refresh adds clicks
+    val seen = new ConcurrentLinkedQueue[(String, Long)]()
+    val cg2 = new ConsumerGroup(spark, cfg)
+    cg2.start(Seq("events")) { (df, _) =>
+      df.select("stream", "sequence_number").collect()
+        .foreach(r => seen.add((r.getString(0), r.getString(1).toLong)))
+    }
+    cg2.processAllAvailable()
+    cg2.refresh(Seq("events", "clicks"))
+    cg2.processAllAvailable()
+    cg2.close()
+    assert(seen.asScala.toSeq.sorted == (102L to 104L).map(("clicks", _)),
+      s"clicks must resume after its committed mark (101): ${seen.asScala.toSeq.sorted}")
+    // the refresh made no checkpoint of its own, and close dropped the
+    // start's: only the mark store is left
+    assert(new java.io.File(s"$ck/mc10/manual").list().toSeq == Seq("marks"))
   }
 
   test("manual-commit APIs require the opt-in mode") {
